@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, QueryEngine}
+import graft.index.{IndexBuilder, QueryEngine, SearchRequest}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +18,8 @@ object SparkEntry {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val corpus = CorpusGen.dataset(spark, 1500L, 42L, 8)
     IndexBuilder.build(spark, corpus, root, numShards = 8)
-    new QueryEngine(spark, root).search("buildPostingList mergeSortedRuns", 10)
+    new QueryEngine(spark, root)
+      .search(SearchRequest("buildPostingList mergeSortedRuns", 10))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

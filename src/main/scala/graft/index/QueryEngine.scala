@@ -2,14 +2,14 @@ package graft.index
 
 import graft.analyze.CodeAnalyzer
 import graft.table.IcebergLite
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
  * Read path: BM25 top-k over the committed index — the engine-side
  * replacement for the ES `_search` ranking the reference relies on
- * (analyzed fields /root/reference/sentiment.py:782-793; dashboard reads
- * /root/reference/export.json).
+ * (analyzed fields in the reference's sentiment.py:782-793; dashboard
+ * reads its export.json).
  *
  * Plan shape (scale-first):
  *   dict lookup (parquet filtered on term => row-group pruned, tiny)
@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
  * wins below ~0.5M postings) — the distributed per-shard path is the
  * 10^12-doc route and already wins at 1M docs (measured p95 0.30s vs
  * 5.7s driver-side). Selection is automatic from the dictionary's df
- * totals.
+ * totals, in one place: the per-shard executor (point lookups have their
+ * own, on the pruned scan's volume).
  */
 object QueryEngine {
   /** The ONE place per-term cursors are built from posting rows (driver
@@ -92,30 +93,167 @@ object QueryEngine {
     (cur, preSets, negCur, negPh, negNear)
   }
 
-  /** One shard's (predIdx, docId) gate rows -> per-predicate SORTED
-    * docId arrays (the allowedCursor input). Static: runs inside
-    * cogrouped closures. */
+  /** One shard's (gate index, docId) rows -> per-gate SORTED docId
+    * arrays (the allowedCursor input). Static: runs inside cogrouped
+    * closures. */
   private[index] def sortGates(ts: Array[(Int, Long)]): Map[Int, Array[Long]] =
     ts.groupBy(_._1).map { case (i, ps) =>
       val arr = ps.map(_._2)
       java.util.Arrays.sort(arr)
       i -> arr
     }
+
+  /** The required cursors a gated walk joins in one shard: none when
+    * ungated; the gate's allowed set as one cursor (gates filter, never
+    * score); None when the gate allows no doc in this shard (the walk
+    * is dead here). */
+  private[index] def required(gate: Option[Int], gates: Map[Int, Array[Long]])
+      : Option[Seq[DocCursor]] = gate match {
+    case None => Some(Nil)
+    case Some(i) => gates.get(i).map(arr => Seq(WandScorer.allowedCursor(arr)))
+  }
+
+  /** Each live group's leapfrog over one shard's rows, docIds ascending
+    * with the group's summed BM25; a group whose gate allows nothing in
+    * this shard is dead here. */
+  private[index] def groupMatches(groups: Seq[PreparedGroup],
+      rs: Seq[PostingRowPos], gates: Map[Int, Array[Long]], bm: Bm25,
+      dfs: Map[String, Long]): Seq[Iterator[ScoredDoc]] =
+    groups.flatMap { group =>
+      required(group.gate, gates).map { req =>
+        val (cur, preSets, negCur, negPh, negNear) =
+          groupCursorSets(group, rs, bm, dfs)
+        WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
+          negCur, negPh, group.nearSpans, negNear, req)
+      }
+    }
+
+  /** One shard's boolean top-k. Memory-bounded EXACT scoring: each
+    * AND-group keeps only its own TopK(k) while streaming its
+    * intersection (never the full match set — two hot terms AND-ed would
+    * otherwise accumulate O(matches) entries). Exactness: a doc's final
+    * score is max over groups of the group sum; if the doc is in the
+    * global top-k, then in its best-scoring group fewer than k docs beat
+    * it (any group-mate with a higher group score has a final score at
+    * least that high), so the doc survives that group's TopK(k) and the
+    * merge sees its true max. Merge state is O(groups * k). */
+  private[index] def bestOfGroups(groups: Seq[Iterator[ScoredDoc]],
+                                  k: Int): Iterator[ScoredDoc] = {
+    val best = scala.collection.mutable.HashMap.empty[Long, Double]
+    groups.foreach { it =>
+      val groupTop = new ScoredDoc.TopK(k)
+      it.foreach(groupTop.offer)
+      groupTop.result().foreach { sd =>
+        val prev = best.get(sd.docId)
+        if (prev.isEmpty || sd.score > prev.get) best(sd.docId) = sd.score
+      }
+    }
+    val top = new ScoredDoc.TopK(k)
+    best.toSeq.sortBy(_._1).foreach { case (id, s) => top.offer(ScoredDoc(id, s)) }
+    top.result().iterator
+  }
+
+  /** One shard's match set: per-group ASCENDING emission + O(groups)-state
+    * min-merge dedup — each group's leapfrog yields docIds in order, so
+    * deduping across OR-groups only needs every iterator's HEAD; executor
+    * memory is O(groups), never the O(shard-matches) hash set a dense
+    * multi-group match would accumulate. */
+  private[index] def unionAscending(groups: Seq[Iterator[ScoredDoc]])
+      : Iterator[Long] = {
+    val its = groups.map(_.map(_.docId).buffered).toArray
+    new Iterator[Long] {
+      def hasNext: Boolean = its.exists(_.hasNext)
+      def next(): Long = {
+        var m = Long.MaxValue
+        var i = 0
+        while (i < its.length) {
+          val it = its(i)
+          if (it.hasNext && it.head < m) m = it.head
+          i += 1
+        }
+        i = 0
+        while (i < its.length) {
+          val it = its(i)
+          while (it.hasNext && it.head == m) it.next()
+          i += 1
+        }
+        m
+      }
+    }
+  }
 }
 
 /** One OR-group with its filter-context expansions RESOLVED against the
   * dictionary: each required union (a `prefix*` or `stem~n`) as a
   * concrete term set, all prohibitions (negated terms + negated
-  * prefix/fuzzy expansions) folded into one exclusion set. What the
-  * distributed scoring closures ship — never the engine itself. */
+  * prefix/fuzzy expansions) folded into one exclusion set, and the index
+  * of its field gate among the walk's gates. What the distributed
+  * scoring closures ship — never the engine itself. */
 final case class PreparedGroup(terms: Seq[String], phrases: Seq[Seq[String]],
                                reqSets: Seq[Set[String]],
                                exclTerms: Set[String],
                                negPhrases: Seq[Seq[String]],
                                nearSpans: Seq[(Seq[String], Int)] = Nil,
                                negNearSpans: Seq[(Seq[String], Int)] = Nil,
-                               metaPredicate: Option[String] = None)
+                               gate: Option[Int] = None)
   extends Serializable
+
+/** One search, the body of an ES `_search` call.
+  *
+  * Scored mode (the ES `match` query) is a disjunctive BM25 top-k:
+  * `word*` words expand to their ranked, capped dictionary terms in
+  * place (each scored like any term — the Lucene top-terms rewrite),
+  * `word~n` likewise, and `word^2.5` multiplies the word's contributions
+  * (the boost pre-multiplies the cursor idf, so WAND bounds scale with
+  * the scores). Three WAND-evaluation gates compose freely on it:
+  *  - `gate`, a boolean Column over docmeta (the ES filter context):
+  *    candidates outside it are leapfrogged WITHOUT scoring, and scoring
+  *    statistics stay GLOBAL, so a doc's score is identical with or
+  *    without the gate;
+  *  - `after`, the search_after cursor: only docs STRICTLY after
+  *    (score, docId) in the global (score desc, docId asc) order heap,
+  *    so per-shard state stays O(k) at any page depth and, scores being
+  *    bit-stable across pages, the cursor is exact;
+  *  - `minMatch` (minimum_should_match): only docs containing at least
+  *    that many DISTINCT resolved query terms compete; a query term
+  *    absent from the dictionary is a clause that never matches, so
+  *    minMatch > the present-term count yields no hits (the ES rule).
+  *
+  * Boolean mode ("spaces are ANDs commas are ORs", quoted phrases,
+  * prefixes and fuzzies filter, `-` prohibits; doc score = max over
+  * matching AND-groups of the group's summed BM25) gates each OR-group
+  * through the field atoms in its own query text, and takes none of the
+  * three. */
+final case class SearchRequest(query: String, k: Int,
+                               boolMode: Boolean = false,
+                               gate: Option[Column] = None,
+                               after: Option[(Double, Long)] = None,
+                               minMatch: Int = 1) {
+  require(!boolMode || (gate.isEmpty && after.isEmpty && minMatch == 1),
+    "a boolean request takes no gate, search_after cursor or minMatch — " +
+      "field atoms in its query gate each OR-group")
+}
+
+object SearchRequest {
+  /** The full `query_string` SCORED surface: field and range atoms
+    * (`lang:en`, `id:[100 TO 400]`, `-repo:web` — the Kibana filter-bar
+    * syntax every reference panel pairs with its query) compile to the
+    * docmeta gate, ANDed after an explicit `filter`; the residual scores
+    * like any scored query. */
+  def queryString(query: String, k: Int, filter: Option[Column] = None,
+                  after: Option[(Double, Long)] = None): SearchRequest = {
+    val (residual, fields) = QueryParser.splitFieldFilters(query)
+    // same loud contract as the boolean parser's anchor rule: a
+    // field-only query has nothing to RANK (every gate-passing doc
+    // would score 0.0) — metadata-only selection is a SQL predicate
+    require(residual.trim.nonEmpty || fields.isEmpty,
+      s"field-only scored query '$query' has no text to rank — add a " +
+        "query term, or select on metadata with a plain SQL predicate")
+    SearchRequest(residual, k,
+      gate = (filter.toSeq ++ fields.map(_.predicate)).reduceOption(_ && _),
+      after = after)
+  }
+}
 
 final class QueryEngine(spark: SparkSession, val root: String,
                         driverPathMaxPostings: Long = 500000L) extends Serializable {
@@ -123,12 +261,6 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger(classOf[QueryEngine])
-
-  /** Overflow-safe int cast of the driver-path gate's limit (a threshold
-    * configured near Long.MaxValue must clamp, not wrap negative). */
-  private def gateLimit: Int =
-    if (driverPathMaxPostings >= Int.MaxValue) Int.MaxValue
-    else (driverPathMaxPostings + 1).toInt
 
   private val tbl = new IcebergLite(root)
   val manifest = tbl.currentManifest()
@@ -241,191 +373,109 @@ final class QueryEngine(spark: SparkSession, val root: String,
     (QueryParser.rankExpansions(all.toSeq, cap), all.size.toLong)
   }
 
-  /** Disjunctive BM25 top-k; returns (docId, score) best-first. `word*`
-    * words expand to their ranked, capped dictionary terms in place
-    * (each scored like any term — the Lucene top-terms rewrite);
-    * `word~n` likewise; `word^2.5` multiplies the word's contributions
-    * (boost pre-multiplies the cursor idf, so WAND bounds scale with
-    * the scores). */
-  def topK(query: String, k: Int): Seq[ScoredDoc] =
-    scoredTopK(query, k, None)
+  /** Disjunctive BM25 top-k; (docId, score) best-first. */
+  def topK(query: String, k: Int): Seq[ScoredDoc] = run(SearchRequest(query, k))
 
-  /** Deep pagination (the ES search_after primitive): the top-k docs
-    * STRICTLY AFTER `(afterScore, afterDocId)` in the global
-    * (score desc, docId asc) order — the previous page's last hit is
-    * the cursor. Unlike from+size, per-shard state stays O(k) at any
-    * page depth: each shard runs the same WAND walk and just refuses to
-    * heap docs at-or-before the cursor, so page 1000 costs what page 1
-    * costs. Scores are bit-stable across pages (same fixed-order sums),
-    * so the cursor is exact, never approximate. */
-  def topKAfter(query: String, k: Int, afterScore: Double,
-                afterDocId: Long): Seq[ScoredDoc] =
-    scoredTopK(query, k, Some((afterScore, afterDocId)))
+  /** Boolean keyword top-k ("spaces are ANDs commas are ORs"). */
+  def booleanTopK(query: String, k: Int): Seq[ScoredDoc] =
+    run(SearchRequest(query, k, boolMode = true))
 
-  /** minimum_should_match (the ES match-query option): only docs
-    * containing at least `minMatch` DISTINCT resolved query terms
-    * compete; scores stay the plain sum over matching terms. The gate
-    * only removes candidates, so WAND bounds stay valid unchanged.
-    * `minMatch` counts against the resolved clause list — a query term
-    * absent from the dictionary is a clause that can never match, so
-    * minMatch > the present-term count yields no hits (the ES rule). */
-  def topKMin(query: String, k: Int, minMatch: Int): Seq[ScoredDoc] =
-    scoredTopK(query, k, None, minMatch)
-
-  /** The full `query_string` SCORED surface: field and range atoms
-    * (`lang:en`, `id:[100 TO 400]`, `-repo:web` — the Kibana filter-bar
-    * syntax every reference panel pairs with its query,
-    * /root/reference/export.json:40,77,82,91) compile to a docmeta gate
-    * and ride topKFiltered's cogrouped filter path; the residual scores
-    * exactly like topK (wildcards / fuzzies / boosts all apply). Scores
-    * are IDENTICAL with or without the gate (filter context — global
-    * statistics), so adding a filter never re-ranks surviving docs. */
-  def topKQS(query: String, k: Int): Seq[ScoredDoc] = {
-    val (residual, fields) = QueryParser.splitFieldFilters(query)
-    // same loud contract as the boolean parser's anchor rule: a
-    // field-only query has nothing to RANK (every gate-passing doc
-    // would score 0.0) — metadata-only selection is a SQL predicate
-    require(residual.trim.nonEmpty || fields.isEmpty,
-      s"field-only scored query '$query' has no text to rank — add a " +
-        "query term, or select on metadata with a plain SQL predicate")
-    if (fields.isEmpty) topK(residual, k)
-    else topKFiltered(residual, k, QueryParser.compileFields(fields))
+  /** Run one search request: its top-k (docId, score) best-first, ties
+    * by docId ascending. */
+  def run(req: SearchRequest): Seq[ScoredDoc] = {
+    val k = req.k
+    val shards =
+      if (req.boolMode) booleanWalk(req.query)(QueryEngine.bestOfGroups(_, k))
+      else scoredWalk(req)
+    shards.fold(Seq.empty[ScoredDoc])(_.fold(identity, _.collect().toSeq))
+      .sorted(ScoredDoc.betterOrdering).take(k)
   }
 
-  /** Deep pagination over the query-string surface: field gates AND the
-    * search_after cursor compose (both are WAND-evaluation gates), so
-    * "the next page of filtered results" — the Kibana pattern: filter
-    * bar + scroll — costs one more query with O(k) per-shard state. */
-  def topKQSAfter(query: String, k: Int, afterScore: Double,
-                  afterDocId: Long): Seq[ScoredDoc] = {
-    val (residual, fields) = QueryParser.splitFieldFilters(query)
-    require(residual.trim.nonEmpty || fields.isEmpty,
-      s"field-only scored query '$query' has no text to rank")
-    if (fields.isEmpty) topKAfter(residual, k, afterScore, afterDocId)
-    else topKFiltered(residual, k, QueryParser.compileFields(fields),
-      after = Some((afterScore, afterDocId)))
+  /** run(req) joined with document metadata, display-ordered. */
+  def search(req: SearchRequest): DataFrame = {
+    val hits = run(req)
+    if (hits.isEmpty) // zero hits: empty DF with the REAL output schema,
+      return docmeta.withColumn("score", lit(0.0)).where(lit(false))
+    val ids = hits.map(_.docId)
+    val meta = docmeta.where(col("docId").isin(ids: _*)) // IN-pushdown, k rows
+    meta.join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
+      .orderBy(desc("score"), asc("docId"))
   }
 
-  private def scoredTopK(query: String, k: Int,
-                         after: Option[(Double, Long)],
-                         minMatch: Int = 1): Seq[ScoredDoc] = {
+  /** Per-shard walk results: on the driver fast path, the collected shard
+    * outputs; on the distributed path, the plan (not yet run). */
+  private type Shards[R] = Either[Seq[R], Dataset[R]]
+
+  /** The ONE driver-vs-distributed fork of every posting walk: `walk`
+    * runs once per document shard over that shard's rows and the
+    * shard's (gate index -> sorted allowed docIds). Each gate is a
+    * docmeta predicate scanned with the predicate pushed down. Without
+    * gates the plan has no cogroup. With gates, one job collects at most
+    * limit+1 allowed ids (instead of count-then-collect): within the
+    * limit the array IS every allowed id; over it, the walk falls through
+    * to the distributed path, where gates cogroup with the postings by
+    * shard and are never collected to the driver. */
+  private def perShard[P, R: Encoder](rows: Dataset[P], shardOf: P => Int,
+      volume: Long, gates: Seq[Column])
+      (walk: (Seq[P], Map[Int, Array[Long]]) => Iterator[R]): Shards[R] = {
+    def onDriver(gatesOf: Int => Map[Int, Array[Long]]): Shards[R] =
+      Left(rows.collect().groupBy(shardOf).toSeq.flatMap { case (s, rs) =>
+        walk(rs.toSeq, gatesOf(s)) })
+    val small = volume <= driverPathMaxPostings
+    if (gates.isEmpty) {
+      if (small) onDriver(_ => Map.empty)
+      else Right(rows.groupByKey(shardOf)
+        .flatMapGroups((_, it) => walk(it.toSeq, Map.empty)))
+    } else {
+      val allowed = gates.zipWithIndex.map { case (g, i) =>
+        docmeta.where(g)
+          .select(lit(i).cast("int").as("_1"), col("docId").as("_2"))
+          .as[(Int, Long)]
+      }.reduce(_ union _)
+      val gateShard = (t: (Int, Long)) => IndexBuilder.shardOf(t._2)
+      // overflow-safe limit: a threshold near Long.MaxValue clamps
+      val limit =
+        if (driverPathMaxPostings >= Int.MaxValue) Int.MaxValue
+        else (driverPathMaxPostings + 1).toInt
+      val local = if (!small) None
+        else Some(allowed.limit(limit).collect())
+          .filter(_.length <= driverPathMaxPostings)
+      local match {
+        case Some(a) =>
+          val byShard = a.groupBy(gateShard)
+            .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
+          onDriver(byShard.getOrElse(_, Map.empty))
+        case None =>
+          Right(rows.groupByKey(shardOf)
+            .cogroup(allowed.groupByKey(gateShard)) { (_, rIt, aIt) =>
+              walk(rIt.toSeq, QueryEngine.sortGates(aIt.toArray))
+            })
+      }
+    }
+  }
+
+  /** Scored shard walk: WAND top-k per shard; the request's gate is gate
+    * 0, so a shard it allows nothing in scores nothing. None when no
+    * query term is in the dictionary. */
+  private def scoredWalk(req: SearchRequest): Option[Shards[ScoredDoc]] = {
     val weighted = QueryParser
-      .resolveScoredW(QueryParser.parseScored(query), expandPrefix(_)._1,
+      .resolveScoredW(QueryParser.parseScored(req.query), expandPrefix(_)._1,
         expandFuzzy(_, _)._1)
     val dfs = termDfs(weighted.map(_._1))
     val present = weighted.map(_._1).filter(dfs.contains)
-    if (present.isEmpty) return Nil
+    if (present.isEmpty) return None
     val wMap: Map[String, Double] =
       weighted.filter(_._2 != 1.0).toMap // only boosted terms ship
     val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
-    val totalPostings = dfs.values.sum
-    val shardTop: Seq[ScoredDoc] =
-      if (totalPostings <= driverPathMaxPostings) {
-        // driver fast path: postings for these terms are small; single job
-        rows.collect().groupBy(_.shard).toSeq.flatMap { case (_, rs) =>
-          WandScorer.topK(present,
-            QueryEngine.termCursors(rs.toSeq, bm25, dfs, wMap), k,
-            after = after, minMatch = minMatch)
-        }
-      } else {
-        val (bm, pr, dfsB, wB, aB, mmB) =
-          (bm25, present, dfs, wMap, after, minMatch)
-        rows.groupByKey(_.shard).flatMapGroups { (_, it) =>
-          WandScorer.topK(pr,
-            QueryEngine.termCursors(it.toSeq, bm, dfsB, wB), k,
-            after = aB, minMatch = mmB)
-            .iterator
-        }.collect().toSeq
+    val (bm, k, after, minMatch) = (bm25, req.k, req.after, req.minMatch)
+    val gate = req.gate.map(_ => 0)
+    Some(perShard(rows, (_: PostingRow).shard, dfs.values.sum,
+        req.gate.toSeq) { (rs, gates) =>
+      QueryEngine.required(gate, gates).iterator.flatMap { r =>
+        WandScorer.topK(present, QueryEngine.termCursors(rs, bm, dfs, wMap),
+          k, r, after, minMatch)
       }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
-  }
-
-  /** Metadata-FILTERED scored search — the ES bool query's
-    * query + filter-context combination ("top matches in THIS language /
-    * repo / date range", the reference dashboards' primary query shape:
-    * every Kibana panel carries the time-range filter next to the query,
-    * /root/reference/export.json). `metaPredicate` is a SQL boolean
-    * expression over docmeta columns. Scoring statistics stay GLOBAL
-    * (the ES contract: a filter gates candidates, it never changes
-    * idf/avgdl), so a doc's score is identical with or without the
-    * filter — only the candidate set shrinks.
-    *
-    * Scale shape: the filtered docmeta scan (predicate pushed to
-    * parquet) becomes a per-shard sorted allowed set that joins the WAND
-    * walk as a required cursor — candidates outside it are leapfrogged
-    * WITHOUT scoring, and the walk hops to the filter's next allowed
-    * doc, so a selective filter prunes like a rare term. The distributed
-    * path COGROUPS postings with the filtered docmeta by shard; the
-    * allowed set is never collected to the driver (driver fast path only
-    * when BOTH volumes are small). */
-  def topKFiltered(query: String, k: Int, metaPredicate: String,
-                   after: Option[(Double, Long)] = None,
-                   minMatch: Int = 1): Seq[ScoredDoc] = {
-    val weighted = QueryParser
-      .resolveScoredW(QueryParser.parseScored(query), expandPrefix(_)._1,
-        expandFuzzy(_, _)._1)
-    val dfs = termDfs(weighted.map(_._1))
-    val present = weighted.map(_._1).filter(dfs.contains)
-    if (present.isEmpty) return Nil
-    val wMap: Map[String, Double] = weighted.filter(_._2 != 1.0).toMap
-    val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
-    val allowed = docmeta.where(expr(metaPredicate))
-      .select(col("docId")).as[Long]
-    val totalPostings = dfs.values.sum
-    // `after` and `minMatch` compose freely with the allowed-set gate:
-    // all three are WAND-evaluation gates the scorer applies together
-    // (bounds only ever err safe) — "the next page of filtered results"
-    // costs one more query, exactly like the unfiltered search_after
-    val (bm, pr, dfsB, wB, aB, mmB) = (bm25, present, dfs, wMap, after, minMatch)
-    // one gate job instead of count-then-collect (r8): collect at most
-    // gateLimit ids — within the gate the limit never binds, so the
-    // array IS the full allowed set; over it, fall through distributed
-    val allowedArr: Option[Array[Long]] =
-      if (totalPostings > driverPathMaxPostings) None
-      else {
-        val a = allowed.limit(gateLimit).collect()
-        if (a.length <= driverPathMaxPostings) Some(a) else None
-      }
-    val shardTop: Seq[ScoredDoc] =
-      if (allowedArr.isDefined) {
-        val byShard = allowedArr.get.groupBy(IndexBuilder.shardOf)
-        rows.collect().groupBy(_.shard).toSeq.flatMap { case (shard, rs) =>
-          byShard.get(shard).toSeq.flatMap { arr =>
-            java.util.Arrays.sort(arr)
-            WandScorer.topK(present,
-              QueryEngine.termCursors(rs.toSeq, bm25, dfs, wMap), k,
-              Seq(WandScorer.allowedCursor(arr)), after = after,
-              minMatch = minMatch)
-          }
-        }
-      } else {
-        rows.groupByKey(_.shard)
-          .cogroup(allowed.groupByKey(IndexBuilder.shardOf)) {
-            (_, rIt, aIt) =>
-              val arr = aIt.toArray
-              if (arr.isEmpty) Iterator.empty
-              else {
-                java.util.Arrays.sort(arr)
-                WandScorer.topK(pr,
-                  QueryEngine.termCursors(rIt.toSeq, bm, dfsB, wB), k,
-                  Seq(WandScorer.allowedCursor(arr)), after = aB,
-                  minMatch = mmB).iterator
-              }
-          }.collect().toSeq
-      }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
-  }
-
-  /** topKFiltered joined with document metadata, display-ordered. */
-  def searchFiltered(query: String, k: Int,
-                     metaPredicate: String): DataFrame = {
-    val hits = topKFiltered(query, k, metaPredicate)
-    if (hits.isEmpty)
-      return docmeta.withColumn("score", lit(0.0)).where(lit(false))
-    val ids = hits.map(_.docId)
-    val meta = docmeta.where(col("docId").isin(ids: _*))
-    meta.join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
-      .orderBy(desc("score"), asc("docId"))
+    })
   }
 
   /** Read the query's posting rows as FULL rows; when no phrase needs
@@ -449,13 +499,14 @@ final class QueryEngine(spark: SparkSession, val root: String,
   /** Shared boolean-path prep: filter-context prefix/fuzzy expansion
     * (uncapped) plus group validity — a group is dead if any concrete
     * term is absent from the dict OR any required expansion is empty.
-    * Returns (prepared groups, dfs incl. expansions).
+    * Returns (prepared groups, their distinct field gates, dfs incl.
+    * expansions).
     *
     * Prohibitions prune the other way: a negated term/prefix/fuzzy/
     * phrase that cannot occur anywhere (absent from the dict, empty
     * expansion) is a no-op and is DROPPED — never a group-killer. */
   private def prepGroups(groups: Seq[MatchGroup])
-      : (Seq[PreparedGroup], Map[String, Long]) = {
+      : (Seq[PreparedGroup], Seq[Column], Map[String, Long]) = {
     val expP: Map[String, Map[String, Long]] =
       (groups.flatMap(_.prefixes) ++ groups.flatMap(_.negPrefixes)).distinct
         .map(p => p -> expandPrefixAll(p)).toMap
@@ -481,11 +532,13 @@ final class QueryEngine(spark: SparkSession, val root: String,
           "lists are read in full; narrow the negated prefix/fuzzy or " +
           "express the prohibition as a metadata filter")
     }
-    val valid = groups
+    val live = groups
       .filter(g => g.terms.forall(dfs.contains) &&
         g.prefixes.forall(p => expP(p).nonEmpty) &&
         g.fuzzies.forall(f => expF(f).nonEmpty))
-      .map(g => PreparedGroup(
+    // one gate per distinct field-atom list, shared by the groups with it
+    val gateFields = live.map(_.fields).filter(_.nonEmpty).distinct
+    val valid = live.map(g => PreparedGroup(
         terms = g.terms,
         phrases = g.phrases,
         reqSets = g.prefixes.map(expP(_).keySet) ++
@@ -496,194 +549,85 @@ final class QueryEngine(spark: SparkSession, val root: String,
         negPhrases = g.negPhrases.filter(_.forall(dfs.contains)),
         nearSpans = g.nearSpans,
         negNearSpans = g.negNearSpans.filter(_._1.forall(dfs.contains)),
-        metaPredicate =
-          if (g.fields.isEmpty) None
-          else Some(QueryParser.compileFields(g.fields))))
-    (valid, dfs)
+        gate = Some(gateFields.indexOf(g.fields)).filter(_ >= 0)))
+    (valid, gateFields.map(QueryParser.compileFields), dfs)
   }
 
-  /** Per-predicate allowed docId sets for the boolean paths' field
-    * gates, as ONE unioned (predIdx, docId) dataset — each distinct
-    * predicate is a pushed-down docmeta scan; the union cogroups with
-    * the postings by shard, so gates ride the same distributed walk as
-    * topKFiltered's allowed set and are never driver-collected on the
-    * scale path. */
-  private def allowedSets(preds: Seq[String]): Dataset[(Int, Long)] =
-    preds.zipWithIndex.map { case (p, i) =>
-      docmeta.where(expr(p))
-        .select(lit(i).cast("int").as("_1"), col("docId").as("_2"))
-        .as[(Int, Long)]
-    }.reduce(_ union _)
-
-  /** The postings the boolean paths must read for these (prepped) groups:
-    * required terms, filter-context expansions, and every surviving
-    * prohibition's lists (exclusion advances pay their posting volume —
-    * the Lucene must_not cost model). */
-  private def groupReadSet(valid: Seq[PreparedGroup]): Seq[String] =
-    (valid.flatMap(_.terms) ++ valid.flatMap(_.reqSets).flatten ++
-      valid.flatMap(_.exclTerms) ++ valid.flatMap(_.negPhrases).flatten ++
-      valid.flatMap(_.negNearSpans).flatMap(_._1))
-      .distinct
-
-
-  /** Boolean keyword query: "spaces are ANDs commas are ORs"
-    * (/root/reference/sentiment.py:638-641); quoted spans add positional
-    * phrase constraints; `word*` words add prefix requirements
-    * (filter-only, uncapped expansion — see prepGroups). Doc score = max
-    * over matching AND-groups of the group's summed BM25 (phrases and
-    * prefixes filter, never boost). */
-  def booleanTopK(query: String, k: Int): Seq[ScoredDoc] = {
+  /** Boolean shard walk: every live group's leapfrog per shard (field
+    * gates join it as required cursors), reduced by `perShardOut` to
+    * the shard's output. Reads the required terms, filter-context
+    * expansions, and every surviving prohibition's lists (exclusion
+    * advances pay their posting volume — the Lucene must_not cost
+    * model). None when no group is live. */
+  private def booleanWalk[R: Encoder](query: String)
+      (perShardOut: Seq[Iterator[ScoredDoc]] => Iterator[R])
+      : Option[Shards[R]] = {
     val groups = QueryParser.parseGroups(query)
-    if (groups.isEmpty) return Nil
-    val (valid, dfs) = prepGroups(groups)
-    if (valid.isEmpty) return Nil
+    if (groups.isEmpty) return None
+    val (valid, gates, dfs) = prepGroups(groups)
+    if (valid.isEmpty) return None
     val needPos = valid.exists(g => g.phrases.nonEmpty ||
       g.negPhrases.nonEmpty || g.nearSpans.nonEmpty ||
       g.negNearSpans.nonEmpty)
     if (needPos) requirePositions()
-    val validTerms = groupReadSet(valid)
-    val rows = postingRowsFor(validTerms, needPos)
-    val preds = valid.flatMap(_.metaPredicate).distinct
-    val (bm, dfsB, validB, predsB) = (bm25, dfs, valid, preds)
+    val readSet = (valid.flatMap(_.terms) ++ valid.flatMap(_.reqSets).flatten ++
+      valid.flatMap(_.exclTerms) ++ valid.flatMap(_.negPhrases).flatten ++
+      valid.flatMap(_.negNearSpans).flatMap(_._1)).distinct
+    val bm = bm25
+    Some(perShard(postingRowsFor(readSet, needPos), (_: PostingRowPos).shard,
+        readSet.map(dfs).sum, gates) { (rs, gs) =>
+      perShardOut(QueryEngine.groupMatches(valid, rs, gs, bm, dfs))
+    })
+  }
 
-    // Memory-bounded EXACT scoring: each AND-group keeps only its own
-    // TopK(k) while streaming its intersection (never the full match set —
-    // two hot terms AND-ed would otherwise accumulate O(matches) entries).
-    // Exactness: a doc's final score is max over groups of the group sum;
-    // if the doc is in the global top-k, then in its best-scoring group
-    // fewer than k docs beat it (any group-mate with a higher group score
-    // has a final score at least that high), so the doc survives that
-    // group's TopK(k) and the merge sees its true max. Merge state is
-    // O(groups * k). A group's field gate joins its leapfrog as a
-    // required cursor (gates filter, never score); a predicate with no
-    // allowed docs in this shard kills the group here.
-    def scoreShard(rs: Seq[PostingRowPos], gates: Map[Int, Array[Long]],
-                   k: Int): Seq[ScoredDoc] = {
-      val perGroup: Seq[Seq[ScoredDoc]] = validB.flatMap { group =>
-        val gate: Option[Seq[DocCursor]] = group.metaPredicate match {
-          case None => Some(Nil)
-          case Some(p) => gates.get(predsB.indexOf(p))
-            .map(arr => Seq(WandScorer.allowedCursor(arr)))
-        }
-        gate.map { req =>
-          val (cur, preSets, negCur, negPh, negNear) =
-            QueryEngine.groupCursorSets(group, rs, bm, dfsB)
-          val groupTop = new ScoredDoc.TopK(k)
-          WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
-              negCur, negPh, group.nearSpans, negNear, req)
-            .foreach(groupTop.offer)
-          groupTop.result()
-        }
-      }
-      val best = scala.collection.mutable.HashMap.empty[Long, Double]
-      perGroup.iterator.flatten.foreach { sd =>
-        val prev = best.get(sd.docId)
-        if (prev.isEmpty || sd.score > prev.get) best(sd.docId) = sd.score
-      }
-      val top = new ScoredDoc.TopK(k)
-      best.toSeq.sortBy(_._1).foreach { case (id, s) => top.offer(ScoredDoc(id, s)) }
-      top.result()
+  /** The ONE point-lookup fork (explainScore, highlight): rows are
+    * pruned to the docId's shard, each (shard, term) sub-list's cursor
+    * skip-advances straight to the docId, and `read` takes what it needs
+    * from a cursor that lands on it. A stopword-dense query over a large
+    * corpus must not pull the full posting volume to the driver for one
+    * lookup, so the gate sums the PRUNED scan's own df column (a
+    * column-pruned one-column job; a global-df average divided by
+    * numShards under-gates a term skewed into the looked-up shard) and,
+    * over it, the advance runs per (shard, term) on the executors. */
+  private def pointLookup[P, R](rows: Dataset[P], docId: Long)
+      (key: P => (Int, String), cursor: (String, Seq[P]) => PostingCursor,
+       read: PostingCursor => R)
+      (implicit enc: Encoder[(String, R)]): Map[String, R] = {
+    val at = (t: String, rs: Seq[P]) => {
+      val cur = cursor(t, rs)
+      cur.advanceTo(docId)
+      if (!cur.exhausted && cur.curDoc == docId) Some(t -> read(cur)) else None
     }
-
-    val totalPostings = validTerms.map(dfs).sum
-    val shardTop: Seq[ScoredDoc] =
-      if (preds.isEmpty) {
-        // no field gates: the r6 plan shapes, bit-for-bit (no cogroup)
-        if (totalPostings <= driverPathMaxPostings)
-          rows.collect().groupBy(_.shard).toSeq
-            .flatMap { case (_, rs) => scoreShard(rs.toSeq, Map.empty, k) }
-        else
-          rows.groupByKey(_.shard)
-            .flatMapGroups((_, it) => scoreShard(it.toSeq, Map.empty, k).iterator)
-            .collect().toSeq
-      } else {
-        // field gates: per-predicate docmeta scans (predicate pushed)
-        // cogrouped with the postings by shard — same scale shape as
-        // topKFiltered, allowed sets never driver-collected on this path
-        val allowedAll = allowedSets(preds)
-        // one gate job instead of count-then-collect (see topKFiltered, r8)
-        val gateArr: Option[Array[(Int, Long)]] =
-          if (totalPostings > driverPathMaxPostings) None
-          else {
-            val a = allowedAll.limit(gateLimit).collect()
-            if (a.length <= driverPathMaxPostings) Some(a) else None
-          }
-        if (gateArr.isDefined) {
-          val byShard = gateArr.get
-            .groupBy(t => IndexBuilder.shardOf(t._2))
-            .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
-          rows.collect().groupBy(_.shard).toSeq.flatMap { case (shard, rs) =>
-            scoreShard(rs.toSeq, byShard.getOrElse(shard, Map.empty), k)
-          }
-        } else {
-          rows.groupByKey(_.shard)
-            .cogroup(allowedAll.groupByKey(t => IndexBuilder.shardOf(t._2))) {
-              (_, rIt, aIt) =>
-                scoreShard(rIt.toSeq, QueryEngine.sortGates(aIt.toArray), k)
-                  .iterator
-            }.collect().toSeq
-        }
-      }
-    shardTop.sorted(ScoredDoc.betterOrdering).take(k)
+    val volume = rows.toDF()
+      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
+    if (volume <= driverPathMaxPostings)
+      rows.collect().groupBy(key).toSeq
+        .flatMap { case ((_, t), rs) => at(t, rs.toSeq) }.toMap
+    else
+      rows.groupByKey(key)
+        .flatMapGroups((sk, it) => at(sk._2, it.toSeq).iterator)
+        .collect().toMap
   }
 
   /** The ES `/_explain` analogue: the per-term BM25 breakdown of one
     * document's score against a disjunctive query. Contributions are
     * listed in QUERY TERM ORDER and sum (in that order) EXACTLY to the
     * engine's score for the doc — the frozen float order the whole
-    * parity story rests on, now inspectable per term. Point lookup: the
-    * postings read is term-IN pruned (the same volume a driver
-    * fast-path query reads) and each cursor skip-advances straight to
-    * the docId — no scoring pass. */
+    * parity story rests on, now inspectable per term. A point lookup:
+    * no scoring pass. */
   def explainScore(query: String, docId: Long): Seq[ScoreExplain] = {
     val terms = CodeAnalyzer.analyzeQuery(query)
     val dfs = termDfs(terms)
     val present = terms.filter(dfs.contains)
     if (present.isEmpty) return Nil
-    // point lookup: prune to the docId's shard (the doc lives in exactly
-    // one; every other shard's cursors would advance to exhaustion for
-    // nothing — see highlight for the measured effect)
     val rows = postings
       .where(col("term").isin(present: _*) &&
         col("shard") === IndexBuilder.shardOf(docId))
       .as[PostingRow]
-    // same driverPathMaxPostings gate as topK/booleanTopK/matchingDocIds:
-    // a stopword-dense query over a large corpus must not pull the full
-    // posting volume to the driver for a single point lookup — the
-    // distributed path does the skip-advance per (shard, term) on the
-    // executors and collects the at-most-|terms| hits. The gate sums the
-    // PRUNED scan's own df column (a column-pruned one-column job) — the
-    // global-df average a previous revision divided by numShards
-    // under-gates a term skewed into the looked-up shard (ADVICE r6).
-    val totalPostings = rows.toDF()
-      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
-    val hits: Map[String, (Int, Int)] = // term -> (tf, dl) at docId
-      if (totalPostings <= driverPathMaxPostings) {
-        val collected = rows.collect()
-        present.flatMap { t =>
-          // cursors are per document shard (their block ranges are only
-          // guaranteed non-interleaved within one shard); the doc lives
-          // in exactly one, the others advance past it to exhaustion
-          collected.filter(_.term == t).groupBy(_.shard).values.flatMap { rs =>
-            val cur = QueryEngine.termCursors(rs.toSeq, bm25, dfs)(t)
-            cur.advanceTo(docId)
-            if (!cur.exhausted && cur.curDoc == docId)
-              Some(t -> (cur.curTf, cur.curDl))
-            else None
-          }
-        }.toMap
-      } else {
-        val (bm, dfsB, target) = (bm25, dfs, docId)
-        rows.groupByKey(r => (r.shard, r.term))
-          .flatMapGroups { (key: (Int, String), it: Iterator[PostingRow]) =>
-            val t = key._2
-            val cur = QueryEngine.termCursors(it.toSeq, bm, dfsB)(t)
-            cur.advanceTo(target)
-            if (!cur.exhausted && cur.curDoc == target)
-              Iterator.single((t, cur.curTf, cur.curDl))
-            else Iterator.empty
-          }.collect().map { case (t, tf, dl) => t -> (tf, dl) }.toMap
-      }
+    val bm = bm25
+    val hits = pointLookup(rows, docId)(r => (r.shard, r.term),
+      (t, rs) => QueryEngine.termCursors(rs, bm, dfs)(t),
+      c => (c.curTf, c.curDl))
     present.flatMap { t =>
       hits.get(t).map { case (tf, dl) =>
         val idf = bm25.idf(dfs(t))
@@ -696,10 +640,10 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * document against a query — the user-facing read of the positional
     * posBlocks column beyond phrase filtering. Wildcards expand like
     * topK (ranked, capped); terms are returned in query/expansion order,
-    * positions ascending. Point lookup: term-IN pruned postingsFull read
-    * + per-(shard,term) skip-advance, same driver/distributed gate as
-    * explainScore — only the landing block's position bytes are ever
-    * decoded. */
+    * positions ascending. A point lookup on the full rows: only the
+    * landing block's position bytes are ever decoded (at 4M docs the
+    * shard pruning cut the read from every query term's full position
+    * volume, ~2.7 s, to one shard's, ~flat in corpus size). */
   def highlight(query: String, docId: Long): Seq[HighlightTerm] = {
     requirePositions()
     val terms = QueryParser
@@ -708,156 +652,27 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val dfs = termDfs(terms)
     val present = terms.filter(dfs.contains)
     if (present.isEmpty) return Nil
-    // point lookup: the docId names its shard, so prune the postings
-    // read to that shard's sub-lists — at 4M docs this cut the highlight
-    // read from the full position volume of every query term (~2.7 s) to
-    // one shard's (~flat in corpus size); same per-(shard,term)
-    // skip-advance after the scan
     val rows = postingsFull
       .where(col("term").isin(present: _*) &&
         col("shard") === IndexBuilder.shardOf(docId))
       .as[PostingRowPos]
-    // exact pruned-scan volume, same rationale as explainScore's gate
-    // (df is a lite column: posBlocks stays out of this scan too)
-    val totalPostings = rows.toDF()
-      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
-    val hits: Map[String, Seq[Int]] =
-      if (totalPostings <= driverPathMaxPostings) {
-        val collected = rows.collect()
-        present.flatMap { t =>
-          collected.filter(_.term == t).groupBy(_.shard).values.flatMap { rs =>
-            val cur = QueryEngine.termCursorsPos(rs.toSeq, bm25, dfs)(t)
-            cur.advanceTo(docId)
-            if (!cur.exhausted && cur.curDoc == docId)
-              Some(t -> cur.curPositions.toSeq)
-            else None
-          }
-        }.toMap
-      } else {
-        val (bm, dfsB, target) = (bm25, dfs, docId)
-        rows.groupByKey(r => (r.shard, r.term))
-          .flatMapGroups { (key: (Int, String), it: Iterator[PostingRowPos]) =>
-            val t = key._2
-            val cur = QueryEngine.termCursorsPos(it.toSeq, bm, dfsB)(t)
-            cur.advanceTo(target)
-            if (!cur.exhausted && cur.curDoc == target)
-              Iterator.single((t, cur.curPositions.toSeq))
-            else Iterator.empty
-          }.collect().toMap
-      }
+    val bm = bm25
+    val hits = pointLookup(rows, docId)(r => (r.shard, r.term),
+      (t, rs) => QueryEngine.termCursorsPos(rs, bm, dfs)(t),
+      _.curPositions.toSeq)
     present.flatMap(t => hits.get(t).map(ps => HighlightTerm(t, ps)))
   }
 
   /** FILTER-context boolean retrieval: the FULL matching docId set (no
     * scores, no k-cut) as a DataFrame — the hit set of a
-    * `WHERE match(...)` can be corpus-sized, so it is never collected:
-    * each document shard runs the same leapfrog AND-group intersection
-    * as booleanTopK and streams the union of group hits out. The same
-    * small-postings driver fast path applies (single job, no shuffle). */
-  def matchingDocIds(query: String): DataFrame = {
-    val groups = QueryParser.parseGroups(query)
-    val empty = spark.createDataset(Seq.empty[Long]).toDF("docId")
-    if (groups.isEmpty) return empty
-    val (valid, dfs) = prepGroups(groups)
-    if (valid.isEmpty) return empty
-    val needPos = valid.exists(g => g.phrases.nonEmpty ||
-      g.negPhrases.nonEmpty || g.nearSpans.nonEmpty ||
-      g.negNearSpans.nonEmpty)
-    if (needPos) requirePositions()
-    val validTerms = groupReadSet(valid)
-    val rows = postingRowsFor(validTerms, needPos)
-    val preds = valid.flatMap(_.metaPredicate).distinct
-    val (bm, dfsB, validB, predsB) = (bm25, dfs, valid, preds)
-    // Per-group ASCENDING emission + O(groups)-state min-merge dedup:
-    // each group's leapfrog yields docIds in order, so deduping across
-    // OR-groups only needs every iterator's HEAD — executor memory is
-    // O(groups), never the O(shard-matches) hash set a dense multi-group
-    // match would accumulate (VERDICT r6 "wrong #1"). Field gates join
-    // each group's leapfrog as required cursors, exactly like
-    // booleanTopK's.
-    def shardIds(rs: Seq[PostingRowPos],
-                 gates: Map[Int, Array[Long]]): Iterator[Long] = {
-      val its: Array[BufferedIterator[Long]] = validB.flatMap { group =>
-        val gate: Option[Seq[DocCursor]] = group.metaPredicate match {
-          case None => Some(Nil)
-          case Some(p) => gates.get(predsB.indexOf(p))
-            .map(arr => Seq(WandScorer.allowedCursor(arr)))
-        }
-        gate.map { req =>
-          val (cur, preSets, negCur, negPh, negNear) =
-            QueryEngine.groupCursorSets(group, rs, bm, dfsB)
-          WandScorer.conjunctive(group.terms, cur, group.phrases, preSets,
-            negCur, negPh, group.nearSpans, negNear, req).map(_.docId).buffered
-        }
-      }.toArray
-      new Iterator[Long] {
-        def hasNext: Boolean = its.exists(_.hasNext)
-        def next(): Long = {
-          var m = Long.MaxValue
-          var i = 0
-          while (i < its.length) {
-            val it = its(i)
-            if (it.hasNext && it.head < m) m = it.head
-            i += 1
-          }
-          i = 0
-          while (i < its.length) {
-            val it = its(i)
-            while (it.hasNext && it.head == m) it.next()
-            i += 1
-          }
-          m
-        }
-      }
+    * `WHERE match(...)` can be corpus-sized, so it is never collected on
+    * the distributed path: each document shard runs the same leapfrog
+    * AND-group intersection as booleanTopK and streams the union of
+    * group hits out. */
+  def matchingDocIds(query: String): DataFrame =
+    booleanWalk(query)(QueryEngine.unionAscending) match {
+      case None => spark.createDataset(Seq.empty[Long]).toDF("docId")
+      case Some(Left(ids)) => ids.toDF("docId")
+      case Some(Right(ids)) => ids.toDF("docId")
     }
-    val totalPostings = validTerms.map(dfs).sum
-    if (preds.isEmpty) {
-      if (totalPostings <= driverPathMaxPostings)
-        rows.collect().groupBy(_.shard).toSeq
-          .flatMap(g => shardIds(g._2.toSeq, Map.empty)).toDF("docId")
-      else
-        rows.groupByKey(_.shard)
-          .flatMapGroups((_, it) => shardIds(it.toSeq, Map.empty))
-          .toDF("docId")
-    } else {
-      val allowedAll = allowedSets(preds)
-      // one gate job instead of count-then-collect (see topKFiltered, r8)
-      val gateArr: Option[Array[(Int, Long)]] =
-        if (totalPostings > driverPathMaxPostings) None
-        else {
-          val a = allowedAll.limit(gateLimit).collect()
-          if (a.length <= driverPathMaxPostings) Some(a) else None
-        }
-      if (gateArr.isDefined) {
-        val byShard = gateArr.get
-          .groupBy(t => IndexBuilder.shardOf(t._2))
-          .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
-        rows.collect().groupBy(_.shard).toSeq
-          .flatMap { case (shard, rs) =>
-            shardIds(rs.toSeq, byShard.getOrElse(shard, Map.empty))
-          }.toDF("docId")
-      } else {
-        rows.groupByKey(_.shard)
-          .cogroup(allowedAll.groupByKey(t => IndexBuilder.shardOf(t._2))) {
-            (_, rIt, aIt) =>
-              shardIds(rIt.toSeq, QueryEngine.sortGates(aIt.toArray))
-          }.toDF("docId")
-      }
-    }
-  }
-
-  /** Top-k as a DataFrame (docId, score) — for the driver contract. */
-  def topKDF(query: String, k: Int): DataFrame =
-    topK(query, k).toDF("docId", "score")
-
-  /** Top-k joined with document metadata (repo/path/commit/lang/sha256). */
-  def search(query: String, k: Int): DataFrame = {
-    val hits = topK(query, k)
-    if (hits.isEmpty) // zero hits: empty DF with the REAL output schema,
-      return docmeta.withColumn("score", lit(0.0)).where(lit(false))
-    val ids = hits.map(_.docId)
-    val meta = docmeta.where(col("docId").isin(ids: _*)) // IN-pushdown, k rows
-    meta.join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
-      .orderBy(desc("score"), asc("docId"))
-  }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.corpus.CorpusDoc
-import graft.index.{IndexBuilder, QueryEngine}
+import graft.index.{IndexBuilder, QueryEngine, SearchRequest}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -548,8 +548,8 @@ object SearchOps {
 
   def qFilteredSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
-    val hits = eng.topKFiltered(FilteredQuery, 10 + TieMargin,
-      FilteredPredicate)
+    val hits = eng.run(SearchRequest(FilteredQuery, 10 + TieMargin,
+      gate = Some(expr(FilteredPredicate))))
     withTableId(spark, eng, hits)
       .orderBy(desc("score_raw"), asc("table_id"))
       .limit(10)
@@ -625,7 +625,8 @@ object SearchOps {
     val page1 = eng.topK(q, 10)
     require(page1.size == 10, s"page 1 must be full, got ${page1.size}")
     val cur = page1.last
-    val hits = eng.topKAfter(q, 10 + TieMargin, cur.score, cur.docId)
+    val hits = eng.run(SearchRequest(q, 10 + TieMargin,
+      after = Some((cur.score, cur.docId))))
     withTableId(spark, eng, hits)
       .orderBy(desc("score_raw"), asc("table_id"))
       .limit(10)
@@ -656,7 +657,8 @@ object SearchOps {
 
   def qMinMatchSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
-    val hits = eng.topKMin(QueryTerms.mkString(" "), 10 + TieMargin, MinMatchN)
+    val hits = eng.run(SearchRequest(QueryTerms.mkString(" "), 10 + TieMargin,
+      minMatch = MinMatchN))
     withTableId(spark, eng, hits)
       .orderBy(desc("score_raw"), asc("table_id"))
       .limit(10)
@@ -753,7 +755,7 @@ object SearchOps {
     * every reference panel pairs with its query,
     * /root/reference/export.json:40,77,82,91): `lang:en` and
     * `id:[100 TO 400]` compile to a docmeta gate that rides
-    * topKFiltered's cogrouped allowed-set path; the residual scores like
+    * the engine's cogrouped gate path; the residual scores like
     * any disjunctive query. Scoring statistics stay GLOBAL (filter
     * context), so the oracle scores every doc corpus-wide and only then
     * applies the gate — the q87 pattern, now driven by query syntax
@@ -762,7 +764,7 @@ object SearchOps {
 
   def qFieldSearch(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
-    val hits = eng.topKQS(QSFieldQuery, 10 + TieMargin)
+    val hits = eng.run(SearchRequest.queryString(QSFieldQuery, 10 + TieMargin))
     withTableId(spark, eng, hits)
       .orderBy(desc("score_raw"), asc("table_id"))
       .limit(10)
@@ -828,11 +830,11 @@ object SearchOps {
     * the q92 gate. */
   def qFieldSearchAfter(spark: SparkSession, dir: String): DataFrame = {
     val eng = docEngine(spark, dir)
-    val page1 = eng.topKQS(QSFieldQuery, 10)
+    val page1 = eng.run(SearchRequest.queryString(QSFieldQuery, 10))
     require(page1.size == 10, s"page 1 must be full, got ${page1.size}")
     val cur = page1.last
-    val hits = eng.topKQSAfter(QSFieldQuery, 10 + TieMargin,
-      cur.score, cur.docId)
+    val hits = eng.run(SearchRequest.queryString(QSFieldQuery, 10 + TieMargin,
+      after = Some((cur.score, cur.docId))))
     withTableId(spark, eng, hits)
       .orderBy(desc("score_raw"), asc("table_id"))
       .limit(10)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.index.QueryEngine
+import graft.index.{QueryEngine, SearchRequest}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -49,24 +49,14 @@ case class MatchTopKExec(plan: MatchTopK) extends LeafExecNode {
     // one-partition RDD.
     val spark = SparkSession.active
     val eng = MatchTopKExec.engineFor(spark, plan.indexRoot)
-    // the scored paths honor the r7 field/range syntax: field atoms in
-    // the query string compile to a docmeta gate (ANDed with an explicit
-    // filter argument when both are present); boolMode's parseGroups
-    // handles fields natively per OR-group
-    val (residual, qsFields) =
-      if (plan.boolMode) (plan.query, Nil)
-      else graft.index.QueryParser.splitFieldFilters(plan.query)
-    val qsPred: Option[String] =
-      if (qsFields.isEmpty) None
-      else Some(graft.index.QueryParser.compileFields(qsFields))
-    val hits = (plan.filter, qsPred) match {
-      case (Some(pred), Some(qp)) =>
-        eng.topKFiltered(residual, plan.k, s"($pred) AND $qp")
-      case (Some(pred), None) => eng.topKFiltered(residual, plan.k, pred)
-      case (None, _) if plan.boolMode => eng.booleanTopK(plan.query, plan.k)
-      case (None, Some(qp)) => eng.topKFiltered(residual, plan.k, qp)
-      case (None, None) => eng.topK(residual, plan.k)
-    }
+    // the scored path honors the field/range syntax (field atoms gate,
+    // ANDed after an explicit filter argument); boolean mode gates each
+    // OR-group through its own field atoms and rejects a filter
+    val filter = plan.filter.map(org.apache.spark.sql.functions.expr)
+    val hits = eng.run(
+      if (plan.boolMode)
+        SearchRequest(plan.query, plan.k, boolMode = true, gate = filter)
+      else SearchRequest.queryString(plan.query, plan.k, filter))
     val rows: Seq[InternalRow] =
       if (hits.isEmpty) Nil
       else {

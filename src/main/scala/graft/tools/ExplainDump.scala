@@ -53,10 +53,9 @@ object ExplainDump {
     // r7: field gates — the docmeta scan under the gate carries the
     // compiled predicate as PushedFilters (pruned before the cogroup)
     dump("field gate: docmeta scan with compiled predicate pushdown",
-      eng.docmeta.where(org.apache.spark.sql.functions.expr(
-        graft.index.QueryParser.compileFields(
-          graft.index.QueryParser.splitFieldFilters(
-            "x lang:en id:[100 TO 400]")._2))),
+      eng.docmeta.where(graft.index.QueryParser.compileFields(
+        graft.index.QueryParser.splitFieldFilters(
+          "x lang:en id:[100 TO 400]")._2)),
       exec = false)
     dump("q93 WHERE match() with per-group field gates (semi-join shape)",
       graft.ops.SearchOps.qFieldMatchWhere(spark, sf))

@@ -1,7 +1,9 @@
 package graft.tools
 import graft.corpus.CorpusGen
 import graft.index._
+import graft.ops.SearchOps.workDir
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.expr
 object ScaleSanity {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
@@ -9,7 +11,7 @@ object ScaleSanity {
       .config("spark.sql.shuffle.partitions", "64")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val root = "/root/repo/target/graftwork/scale-index"
+    val root = s"$workDir/scale-index"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     def timed[A](n: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -117,26 +119,29 @@ object ScaleSanity {
     }
     Seq(1, 2, 3).foreach { m =>
       val t0 = System.nanoTime()
-      val n = eng1.topKMin("posting reader segment", 10, m).size
+      val n = eng1.run(SearchRequest("posting reader segment", 10, minMatch = m)).size
       println(f"[scale] min_match m=$m -> $n hits in ${(System.nanoTime()-t0)/1e9}%.3f s")
     }
     val tF = System.nanoTime()
-    val nF = eng1.topKFiltered("posting reader", 10, "docId % 4 = 0").size
+    val nF = eng1.run(SearchRequest("posting reader", 10,
+      gate = Some(expr("docId % 4 = 0")))).size
     println(f"[scale] filtered topK (25%% allowed) -> $nF hits in ${(System.nanoTime()-tF)/1e9}%.2f s")
     val tP = System.nanoTime()
     val pg1 = eng1.topK("posting reader", 10)
-    val pg2 = eng1.topKAfter("posting reader", 10, pg1.last.score, pg1.last.docId)
+    val pg2 = eng1.run(SearchRequest("posting reader", 10,
+      after = Some((pg1.last.score, pg1.last.docId))))
     println(f"[scale] page1+page2 -> ${pg1.size}+${pg2.size} hits in ${(System.nanoTime()-tP)/1e9}%.3f s")
     // r7 field syntax: the query-string gate must ride the SAME cogroup
     // path as the explicit predicate (parity + timing), per-group gates
     // must agree with a docmeta join over the ungated match set, and the
     // dense multi-group match set exercises the merge-dedup emission
     val tQ1 = System.nanoTime()
-    val qsHits = eng1.topKQS("posting reader lang:scala dlen:[20 TO 200]", 10)
+    val qsHits = eng1.run(
+      SearchRequest.queryString("posting reader lang:scala dlen:[20 TO 200]", 10))
     val tQs = (System.nanoTime()-tQ1)/1e9
-    val exHits = eng1.topKFiltered("posting reader", 10,
-      "lang = 'scala' AND docLen >= 20 AND docLen <= 200")
-    println(f"[scale] field topKQS (lang+dlen gate) -> ${qsHits.size} hits in " +
+    val exHits = eng1.run(SearchRequest("posting reader", 10, gate = Some(
+      expr("lang = 'scala' AND docLen >= 20 AND docLen <= 200"))))
+    println(f"[scale] field query-string gate (lang+dlen) -> ${qsHits.size} hits in " +
       f"$tQs%.2f s (parity with explicit predicate: ${qsHits == exHits})")
     val tQ2 = System.nanoTime()
     val nGated = eng1.matchingDocIds("posting lang:scala, reader -lang:scala").count()
@@ -218,7 +223,7 @@ object ScaleSanity {
     // compared as path-sorted sets: the display order breaks exact-score
     // ties by internal docId, which the renumber intentionally changes
     def topSet(e: QueryEngine, q: String) =
-      e.search(q, 10).select("path", "score").collect().toSeq
+      e.search(SearchRequest(q, 10)).select("path", "score").collect().toSeq
         .sortBy(_.getString(0))
     val preRb = ReferenceQueries.all.take(4).map(q => topSet(eng2, q))
     val rbm = timed("rebase (renumber)") { SegmentMerge.rebase(spark, root) }

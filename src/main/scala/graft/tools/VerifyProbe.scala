@@ -1,8 +1,10 @@
 package graft.tools
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, QueryEngine}
+import graft.index.{IndexBuilder, QueryEngine, SearchRequest}
+import graft.ops.SearchOps.workDir
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.expr
 
 /** Adversarial probes at the library surface (edge inputs a user would
   * hit): empty/garbage queries, unknown terms, punctuation-only text,
@@ -14,11 +16,14 @@ object VerifyProbe {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val root = "/root/repo/target/graftwork/probe-index"
+    val root = s"$workDir/probe-index"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val corpus = CorpusGen.dataset(spark, 300, 42L, 4)
     IndexBuilder.build(spark, corpus, root, numShards = 4)
     val eng = new QueryEngine(spark, root)
+    def filtered(q: String, k: Int, pred: String) =
+      eng.run(SearchRequest(q, k, gate = Some(expr(pred))))
+    def qs(q: String, k: Int) = eng.run(SearchRequest.queryString(q, k))
 
     println("PROBE unknown-term topK -> " + eng.topK("zzzznotaterm qqqqq", 10))
     println("PROBE empty-query topK -> " + eng.topK("", 10))
@@ -29,7 +34,7 @@ object VerifyProbe {
     println("PROBE bool all-dead -> " + eng.booleanTopK("zzzz, qqqq", 3))
     println("PROBE k=0 -> " + eng.topK("def", 0))
     println("PROBE huge k -> " + eng.topK("computeHashValue", 100000).size + " hits")
-    println("PROBE search no hits -> " + eng.search("zzzznotaterm", 5).count() + " rows")
+    println("PROBE search no hits -> " + eng.search(SearchRequest("zzzznotaterm", 5)).count() + " rows")
 
     // wildcard edges: dead prefix, bare '*', '*' mid-word (analyzer
     // strips it), prefix-only boolean group, cap truncation
@@ -75,14 +80,14 @@ object VerifyProbe {
     // filtered search edges: real filter, empty filter, always-true
     // filter == unfiltered, bad predicate loud
     println("PROBE filtered topK -> " +
-      eng.topKFiltered("posting reader", 5, "lang = 'scala'").size + " hits")
+      filtered("posting reader", 5, "lang = 'scala'").size + " hits")
     println("PROBE filtered empty-filter -> " +
-      eng.topKFiltered("posting reader", 5, "lang = 'nope'"))
+      filtered("posting reader", 5, "lang = 'nope'"))
     println("PROBE filtered always-true == plain -> " +
-      (eng.topKFiltered("posting reader", 5, "docId >= 0") ==
+      (filtered("posting reader", 5, "docId >= 0") ==
         eng.topK("posting reader", 5)))
     try {
-      eng.topKFiltered("posting", 5, "no_such_column = 1")
+      filtered("posting", 5, "no_such_column = 1")
       println("PROBE filtered bad-pred -> NO ERROR (BAD)")
     } catch { case e: Exception =>
       println("PROBE filtered bad-pred -> rejected: " + e.getMessage.take(60)) }
@@ -95,11 +100,12 @@ object VerifyProbe {
     println("PROBE boost malformed '^x' -> " +
       eng.topK("posting^x", 5).size + " hits (word analyzed, not lost)")
     val pg1 = eng.topK("posting reader", 5)
-    val pg2 = eng.topKAfter("posting reader", 5, pg1.last.score, pg1.last.docId)
+    val pg2 = eng.run(SearchRequest("posting reader", 5,
+      after = Some((pg1.last.score, pg1.last.docId))))
     println("PROBE search_after page2 -> " + pg2.size + " hits, overlap=" +
       pg1.map(_.docId).toSet.intersect(pg2.map(_.docId).toSet).size)
     println("PROBE search_after past-end -> " +
-      eng.topKAfter("posting reader", 5, -1e18, Long.MaxValue))
+      eng.run(SearchRequest("posting reader", 5, after = Some((-1e18, Long.MaxValue)))))
     // sloppy spans + minimum_should_match edges
     println("PROBE near widths -> slop0=" +
       eng.booleanTopK("\"posting reader\"~0", 100000).size + " slop3=" +
@@ -110,31 +116,31 @@ object VerifyProbe {
     // field-scoped / range syntax (r7): gated == explicit-predicate path,
     // open bounds, negated fields, loud rejects for field-only and
     // unknown-range-field queries
-    println("PROBE field topKQS == topKFiltered -> " +
-      (eng.topKQS("posting reader lang:scala", 5) ==
-        eng.topKFiltered("posting reader", 5, "lang = 'scala'")))
+    println("PROBE field query-string gate == explicit gate -> " +
+      (qs("posting reader lang:scala", 5) ==
+        filtered("posting reader", 5, "lang = 'scala'")))
     println("PROBE field range open-bound -> " +
-      eng.topKQS("posting dlen:[1 TO *]", 5).size + " hits")
+      qs("posting dlen:[1 TO *]", 5).size + " hits")
     println("PROBE field negated -> " +
-      eng.topKQS("posting -lang:scala", 5).size + " hits")
+      qs("posting -lang:scala", 5).size + " hits")
     println("PROBE field bool group-scoped -> " +
       eng.booleanTopK("posting lang:scala, reader -lang:scala", 5).size + " hits")
-    try { eng.topKQS("lang:scala", 5); println("PROBE field-only scored -> MISSED") }
+    try { qs("lang:scala", 5); println("PROBE field-only scored -> MISSED") }
     catch { case e: IllegalArgumentException =>
       println("PROBE field-only scored -> rejected: " + e.getMessage.take(60)) }
-    try { eng.topKQS("posting date:[1 TO 2]", 5); println("PROBE field unknown-range -> MISSED") }
+    try { qs("posting date:[1 TO 2]", 5); println("PROBE field unknown-range -> MISSED") }
     catch { case e: IllegalArgumentException =>
       println("PROBE field unknown-range -> rejected: " + e.getMessage.take(60)) }
-    try { eng.topKQS("posting id:abc", 5); println("PROBE field bad-numeric -> MISSED") }
+    try { qs("posting id:abc", 5); println("PROBE field bad-numeric -> MISSED") }
     catch { case e: IllegalArgumentException =>
       println("PROBE field bad-numeric -> rejected: " + e.getMessage.take(60)) }
     println("PROBE field unknown-bare falls through -> " +
-      (eng.topKQS("posting date:x", 5).size) + " hits (analyzed, not lost)")
+      (qs("posting date:x", 5).size) + " hits (analyzed, not lost)")
     println("PROBE min_match m=1 == plain -> " +
-      (eng.topKMin("posting reader segment", 5, 1) ==
+      (eng.run(SearchRequest("posting reader segment", 5, minMatch = 1)) ==
         eng.topK("posting reader segment", 5)))
     println("PROBE min_match m>clauses -> " +
-      eng.topKMin("posting reader", 5, 3))
+      eng.run(SearchRequest("posting reader", 5, minMatch = 3)))
     val hlDoc = eng.booleanTopK("posting reader", 1).head.docId
     println("PROBE highlight -> " +
       eng.highlight("posting reader", hlDoc).map(h =>
@@ -157,7 +163,7 @@ object VerifyProbe {
     }
 
     // S11/S12 lifecycle: create -> drop -> recreate over the same root
-    val lifeRoot = "/root/repo/target/graftwork/probe-lifecycle"
+    val lifeRoot = s"$workDir/probe-lifecycle"
     val lifeTbl = new graft.table.IcebergLite(lifeRoot)
     IndexBuilder.build(spark, corpus, lifeRoot, numShards = 4)
     lifeTbl.drop()
@@ -168,7 +174,7 @@ object VerifyProbe {
     lifeTbl.drop()
 
     // open an engine on a nonexistent index
-    try { new QueryEngine(spark, "/root/repo/target/graftwork/nope"); println("PROBE open-missing -> NO ERROR (BAD)") }
+    try { new QueryEngine(spark, s"$workDir/nope"); println("PROBE open-missing -> NO ERROR (BAD)") }
     catch { case e: IllegalStateException => println("PROBE open-missing -> rejected: " + e.getMessage.take(60)) }
 
     // SQL TVF surface: good call, malformed args, unknown root
@@ -307,7 +313,7 @@ object VerifyProbe {
         e.getMessage.take(60)) }
 
     // rebase lifecycle: ingest near the batch budget, rebase, keep going
-    val rbRoot = "/root/repo/target/graftwork/probe-rebase"
+    val rbRoot = s"$workDir/probe-rebase"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(rbRoot))
     IndexBuilder.build(sx, corpus, rbRoot, numShards = 4)
     import sx.implicits._

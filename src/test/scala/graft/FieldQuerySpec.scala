@@ -113,16 +113,56 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       QueryParser.parseGroups("spark, lang:en -window")
     }
     intercept[IllegalArgumentException] {
-      engine.topKQS("lang:scala", 5)
+      engine.run(SearchRequest.queryString("lang:scala", 5))
     }
   }
 
-  test("predicateSql escapes string values; numeric stays bare") {
+  test("field predicates bind values as literals; numeric ones as Long") {
     val f = FieldFilter("path", neg = false, Some("o'brien"), None, None)
-    assert(f.predicateSql === "path = 'o''brien'")
+    assert(f.predicate == (col("path") === lit("o'brien")))
     val r = FieldFilter("id", neg = true, None, Some("5"), Some("9"),
       loInc = true, hiInc = false)
-    assert(r.predicateSql === "(NOT ((tableId >= 5 AND tableId < 9)))")
+    assert(r.predicate == !(col("tableId") >= lit(5L) && col("tableId") < lit(9L)))
+  }
+
+  test("a range atom must start a word: mid-word ranges reject") {
+    // `foo-id:[..]` once read as the term foo plus a NEGATED id range,
+    // `a.lang:[..]` as a filter cut from the middle of a word
+    Seq("spark foo-id:[1 TO 5]", "spark a.lang:[x TO y]").foreach { q =>
+      intercept[IllegalArgumentException](QueryParser.splitFieldFilters(q))
+      intercept[IllegalArgumentException](QueryParser.parseGroups(q))
+    }
+    val (res, fs) = QueryParser.splitFieldFilters("spark -id:[1 TO 5]")
+    assert(res === "spark" && fs.map(f => (f.field, f.neg)) === Seq(("id", true)))
+    assert(QueryParser.parseGroups("spark,id:[1 TO 5] merge")(1)
+      .fields.map(_.field) === Seq("id"))
+  }
+
+  test("field values with backslashes gate exactly like the oracle") {
+    // a SQL literal would unescape `a\b` and break on a trailing `\`;
+    // the gate binds the value verbatim, as the oracle compares it
+    import spark.implicits._
+    val repos = Seq("a\\b", "c\\", "ab", "c")
+    val docs = (0L until 80L).map(i =>
+      CorpusGen.doc(93L, i).copy(repo = repos((i % repos.size).toInt)))
+    val root = s"$work/backslash"
+    IndexBuilder.build(spark, docs.toDS(), root, numShards = 2)
+    val eng = new QueryEngine(spark, root)
+    val meta = eng.docmeta.select("docId", "repo", "path", "commit")
+      .as[(Long, String, String, String)].collect()
+    val byKey = docs.map(d => (d.repo, d.path, d.commit) -> d.content).toMap
+    val naive = new NaiveIndex(meta.toSeq.map { case (id, r, p, c) =>
+      (id, byKey((r, p, c))) })
+    val repoOf = meta.map(m => m._1 -> m._2).toMap
+    val term = naive.postings.toSeq.maxBy { case (t, pl) => (pl.length, t) }._1
+    Seq("a\\b", "c\\").foreach { v =>
+      val q = s"$term repo:$v"
+      val exp = naive.topKFiltered(term, 10, repoOf(_) == v)
+      assert(exp.nonEmpty, s"'$q' must have hits for this test to bite")
+      assert(eng.run(SearchRequest.queryString(q, 10)) === exp, q)
+      assert(eng.booleanTopK(q, 10) ===
+        naive.booleanTopK(q, 10, (id, _) => repoOf(id)), q)
+    }
   }
 
   // ---- engine parity ------------------------------------------------------
@@ -176,7 +216,7 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       val k = 5 + rnd.nextInt(10)
       val (residual, fs) = QueryParser.splitFieldFilters(q)
       assert(residual === qTerms.mkString(" "))
-      val got = engine.topKQS(q, k)
+      val got = engine.run(SearchRequest.queryString(q, k))
       val exp = oracle.topKFiltered(residual, k,
         id => fs.forall(f => f.matches(metaOf(id, f.field))))
       assert(got.map(_.docId) === exp.map(_.docId), s"round $round q='$q'")
@@ -212,7 +252,8 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
     }
     // the distributed scored path too (cogroup + required cursor)
     val q = s"${terms.head} lang:scala dlen:[10 TO 200]"
-    assert(distEngine.topKQS(q, 10) === engine.topKQS(q, 10))
+    assert(distEngine.run(SearchRequest.queryString(q, 10)) ===
+      engine.run(SearchRequest.queryString(q, 10)))
   }
 
   test("match_topk operator path honors field syntax (scored + filter arg)") {
@@ -221,7 +262,7 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       "posting reader lang:scala", 8)
       .select("docId", "score").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val direct = engine.topKQS("posting reader lang:scala", 8)
+    val direct = engine.run(SearchRequest.queryString("posting reader lang:scala", 8))
       .map(s => (s.docId, s.score))
     assert(viaOp === direct)
     // field atom ANDs with an explicit TVF filter argument (the TVF
@@ -240,7 +281,8 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
            |'posting reader lang:scala', 8, false, 'docLen >= 20')""".stripMargin)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val expect = new QueryEngine(s2, indexRoot)
-        .topKFiltered("posting reader", 8, "lang = 'scala' AND docLen >= 20")
+        .run(SearchRequest("posting reader", 8,
+          gate = Some(expr("lang = 'scala' AND docLen >= 20"))))
         .map(s => (s.docId, s.score))
       assert(both.toSet === expect.toSet)
     } finally {

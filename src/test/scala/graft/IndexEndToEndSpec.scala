@@ -206,10 +206,11 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     val scalaIds = langById.filter(_._2 == "scala").keySet
     assert(scalaIds.nonEmpty && scalaIds.size < langById.size,
       "filter must be a strict non-empty subset for this test to bite")
+    val isScala = expr("lang = 'scala'")
     (refQueries.take(6) ++ ReferenceQueries.prefixQueries.take(1) ++
       ReferenceQueries.fuzzyQueries.take(1)).foreach { q =>
       val expected = parityOracle.topKFiltered(q, 10, scalaIds.contains)
-      val got = engine.topKFiltered(q, 10, "lang = 'scala'")
+      val got = engine.run(SearchRequest(q, 10, gate = Some(isScala)))
       assert(got.map(_.docId) === expected.map(_.docId), s"query '$q' docIds")
       got.zip(expected).foreach { case (g, e) =>
         assert(g.score === e.score, s"'$q' score doc ${g.docId}") }
@@ -222,14 +223,15 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
       }
     }
     // edge filters: empty set, everything, and the distributed path
-    assert(engine.topKFiltered("posting reader", 10, "lang = 'zzz'") === Nil)
-    assert(engine.topKFiltered("posting reader", 10, "docId >= 0") ===
+    def gated(k: Int, pred: org.apache.spark.sql.Column) =
+      SearchRequest("posting reader", k, gate = Some(pred))
+    assert(engine.run(gated(10, expr("lang = 'zzz'"))) === Nil)
+    assert(engine.run(gated(10, expr("docId >= 0"))) ===
       engine.topK("posting reader", 10))
     val engDist = new QueryEngine(spark, indexRoot, driverPathMaxPostings = 1)
-    assert(engDist.topKFiltered("posting reader", 10, "lang = 'scala'") ===
-      engine.topKFiltered("posting reader", 10, "lang = 'scala'"))
-    // searchFiltered attaches the right metadata
-    val sf = engine.searchFiltered("posting reader", 5, "lang = 'scala'")
+    assert(engDist.run(gated(10, isScala)) === engine.run(gated(10, isScala)))
+    // a gated search(req) attaches the right metadata
+    val sf = engine.search(gated(5, isScala))
       .select("lang").as[String].collect()
     assert(sf.nonEmpty && sf.forall(_ == "scala"))
   }
@@ -262,8 +264,10 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     val deep = engine.topK(q, 30)
     assert(deep.size === 30)
     val p1 = engine.topK(q, 10)
-    val p2 = engine.topKAfter(q, 10, p1.last.score, p1.last.docId)
-    val p3 = engine.topKAfter(q, 10, p2.last.score, p2.last.docId)
+    def after(p: Seq[ScoredDoc]) =
+      engine.run(SearchRequest(q, 10, after = Some((p.last.score, p.last.docId))))
+    val p2 = after(p1)
+    val p3 = after(p2)
     assert(p1 ++ p2 ++ p3 === deep, "three pages must equal one deep query")
     // oracle agrees page-by-page
     val o1 = parityOracle.topK(q, 10)
@@ -271,7 +275,8 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     assert(p2 === o2)
     // after the very last hit: empty page, cleanly
     val all = engine.topK(q, 100000)
-    assert(engine.topKAfter(q, 10, all.last.score, all.last.docId) === Nil)
+    assert(engine.run(SearchRequest(q, 10,
+      after = Some((all.last.score, all.last.docId)))) === Nil)
   }
 
   test("NEAR/SLOP + MIN_MATCH PARITY: engine matches the oracle") {
@@ -308,14 +313,15 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     // minimum_should_match parity + boundary semantics
     val q3 = "posting reader segment"
     (1 to 4).foreach { m =>
-      val got = engine.topKMin(q3, 10, m)
+      val got = engine.run(SearchRequest(q3, 10, minMatch = m))
       val exp = parityOracle.topKMin(q3, 10, m)
       assert(got === exp, s"minMatch=$m")
     }
-    assert(engine.topKMin(q3, 10, 1) === engine.topK(q3, 10), "m=1 == plain")
-    assert(engine.topKMin(q3, 10, 4) === Nil, "m > clauses == empty")
+    assert(engine.run(SearchRequest(q3, 10, minMatch = 1)) ===
+      engine.topK(q3, 10), "m=1 == plain")
+    assert(engine.run(SearchRequest(q3, 10, minMatch = 4)) === Nil, "m > clauses == empty")
     // m counts CLAUSES: an unknown term is a clause that never matches
-    assert(engine.topKMin("posting zzznope", 10, 2) === Nil)
+    assert(engine.run(SearchRequest("posting zzznope", 10, minMatch = 2)) === Nil)
   }
 
   test("NEGATION PARITY: must_not queries match the oracle; pure-negative loud") {
@@ -451,6 +457,9 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     engine.topK(q, 3).foreach { h =>
       assert(eng2.explainScore(q, h.docId) === engine.explainScore(q, h.docId),
         s"explain breakdown diverged for doc ${h.docId}")
+      // highlight shares the point-lookup fork
+      assert(eng2.highlight(q, h.docId) === engine.highlight(q, h.docId),
+        s"highlight diverged for doc ${h.docId}")
     }
     // every round-6 surface takes the same fork — pin path-equivalence
     // for boost, fuzzy, negation, sloppy spans, min_match, search_after
@@ -461,17 +470,18 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     }
     assert(eng2.topK("posting^3 raeder~2 var*", 10) ===
       engine.topK("posting^3 raeder~2 var*", 10))
-    assert(eng2.topKMin("posting reader segment", 10, 2) ===
-      engine.topKMin("posting reader segment", 10, 2))
+    assert(eng2.run(SearchRequest("posting reader segment", 10, minMatch = 2)) ===
+      engine.run(SearchRequest("posting reader segment", 10, minMatch = 2)))
     val p1 = engine.topK("posting reader", 10)
-    assert(eng2.topKAfter("posting reader", 10, p1.last.score, p1.last.docId)
-      === engine.topKAfter("posting reader", 10, p1.last.score, p1.last.docId))
+    val page2 = SearchRequest("posting reader", 10,
+      after = Some((p1.last.score, p1.last.docId)))
+    assert(eng2.run(page2) === engine.run(page2))
     assert(eng2.matchingDocIds("posting -reader, tokn~1").collect().toSet ===
       engine.matchingDocIds("posting -reader, tokn~1").collect().toSet)
   }
 
   test("search() attaches correct metadata to hits") {
-    val df = engine.search(refQueries.head, 5)
+    val df = engine.search(SearchRequest(refQueries.head, 5))
     val rows = df.collect()
     assert(rows.length === 5)
     assert(df.columns.toSet === Set("docId", "repo", "path", "commit",
@@ -617,7 +627,7 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("search() with zero hits returns an empty, correctly-typed DataFrame") {
-    val df = engine.search("zzzznotaterm qqqqnotaterm", 5)
+    val df = engine.search(SearchRequest("zzzznotaterm qqqqnotaterm", 5))
     assert(df.count() === 0L)
     assert(df.columns.toSet === Set("docId", "repo", "path", "commit",
       "lang", "sha256", "docLen", "shard", "tableId", "score"))
@@ -755,7 +765,8 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     // path-sorted: the engine's display order tie-breaks equal scores by
     // internal docId, which the renumber intentionally reassigns
     def topSet(e: QueryEngine, q: String) =
-      e.search(q, 10).select("path", "score", "sha256").collect().toSeq
+      e.search(SearchRequest(q, 10)).select("path", "score", "sha256")
+        .collect().toSeq
         .sortBy(_.getString(0))
     val before = refQueries.take(5).map(q => topSet(eng0, q))
     val phraseBefore = ReferenceQueries.phraseQueries.map { q =>

@@ -1,8 +1,9 @@
 package graft
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, NaiveIndex, QueryEngine, SegmentMerge}
+import graft.index.{IndexBuilder, NaiveIndex, QueryEngine, SearchRequest, SegmentMerge}
 import graft.table.IcebergLite
+import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-based lifecycle fuzz: a seeded-random interleaving of every
@@ -124,7 +125,8 @@ class LifecycleFuzzSpec extends AnyFunSuite with SparkSessionFixture {
       }
       // filtered search must track renumbering too (rebase rewrites the
       // docIds the filter set is built from)
-      val gotF = eng.topKFiltered("posting reader", 10, "docId % 2 = 0")
+      val gotF = eng.run(SearchRequest("posting reader", 10,
+        gate = Some(expr("docId % 2 = 0"))))
       val expF = oracle.topKFiltered("posting reader", 10, _ % 2 == 0)
       assert(gotF.map(_.docId) == expF.map(_.docId), s"$step: filtered")
       gotF.zip(expF).foreach { case (g, e) =>
@@ -143,7 +145,7 @@ class LifecycleFuzzSpec extends AnyFunSuite with SparkSessionFixture {
       assert(gotFq.map(_.docId) == expFq.map(_.docId), s"$step: fieldbool")
       gotFq.zip(expFq).foreach { case (g, e) =>
         assert(g.score == e.score, s"$step: fieldbool scores") }
-      val gotQs = eng.topKQS("posting reader lang:scala", 10)
+      val gotQs = eng.run(SearchRequest.queryString("posting reader lang:scala", 10))
       val expQs = oracle.topKFiltered("posting reader", 10,
         id => langOf(id) == "scala")
       assert(gotQs.map(_.docId) == expQs.map(_.docId), s"$step: fieldscored")
@@ -158,7 +160,7 @@ class LifecycleFuzzSpec extends AnyFunSuite with SparkSessionFixture {
         assert(g.score == e.score, s"$step: boosted scores") }
       if (gotB.nonEmpty) {
         val c = gotB.last
-        val gotP = eng.topKAfter(bq, 10, c.score, c.docId)
+        val gotP = eng.run(SearchRequest(bq, 10, after = Some((c.score, c.docId))))
         val expP = oracle.topKAfter(bq, 10, c.score, c.docId)
         assert(gotP.map(_.docId) == expP.map(_.docId), s"$step: page2")
       }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, QueryEngine}
+import graft.index.{IndexBuilder, QueryEngine, SearchRequest}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -45,6 +45,29 @@ class MatchTopKSpec extends AnyFunSuite with SparkSessionFixture {
     assert(rows.length <= eng.booleanTopK("def return, val match", 10).size)
   }
 
+  test("match_topk: a field-only scored query rejects loudly, filter or not") {
+    root // build the index on the shared session first
+    val old = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val s2 = org.apache.spark.sql.SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new GraftExtensions())
+        .getOrCreate()
+      Seq(s"match_topk('$root', 'lang:en', 10)",
+        s"match_topk('$root', 'lang:en', 10, false, 'docLen >= 0')").foreach { tvf =>
+        val e = intercept[Exception](s2.sql(s"SELECT * FROM $tvf").collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("field-only")),
+          s"$tvf: $e")
+      }
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(old)
+      org.apache.spark.sql.SparkSession.setActiveSession(old)
+    }
+  }
+
   test("SQL surface: SELECT ... FROM match_topk(...) resolves via GraftExtensions") {
     root // build the index on the shared session first
     val old = spark
@@ -85,8 +108,9 @@ class MatchTopKSpec extends AnyFunSuite with SparkSessionFixture {
            |match_topk('$root', '$q', 10, false, 'lang = ''scala''')"""
           .stripMargin).collect()
       assert(filtRows.nonEmpty && filtRows.forall(_.getString(1) == "scala"))
+      val isScala = org.apache.spark.sql.functions.expr("lang = 'scala'")
       val engF = new QueryEngine(s2, root)
-        .topKFiltered(q, 10, "lang = 'scala'").map(_.docId)
+        .run(SearchRequest(q, 10, gate = Some(isScala))).map(_.docId)
       assert(filtRows.length === engF.size)
       // filter + boolMode is rejected loudly (boolean filters compose
       // through WHERE match(...) instead)

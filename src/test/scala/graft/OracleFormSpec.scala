@@ -91,7 +91,8 @@ class OracleFormSpec extends AnyFunSuite {
     val (residual, fs) = graft.index.QueryParser
       .splitFieldFilters(graft.ops.SearchOps.QSFieldQuery)
     assert(residual === "spark query join")
-    assert(graft.index.QueryParser.compileFields(fs) ===
-      "(tableId >= 100 AND tableId <= 400) AND lang = 'en'")
+    import org.apache.spark.sql.functions.col
+    assert(graft.index.QueryParser.compileFields(fs) ==
+      (col("tableId") >= 100L && col("tableId") <= 400L && col("lang") === "en"))
   }
 }

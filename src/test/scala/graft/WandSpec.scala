@@ -775,7 +775,7 @@ class WandSpec extends AnyFunSuite {
 
   test("COMPOSED: filtered + search_after + min_match together == exhaustive") {
     // all three are WAND-evaluation gates; the r7 plumbing exposes them
-    // together on topKFiltered — verify the composition, not just each
+    // together on one SearchRequest — verify the composition, not just each
     val rnd = new Random(457)
     var effective = 0
     (1 to 40).foreach { round =>

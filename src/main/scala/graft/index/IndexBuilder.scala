@@ -38,9 +38,6 @@ final case class AnalyzedDoc(docId: Long, repo: String, path: String,
 final case class TokenPosting(shard: Int, term: String, docId: Long, tf: Int,
                               dl: Int, pos: Array[Byte])
 
-/** Skip entry as stored in parquet (mirror of Codec.Skip). */
-final case class SkipRow(firstDoc: Long, lastDoc: Long, maxTf: Int, minDl: Int)
-
 /** One stored posting (sub-)list: the postings of `term` within one
   * document shard, as compressed blocks + skip entries. Document-sharded
   * posting lists bound every shuffle group by the shard size — the hot-term
@@ -52,13 +49,13 @@ final case class SkipRow(firstDoc: Long, lastDoc: Long, maxTf: Int, minDl: Int)
   * split, expressed as parquet column pruning) — BM25/boolean scoring
   * never pays the position bytes. */
 final case class PostingRow(shard: Int, term: String, df: Long, bytes: Long,
-                            blocks: Seq[Array[Byte]], skips: Seq[SkipRow])
+                            blocks: Seq[Array[Byte]], skips: Seq[Skip])
 
 /** The FULL stored row: the scoring columns plus `posBlocks`, one
   * position stream per 128-posting block (Codec.encodePositions; empty
   * when the build disabled positions). Phrase queries read this shape. */
 final case class PostingRowPos(shard: Int, term: String, df: Long, bytes: Long,
-                               blocks: Seq[Array[Byte]], skips: Seq[SkipRow],
+                               blocks: Seq[Array[Byte]], skips: Seq[Skip],
                                posBlocks: Seq[Array[Byte]])
 
 object PostingRow {
@@ -87,10 +84,11 @@ final case class BuildReport(manifest: Manifest, segment: Option[SegmentInfo],
  *    shard (delta-friendly), globally unique across shards and ingest
  *    batches, deterministic under resume (a shard is always built whole,
  *    in exactly one pass). Merges therefore never remap docIDs.
- *  - One analysis pass (persisted), one shuffle to (shard, term) for the
- *    postings build. The shuffle key contains the shard, so hot terms are
- *    pre-salted; group building streams via sortWithinPartitions +
- *    mapPartitions run detection — no unbounded in-memory groups.
+ *  - One analysis pass (persisted); the postings build is map-only over
+ *    its partitions (partitionId == shard), so hot terms are pre-salted
+ *    by shard. Runs are built per (term, shard) either by hash
+ *    accumulation within a postings budget or by sortWithinPartitions +
+ *    streaming run detection — no unbounded in-memory groups.
  *  - Resume: per-shard checkpoint records; a re-run filters completed
  *    shards out BEFORE the scan (predicate on the same hash expression,
  *    pushable) and appends a new immutable segment.
@@ -227,7 +225,7 @@ object IndexBuilder {
       }.toSeq
     PostingRowPos(shard, term, docs.length,
       enc.blocks.iterator.map(_.length.toLong).sum, enc.blocks.toSeq,
-      enc.skips.toSeq.map(s => SkipRow(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)),
+      enc.skips.toSeq,
       posBlocks)
   }
 
@@ -263,10 +261,11 @@ object IndexBuilder {
     * postings in an open-addressed (shard, term) map instead of requiring
     * a sorted stream — correct because the analyze stage emits documents
     * in ascending docId order, so each key's postings arrive ascending
-    * (guarded per key). Emits runs sorted by (term, shard); emission
-    * order is immaterial to the stored bytes anyway (the reduce side
-    * re-sorts by (term, shard) for the parquet layout), and the encode
-    * path is [[encodeRun]], shared with [[buildRuns]] — identical bytes.
+    * (guarded per key). Emits runs sorted by (term, shard): the postings
+    * job is map-only, so this emission order IS the stored term-major
+    * layout that the query path's parquet min/max pruning on `term`
+    * relies on. The encode path is [[encodeRun]], shared with
+    * [[buildRuns]] — identical bytes.
     *
     * MEMORY: holds the whole partition's postings (~26 B + pos bytes per
     * posting) — the SORTED path bounds memory to one run and spills, so

@@ -1,6 +1,5 @@
 package graft.index
 
-import graft.analyze.CodeAnalyzer
 import graft.table.IcebergLite
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
@@ -454,18 +453,27 @@ final class QueryEngine(spark: SparkSession, val root: String,
     }
   }
 
+  /** The ONE term resolver of every scored read (run, explainScore,
+    * highlight): the scored query's terms in the frozen sum order, with
+    * `word*` / `word~n` expanded (ranked, capped) in place, filtered to
+    * the dictionary; their global dfs; and the `^boost` weights of the
+    * boosted terms (only those ship to the cursors). */
+  private def scoredTerms(query: String)
+      : (Seq[String], Map[String, Long], Map[String, Double]) = {
+    val weighted = QueryParser
+      .resolveScoredW(QueryParser.parseScored(query), expandPrefix(_)._1,
+        expandFuzzy(_, _)._1)
+    val dfs = termDfs(weighted.map(_._1))
+    (weighted.map(_._1).filter(dfs.contains), dfs,
+      weighted.filter(_._2 != 1.0).toMap)
+  }
+
   /** Scored shard walk: WAND top-k per shard; the request's gate is gate
     * 0, so a shard it allows nothing in scores nothing. None when no
     * query term is in the dictionary. */
   private def scoredWalk(req: SearchRequest): Option[Shards[ScoredDoc]] = {
-    val weighted = QueryParser
-      .resolveScoredW(QueryParser.parseScored(req.query), expandPrefix(_)._1,
-        expandFuzzy(_, _)._1)
-    val dfs = termDfs(weighted.map(_._1))
-    val present = weighted.map(_._1).filter(dfs.contains)
+    val (present, dfs, wMap) = scoredTerms(req.query)
     if (present.isEmpty) return None
-    val wMap: Map[String, Double] =
-      weighted.filter(_._2 != 1.0).toMap // only boosted terms ship
     val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
     val (bm, k, after, minMatch) = (bm25, req.k, req.after, req.minMatch)
     val gate = req.gate.map(_ => 0)
@@ -610,15 +618,15 @@ final class QueryEngine(spark: SparkSession, val root: String,
   }
 
   /** The ES `/_explain` analogue: the per-term BM25 breakdown of one
-    * document's score against a disjunctive query. Contributions are
-    * listed in QUERY TERM ORDER and sum (in that order) EXACTLY to the
-    * engine's score for the doc — the frozen float order the whole
-    * parity story rests on, now inspectable per term. A point lookup:
-    * no scoring pass. */
+    * document's score against a scored query (terms resolved as `run`
+    * resolves them: expansions in place, `^boost` applied). Contributions
+    * are listed in QUERY TERM ORDER and sum (in that order) EXACTLY to
+    * the engine's score for the doc — the frozen float order the whole
+    * parity story rests on, now inspectable per term. Each contribution
+    * is the scoring cursor's own (boosted idf); the reported idf is the
+    * unboosted `bm25.idf(df)`. A point lookup: no scoring pass. */
   def explainScore(query: String, docId: Long): Seq[ScoreExplain] = {
-    val terms = CodeAnalyzer.analyzeQuery(query)
-    val dfs = termDfs(terms)
-    val present = terms.filter(dfs.contains)
+    val (present, dfs, wMap) = scoredTerms(query)
     if (present.isEmpty) return Nil
     val rows = postings
       .where(col("term").isin(present: _*) &&
@@ -626,12 +634,11 @@ final class QueryEngine(spark: SparkSession, val root: String,
       .as[PostingRow]
     val bm = bm25
     val hits = pointLookup(rows, docId)(r => (r.shard, r.term),
-      (t, rs) => QueryEngine.termCursors(rs, bm, dfs)(t),
-      c => (c.curTf, c.curDl))
+      (t, rs) => QueryEngine.termCursors(rs, bm, dfs, wMap)(t),
+      c => (c.curTf, c.curDl, c.curScore))
     present.flatMap { t =>
-      hits.get(t).map { case (tf, dl) =>
-        val idf = bm25.idf(dfs(t))
-        ScoreExplain(t, dfs(t), idf, tf, dl, bm25.score(idf, tf, dl))
+      hits.get(t).map { case (tf, dl, contribution) =>
+        ScoreExplain(t, dfs(t), bm25.idf(dfs(t)), tf, dl, contribution)
       }
     }
   }
@@ -646,11 +653,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * volume, ~2.7 s, to one shard's, ~flat in corpus size). */
   def highlight(query: String, docId: Long): Seq[HighlightTerm] = {
     requirePositions()
-    val terms = QueryParser
-      .resolveScored(QueryParser.parseScored(query), expandPrefix(_)._1,
-        expandFuzzy(_, _)._1)
-    val dfs = termDfs(terms)
-    val present = terms.filter(dfs.contains)
+    val (present, dfs, _) = scoredTerms(query)
     if (present.isEmpty) return Nil
     val rows = postingsFull
       .where(col("term").isin(present: _*) &&

@@ -512,12 +512,4 @@ object QueryParser {
     }
     out.result()
   }
-
-  /** Terms-only view of resolveScoredW (paths that don't score). */
-  def resolveScored(atoms: Seq[QueryAtom],
-                    expand: String => Seq[String],
-                    expandFuzzy: (String, Int) => Seq[String] =
-                      (_, _) => throw new IllegalArgumentException(
-                        "fuzzy atoms are not supported on this path"))
-      : Seq[String] = resolveScoredW(atoms, expand, expandFuzzy).map(_._1)
 }

@@ -136,8 +136,7 @@ object SegmentMerge {
         val mp = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         maps.foreach { case (_, o, nw) => mp.put(o, nw) }
         rows.map { r =>
-          val enc = EncodedPostings(r.blocks.toArray, r.skips.toArray
-            .map(s => Skip(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)), r.df)
+          val enc = EncodedPostings(r.blocks.toArray, r.skips.toArray, r.df)
           // positions survive a rebase untouched: the remap is
           // order-preserving per shard, so posting order — and with it
           // the block layout — is unchanged
@@ -159,7 +158,7 @@ object SegmentMerge {
               .map(g => Codec.encodePositions(g)).toSeq
           PostingRowPos(r.shard, r.term, r.df,
             e2.blocks.iterator.map(_.length.toLong).sum, e2.blocks.toSeq,
-            e2.skips.toSeq.map(s => SkipRow(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)),
+            e2.skips.toSeq,
             posOut)
         }
     }
@@ -244,8 +243,7 @@ object SegmentMerge {
             val hasPos = subs.forall(_.posBlocks.nonEmpty)
             var df = 0L
             subs.foreach { r =>
-              val enc = EncodedPostings(r.blocks.toArray, r.skips.toArray
-                .map(s => Skip(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)), r.df)
+              val enc = EncodedPostings(r.blocks.toArray, r.skips.toArray, r.df)
               if (hasPos) {
                 val (d, t, l, ps) = Codec.decodeAllWithPositions(enc, r.posBlocks)
                 docs ++= d; tfs ++= t; dls ++= l; poss ++= ps
@@ -262,7 +260,7 @@ object SegmentMerge {
                 .map(g => Codec.encodePositions(g.toArray)).toSeq
             PostingRowPos(head.shard, head.term, df,
               enc.blocks.iterator.map(_.length.toLong).sum, enc.blocks.toSeq,
-              enc.skips.toSeq.map(s => SkipRow(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)),
+              enc.skips.toSeq,
               posOut)
           }
         }

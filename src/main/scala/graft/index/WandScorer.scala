@@ -167,11 +167,11 @@ final class UnionCursor(members: Seq[PostingCursor]) extends DocCursor {
 }
 
 final class PostingCursor(val term: String, val idf: Double,
-                          subLists: Seq[(Seq[Array[Byte]], Seq[SkipRow], Seq[Array[Byte]])],
+                          subLists: Seq[(Seq[Array[Byte]], Seq[Skip], Seq[Array[Byte]])],
                           bm25: Bm25) extends DocCursor {
   // flatten: global block arrays, ordered by firstDoc
   private val blocks: Array[Array[Byte]] = subLists.iterator.flatMap(_._1).toArray
-  private val skips: Array[SkipRow] = subLists.iterator.flatMap(_._2).toArray
+  private val skips: Array[Skip] = subLists.iterator.flatMap(_._2).toArray
   // position streams, parallel to blocks; empty when the read path took
   // the scoring projection (or the index was built positions=false)
   private val posBlocks: Array[Array[Byte]] = subLists.iterator.flatMap(_._3).toArray

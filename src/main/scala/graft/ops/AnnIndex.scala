@@ -51,6 +51,9 @@ import org.apache.spark.sql.functions._
 object AnnIndex {
   import Tables._
 
+  private lazy val log =
+    org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+
   /** ANN store FORMAT version: bump when planes/quantizer/layout
     * semantics change, so stores built by an older engine are rebuilt
     * instead of reopened (the root embeds it). v2: manifest-resolved
@@ -351,7 +354,7 @@ object AnnIndex {
           }
       }.toSeq
       swept.foreach { f =>
-        System.err.println(s"annGcStores: sweeping superseded store " +
+        log.warn(s"annGcStores: sweeping superseded store " +
           s"${f.getPath} (stale content/format for source $dir; " +
           s"current root $root)")
         org.apache.commons.io.FileUtils.deleteQuietly(f)

@@ -207,7 +207,7 @@ object MatchFilterRewrite
         // the re-prune is an optimization on an already-correct plan —
         // never let it kill the query (same never-fail invariant as
         // rewriteOne)
-        System.err.println(
+        log.warn(
           s"matchRewrite: re-prune pass failed, keeping unpruned plan: ${e.getMessage}")
         rewritten
     }
@@ -265,7 +265,7 @@ object MatchFilterRewrite
     case scala.util.control.NonFatal(e) =>
       // an optimizer rule must never kill a query the row-level
       // predicate can answer; log and fall back
-      System.err.println(s"matchRewrite: falling back to row-level eval " +
+      log.warn(s"matchRewrite: falling back to row-level eval " +
         s"for match(${attr.name}, ...): ${e.getMessage}")
       None
   }

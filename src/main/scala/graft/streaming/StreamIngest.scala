@@ -25,6 +25,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
  *    (/root/reference/sentiment.py:54,158); the watermark bounds ours.
  */
 object StreamIngest {
+  private lazy val log =
+    org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
 
   /** Continuous index ingest from a directory of arriving parquet files
     * with the corpus schema. Returns the started query. */
@@ -59,7 +61,7 @@ object StreamIngest {
     * of the store root). The checkpoint and the store form a PAIR: deleting
     * the checkpoint while keeping the store restarts batch numbering
     * from 0, and already-committed low ids are skipped by lineage — such
-    * skips are surfaced on stderr so a lost-checkpoint restart cannot
+    * skips are logged at WARN so a lost-checkpoint restart cannot
     * silently drop data that arrived after the original batches. */
   def annStream(spark: SparkSession, sourceDir: String, datasetDir: String,
                 checkpointDir: String,
@@ -78,7 +80,7 @@ object StreamIngest {
         val appended = graft.ops.AnnIndex.append(batch.sparkSession,
           datasetDir, batch, batchId = batchId + 1, p = params)
         if (!appended)
-          System.err.println(s"annStream: batch ${batchId + 1} already " +
+          log.warn(s"annStream: batch ${batchId + 1} already " +
             s"committed in the ANN store for $datasetDir — skipped (expected " +
             "on re-delivery; if the checkpoint was deleted, rows in this " +
             "batch that postdate the original commit are NOT ingested)")

@@ -40,7 +40,7 @@ object AnnScale {
       s"lshBits=${P.lshBits} (${1 << P.lshBits} partitions, " +
       s"~${approxStoreBytes / (1L << P.lshBits) / (1 << 20)} MB each)")
 
-    val work = "/root/repo/target/graftwork"
+    val work = graft.ops.SearchOps.workDir
     val ds = s"$work/annscale-dataset"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ds))
     def timed[A](name: String)(f: => A): A = {

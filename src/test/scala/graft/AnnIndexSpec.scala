@@ -97,18 +97,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSessionFixture {
       "ensure() must leave the stale store alone (no deletes on the read path)")
     // the EXPLICIT maintenance sweep reclaims it, loudly (a corpus-sized
     // copy per regeneration would otherwise leak forever)
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val saved = System.err
-    val swept = try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      AnnIndex.gcStores(dir)
-    } finally System.setErr(saved)
+    val (swept, logged) =
+      SparkSessionFixture.warnings("graft.ops.AnnIndex")(AnnIndex.gcStores(dir))
     assert(swept == Seq(root1),
       s"gcStores must report the stale root it removed, got $swept")
     assert(!new java.io.File(root1).exists(),
       "stale store for the regenerated dataset must be deleted by gcStores")
-    assert(errBuf.toString.contains(root1) &&
-      errBuf.toString.contains("sweeping superseded store"),
+    assert(logged.contains(root1) &&
+      logged.contains("sweeping superseded store"),
       "every swept root must be logged")
   }
 

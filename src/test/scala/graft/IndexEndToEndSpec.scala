@@ -404,8 +404,8 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
         val got = engine.highlight(q, id)
         // expected terms: resolved query terms present in the doc, in
         // resolution order; positions = the analyzer's emission indices
-        val resolved = QueryParser.resolveScored(
-          QueryParser.parseScored(q), p => engine.expandPrefix(p)._1)
+        val resolved = QueryParser.resolveScoredW(
+          QueryParser.parseScored(q), p => engine.expandPrefix(p)._1).map(_._1)
         val exp = resolved.flatMap(t =>
           posMap.get(t).map(ps => (t, ps.toSeq)))
         assert(got.map(h => (h.term, h.positions)) === exp,
@@ -443,6 +443,24 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
     // a doc that matches none of the terms, and a term-less query: empty
     assert(engine.explainScore(q, Long.MaxValue).isEmpty)
     assert(engine.explainScore("zzznope qqqnope", hits.head.docId).isEmpty)
+    // boosts and prefix/fuzzy expansions resolve as topK resolves them:
+    // the breakdown lists the expanded terms and each contribution uses
+    // the boosted idf the scoring cursor uses, so the sum still matches
+    Seq("posting^2 reader", "post* merge", "raeder~2 posting").foreach { bq =>
+      val bHits = engine.topK(bq, 5)
+      assert(bHits.nonEmpty, s"query '$bq'")
+      bHits.foreach { h =>
+        val ex = engine.explainScore(bq, h.docId)
+        val sum = ex.foldLeft(0.0)((a, e) => a + e.contribution)
+        assert(sum == h.score, s"'$bq' doc ${h.docId}: $sum != ${h.score}\n$ex")
+        ex.foreach { e =>
+          assert(e.idf == engine.bm25.idf(e.df))
+          val boost = if (bq.startsWith(e.term + "^2")) 2.0 else 1.0
+          assert(e.contribution == engine.bm25.score(e.idf * boost, e.tf, e.dl),
+            s"'$bq' term ${e.term}")
+        }
+      }
+    }
   }
 
   test("distributed scorer path agrees with the driver fast path") {

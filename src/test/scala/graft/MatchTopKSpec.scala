@@ -570,17 +570,14 @@ class MatchTopKSpec extends AnyFunSuite with SparkSessionFixture {
         .createOrReplaceTempView("corruptdocs")
       val dfC = spark.sql(
         s"SELECT doc_id FROM corruptdocs WHERE match(text, '$q')")
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val oldErr = System.err
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      val optC = try dfC.queryExecution.optimizedPlan
-                 finally System.setErr(oldErr)
+      val (optC, logged) = SparkSessionFixture.warnings(
+        "graft.plans.MatchFilterRewrite")(dfC.queryExecution.optimizedPlan)
       assert(optC.exists(_.expressions.exists(
           _.exists(_.isInstanceOf[graft.plans.MatchFilter]))),
         s"corrupt registry file must leave the row-level predicate:\n$optC")
       assert(!optC.exists(_.isInstanceOf[MatchIds]))
-      assert(errBuf.toString.contains("falling back to row-level eval"),
-        s"fallback must be logged, stderr was: ${errBuf.toString}")
+      assert(logged.contains("falling back to row-level eval"),
+        s"fallback must be logged at WARN, the log was: $logged")
       val gotC = dfC.collect().map(_.getLong(0)).sorted
       val expC = graft.ops.SearchOps.matchTableIds(spark, sf, q)
         .collect().map(_.getLong(0)).sorted

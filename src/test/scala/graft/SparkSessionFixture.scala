@@ -22,4 +22,27 @@ object SparkSessionFixture {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body`'s result and the WARN-or-higher messages logged under
+    * `logger` while it ran (the suites run at ERROR, so the logger's
+    * level is lowered to WARN for the duration). */
+  def warnings[T](logger: String)(body: => T): (T, String) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lg = LogManager.getLogger(logger).asInstanceOf[Logger]
+    val out = new StringBuffer
+    val app = new AbstractAppender(s"capture-$logger", null, null, true,
+        Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit =
+        out.append(e.getMessage.getFormattedMessage).append('\n')
+    }
+    app.start()
+    val saved = lg.getLevel
+    lg.addAppender(app)
+    lg.setLevel(Level.WARN)
+    try (body, out.toString)
+    finally { lg.removeAppender(app); lg.setLevel(saved); app.stop() }
+  }
 }

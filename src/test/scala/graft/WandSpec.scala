@@ -40,7 +40,7 @@ class WandSpec extends AnyFunSuite {
         val tfs = pl.map(_._2)
         val dls = pl.map(p => oracle.docLen(p._1))
         val enc = Codec.encode(docs, tfs, dls, blockSize = 8) // tiny blocks: exercise skips
-        val skips = enc.skips.map(s => SkipRow(s.firstDoc, s.lastDoc, s.maxTf, s.minDl)).toSeq
+        val skips = enc.skips.toSeq
         val posBlocks: Seq[Array[Byte]] =
           if (corpus.isEmpty) Nil
           else docs.grouped(8)
@@ -202,9 +202,9 @@ class WandSpec extends AnyFunSuite {
       val k = 1 + rnd.nextInt(10)
       val expected = oracle.topK(query, k)
       // engine-style resolution: atoms -> ranked capped expansion -> WAND
-      val terms = QueryParser.resolveScored(
+      val terms = QueryParser.resolveScoredW(
         QueryParser.parseScored(query), oracle.expandPrefix(_))
-        .filter(oracle.postings.contains)
+        .map(_._1).filter(oracle.postings.contains)
       if (terms.nonEmpty) effective += 1
       val got = WandScorer.topK(terms, cursorsFor(oracle, terms), k)
       assert(got.map(_.docId) === expected.map(_.docId), s"round $round docIds")
@@ -355,10 +355,10 @@ class WandSpec extends AnyFunSuite {
         "hash~ term")(round % 4)
       val k = 1 + rnd.nextInt(10)
       val expected = oracle.topK(query, k)
-      val terms = QueryParser.resolveScored(
+      val terms = QueryParser.resolveScoredW(
         QueryParser.parseScored(query),
         oracle.expandPrefix(_), oracle.expandFuzzy(_, _))
-        .filter(oracle.postings.contains)
+        .map(_._1).filter(oracle.postings.contains)
       if (terms.nonEmpty) effective += 1
       val got = WandScorer.topK(terms, cursorsFor(oracle, terms), k)
       assert(got.map(_.docId) === expected.map(_.docId), s"round $round docIds")

@@ -56,7 +56,10 @@ final case class PostingRow(shard: Int, term: String, df: Long, bytes: Long,
   * when the build disabled positions). Phrase queries read this shape. */
 final case class PostingRowPos(shard: Int, term: String, df: Long, bytes: Long,
                                blocks: Seq[Array[Byte]], skips: Seq[Skip],
-                               posBlocks: Seq[Array[Byte]])
+                               posBlocks: Seq[Array[Byte]]) {
+  /** This row in the scoring projection (posBlocks dropped). */
+  def scoring: PostingRow = PostingRow(shard, term, df, bytes, blocks, skips)
+}
 
 object PostingRow {
   /** The scoring-projection column list (everything but posBlocks). */
@@ -111,21 +114,22 @@ object IndexBuilder {
     * MatchRegistry.IndexRoot / direct QueryEngine / SegmentMerge use is
     * what this protects.) An EMPTY manifest (no segments yet) passes —
     * there is nothing on disk whose layout could be stale. */
-  def requireFormat(m: graft.table.Manifest, root: String): Unit =
+  def requireFormat(m: graft.table.Manifest, root: String,
+                    conf: org.apache.hadoop.conf.Configuration): Unit =
     if (m.segments.nonEmpty && !m.format.contains(FormatVersion)) {
       // UNSTAMPED manifests get one more chance (ADVICE r6): manifests
       // written by the first v4-layout engine revision predate the format
       // stamp, and forcing those fully-compatible durable roots through a
       // rebuild punishes exactly the users the stamp exists to protect.
-      // Sniff every segment's parquet footers for the v4 columns
-      // (postings.posBlocks + docmeta.tableId); a compatible root is
-      // accepted as v4 — the next writer commit stamps it (build/merge
+      // Sniff the footer of every data file of every segment for the v4
+      // columns (postings.posBlocks + docmeta.tableId); a compatible root
+      // is accepted as v4 — the next writer commit stamps it (build/merge
       // always write format=FormatVersion). A manifest stamped with a
-      // DIFFERENT version, or a root whose physical schema lacks the v4
+      // DIFFERENT version, or a root any of whose files lacks the v4
       // columns, still fails with the rebuild message.
       val compatible = m.format.isEmpty && m.segments.forall(s =>
-        parquetHasColumn(s"$root/${s.name}/postings", "posBlocks") &&
-          parquetHasColumn(s"$root/${s.name}/docmeta", "tableId"))
+        PostingReader.everyFileHas(s"$root/${s.name}/postings", "posBlocks", conf) &&
+          PostingReader.everyFileHas(s"$root/${s.name}/docmeta", "tableId", conf))
       if (!compatible)
         throw new IllegalStateException(
           s"index at $root has on-disk format ${m.format.getOrElse("<pre-4, unstamped>")} " +
@@ -133,20 +137,20 @@ object IndexBuilder {
             "(drop the root and re-run IndexBuilder, or point at a fresh root)")
     }
 
-  /** Does the first parquet file under `dir` carry a top-level column
-    * named `col`? Direct footer read (one file, metadata only) — the
-    * format sniff above runs where no SparkSession is in scope. */
-  private def parquetHasColumn(dir: String, col: String): Boolean = try {
-    val f = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .find(f => f.getName.endsWith(".parquet") && f.length() > 0)
-      .getOrElse(return false)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema.containsField(col)
-    finally r.close()
-  } catch { case scala.util.control.NonFatal(_) => false }
+  /** One numeric metric of a build pass's Observation. Null is the empty
+    * pass (sum/max over no rows) and reads 0; a missing key or a value of
+    * another type fails naming the key — read as 0 it would make every
+    * budget check downstream of it pass. */
+  private[graft] def obsLong(metrics: Map[String, Any], k: String): Long =
+    metrics.get(k) match {
+      case Some(null) => 0L
+      case Some(l: java.lang.Long) => l.longValue
+      case Some(i: java.lang.Integer) => i.longValue
+      case Some(v) => throw new IllegalStateException(
+        s"observation metric '$k' is a ${v.getClass.getName}, not a number")
+      case None => throw new IllegalStateException(
+        s"observation metric '$k' is missing (observed: ${metrics.keys.mkString(", ")})")
+    }
 
   /** Spark SQL expression equal to the shard id a row lands on. */
   def shardExpr(numShards: Int) =
@@ -383,7 +387,7 @@ object IndexBuilder {
     // appending a v4 segment to a pre-v4 root would stamp the merged
     // manifest v4 while old segments still lack posBlocks/tableId — gate
     // the resume/append path the same way readers are gated
-    requireFormat(prev, root)
+    requireFormat(prev, root, spark.sparkContext.hadoopConfiguration)
     require(prev.segments.isEmpty || prev.numShards == numShards,
       s"index at $root was created with numShards=${prev.numShards}")
     // resume=false exists for streaming re-delivery simulation (batch > 0,
@@ -506,11 +510,9 @@ object IndexBuilder {
     val anObs = org.apache.spark.sql.Observation(s"analyze-$segName")
     analyzed.observe(anObs, sum("docLen").as("tokens"), max("docLen").as("maxDl"))
       .write.format("noop").mode("overwrite").save()
-    def obsLong(k: String): Long = Option(anObs.get(k))
-      .collect { case l: java.lang.Long => l.longValue
-                 case i: java.lang.Integer => i.longValue }.getOrElse(0L)
-    val passTokens = obsLong("tokens")
-    val passMaxDl = obsLong("maxDl")
+    val anMetrics = anObs.get
+    val passTokens = obsLong(anMetrics, "tokens")
+    val passMaxDl = obsLong(anMetrics, "maxDl")
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration

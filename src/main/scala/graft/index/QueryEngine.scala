@@ -1,7 +1,8 @@
 package graft.index
 
 import graft.table.IcebergLite
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, GraftBridge,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,12 +22,15 @@ import org.apache.spark.sql.functions._
  *      planned as TakeOrderedAndProject (the ES "reduce phase")
  *   -> docmeta fetch for the k winners only (IN-filter, pushed down).
  *
- * A driver fast path handles small posting volumes (one job, no shuffle;
- * wins below ~0.5M postings) — the distributed per-shard path is the
- * 10^12-doc route and already wins at 1M docs (measured p95 0.30s vs
- * 5.7s driver-side). Selection is automatic from the dictionary's df
- * totals, in one place: the per-shard executor (point lookups have their
- * own, on the pruned scan's volume).
+ * A driver fast path handles small posting volumes (below ~0.5M
+ * postings) with no Spark job: the query's rows come straight from the
+ * postings files' held-open footers (PostingReader), so an ungated query
+ * plans no scan and schedules nothing, and a gated one runs only its gate
+ * collect. The distributed per-shard path is the 10^12-doc route and
+ * already wins at 1M docs (measured p95 0.30s vs 5.7s driver-side).
+ * Selection is automatic from the dictionary's df totals, in one place:
+ * the per-shard executor (point lookups have their own, on the pruned
+ * scan's volume).
  */
 object QueryEngine {
   /** The ONE place per-term cursors are built from posting rows (driver
@@ -267,7 +271,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
   // loud gate: a pre-v4 durable root (no posBlocks/tableId parquet
   // columns) must fail HERE with a rebuild message, not deep inside the
   // first query with an unresolved-column AnalysisException
-  IndexBuilder.requireFormat(manifest, root)
+  IndexBuilder.requireFormat(manifest, root, spark.sparkContext.hadoopConfiguration)
   val bm25: Bm25 = Bm25(manifest.numDocs, manifest.avgdl)
 
   private val postingPaths = manifest.segments.map(s => s"$root/${s.name}/postings")
@@ -283,6 +287,10 @@ final class QueryEngine(spark: SparkSession, val root: String,
   lazy val postings: DataFrame = postingsFull.select(
     PostingRow.LiteCols.map(col): _*)
   lazy val docmeta: DataFrame = spark.read.parquet(docmetaPaths: _*)
+  /** The same postings files, footers held open: the driver path's
+    * job-free read (opened by the first driver-path query). */
+  @transient private lazy val postingReader =
+    new PostingReader(postingPaths, spark.sessionState.newHadoopConf())
 
   /** Every committed segment was built with positions — the phrase-query
     * precondition. */
@@ -407,25 +415,29 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
   /** The ONE driver-vs-distributed fork of every posting walk: `walk`
     * runs once per document shard over that shard's rows and the
-    * shard's (gate index -> sorted allowed docIds). Each gate is a
-    * docmeta predicate scanned with the predicate pushed down. Without
-    * gates the plan has no cogroup. With gates, one job collects at most
-    * limit+1 allowed ids (instead of count-then-collect): within the
-    * limit the array IS every allowed id; over it, the walk falls through
-    * to the distributed path, where gates cogroup with the postings by
-    * shard and are never collected to the driver. */
-  private def perShard[P, R: Encoder](rows: Dataset[P], shardOf: P => Int,
-      volume: Long, gates: Seq[Column])
+    * shard's (gate index -> sorted allowed docIds). The driver path takes
+    * its rows from `local` (the held-open postings files, no job), the
+    * distributed path from the `rows` scan; each is built only on its own
+    * path. Each gate is a docmeta predicate scanned with the predicate
+    * pushed down. Without gates the plan has no cogroup. With gates, one
+    * job collects at most limit+1 allowed ids (instead of
+    * count-then-collect): within the limit the array IS every allowed id;
+    * over it, the walk falls through to the distributed path, where gates
+    * cogroup with the postings by shard and are never collected to the
+    * driver. */
+  private def perShard[P, R: Encoder](rows: => Dataset[P], local: => Seq[P],
+      shardOf: P => Int, volume: Long, gates: Seq[Column])
       (walk: (Seq[P], Map[Int, Array[Long]]) => Iterator[R]): Shards[R] = {
     def onDriver(gatesOf: Int => Map[Int, Array[Long]]): Shards[R] =
-      Left(rows.collect().groupBy(shardOf).toSeq.flatMap { case (s, rs) =>
-        walk(rs.toSeq, gatesOf(s)) })
+      Left(local.groupBy(shardOf).toSeq.flatMap { case (s, rs) =>
+        walk(rs, gatesOf(s)) })
     val small = volume <= driverPathMaxPostings
     if (gates.isEmpty) {
       if (small) onDriver(_ => Map.empty)
       else Right(rows.groupByKey(shardOf)
         .flatMapGroups((_, it) => walk(it.toSeq, Map.empty)))
     } else {
+      gates.foreach(GraftBridge.requireResolves(docmeta, _))
       val allowed = gates.zipWithIndex.map { case (g, i) =>
         docmeta.where(g)
           .select(lit(i).cast("int").as("_1"), col("docId").as("_2"))
@@ -474,11 +486,11 @@ final class QueryEngine(spark: SparkSession, val root: String,
   private def scoredWalk(req: SearchRequest): Option[Shards[ScoredDoc]] = {
     val (present, dfs, wMap) = scoredTerms(req.query)
     if (present.isEmpty) return None
-    val rows = postings.where(col("term").isin(present: _*)).as[PostingRow]
     val (bm, k, after, minMatch) = (bm25, req.k, req.after, req.minMatch)
     val gate = req.gate.map(_ => 0)
-    Some(perShard(rows, (_: PostingRow).shard, dfs.values.sum,
-        req.gate.toSeq) { (rs, gates) =>
+    Some(perShard(postings.where(col("term").isin(present: _*)).as[PostingRow],
+        postingReader.rows(present, positions = false).map(_.scoring),
+        (_: PostingRow).shard, dfs.values.sum, req.gate.toSeq) { (rs, gates) =>
       QueryEngine.required(gate, gates).iterator.flatMap { r =>
         WandScorer.topK(present, QueryEngine.termCursors(rs, bm, dfs, wMap),
           k, r, after, minMatch)
@@ -582,7 +594,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
       valid.flatMap(_.exclTerms) ++ valid.flatMap(_.negPhrases).flatten ++
       valid.flatMap(_.negNearSpans).flatMap(_._1)).distinct
     val bm = bm25
-    Some(perShard(postingRowsFor(readSet, needPos), (_: PostingRowPos).shard,
+    Some(perShard(postingRowsFor(readSet, needPos),
+        postingReader.rows(readSet, needPos), (_: PostingRowPos).shard,
         readSet.map(dfs).sum, gates) { (rs, gs) =>
       perShardOut(QueryEngine.groupMatches(valid, rs, gs, bm, dfs))
     })

@@ -28,7 +28,8 @@ object SegmentMerge {
     val tbl = new IcebergLite(root)
     val prev = tbl.currentManifest()
       .getOrElse(throw new IllegalStateException(s"nothing to merge at $root"))
-    IndexBuilder.requireFormat(prev, root) // pre-v4 roots lack posBlocks/tableId
+    // pre-v4 roots lack posBlocks/tableId
+    IndexBuilder.requireFormat(prev, root, spark.sparkContext.hadoopConfiguration)
     if (prev.segments.size <= 1) return prev
     mergeSegments(spark, root, prev, prev.segments)
   }
@@ -53,7 +54,7 @@ object SegmentMerge {
     val tbl = new IcebergLite(root)
     var m = tbl.currentManifest()
       .getOrElse(throw new IllegalStateException(s"nothing to merge at $root"))
-    IndexBuilder.requireFormat(m, root)
+    IndexBuilder.requireFormat(m, root, spark.sparkContext.hadoopConfiguration)
     while (m.segments.size > maxSegments) {
       val surplus = m.segments.size - maxSegments + 1
       val window = math.min(surplus, fanIn)
@@ -93,7 +94,7 @@ object SegmentMerge {
     val tbl = new IcebergLite(root)
     var prev = tbl.currentManifest()
       .getOrElse(throw new IllegalStateException(s"nothing to rebase at $root"))
-    IndexBuilder.requireFormat(prev, root)
+    IndexBuilder.requireFormat(prev, root, spark.sparkContext.hadoopConfiguration)
     if (prev.segments.isEmpty) return prev
     if (prev.segments.size > 1) prev = merge(spark, root)
     val seg = prev.segments.head

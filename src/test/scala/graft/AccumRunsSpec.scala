@@ -118,4 +118,18 @@ class AccumRunsSpec extends AnyFunSuite with SparkSessionFixture {
       assert(postings(s"$work/default", c.manifest.segments.head.name) == pa)
     } finally IndexBuilder.AccumMaxPostings = saved
   }
+
+  test("obsLong: null is the empty pass; a missing key or a non-number fails naming it") {
+    assert(IndexBuilder.obsLong(Map("tokens" -> 7L), "tokens") == 7L)
+    assert(IndexBuilder.obsLong(Map("maxDl" -> Integer.valueOf(3)), "maxDl") == 3L)
+    assert(IndexBuilder.obsLong(Map("tokens" -> null), "tokens") == 0L)
+    val missing = intercept[IllegalStateException] {
+      IndexBuilder.obsLong(Map("maxDl" -> 3L), "tokens")
+    }
+    assert(missing.getMessage.contains("'tokens'"), missing.getMessage)
+    val wrongType = intercept[IllegalStateException] {
+      IndexBuilder.obsLong(Map("tokens" -> "12"), "tokens")
+    }
+    assert(wrongType.getMessage.contains("'tokens'"), wrongType.getMessage)
+  }
 }

@@ -308,6 +308,20 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       Option(err.getCause).exists(_.getMessage.contains("field-scoped")))
   }
 
+  test("a gate naming a missing column rejects with no listener ERROR") {
+    engine.topK("def", 1) // the build (two Observations) ran in this session
+    val (err, logged) = SparkSessionFixture.errors(
+        "org.apache.spark.sql.util.ExecutionListenerBus") {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        engine.run(SearchRequest("def", 5, gate = Some(expr("no_such_column = 1"))))
+      }
+      Thread.sleep(500) // listener events are posted asynchronously
+      e
+    }
+    assert(err.getMessage.contains("no_such_column"), err.getMessage)
+    assert(logged.isEmpty, s"listener bus logged an error: $logged")
+  }
+
   // ---- format-gate sniff (ADVICE r6 medium) -------------------------------
 
   test("unstamped manifest over a v4 layout opens via the schema sniff") {
@@ -325,6 +339,31 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       root, numShards = 2, batch = 1)
     assert(new IcebergLite(root).currentManifest().get.format
       .contains(IndexBuilder.FormatVersion))
+  }
+
+  test("unstamped root: every postings file is checked for the v4 columns") {
+    val root = s"$work/sniff-multi"
+    IndexBuilder.build(spark, CorpusGen.dataset(spark, 60L, 13L, 4), root, numShards = 2)
+    IndexBuilder.build(spark, CorpusGen.dataset(spark, 30L, 17L, 4), root,
+      numShards = 2, batch = 1)
+    val tbl = new IcebergLite(root)
+    val m = tbl.currentManifest().get
+    val seg = m.segments.last.name
+    val pst = s"$root/$seg/postings"
+    assert(new java.io.File(pst).list().count(_.endsWith(".parquet")) > 1)
+    // one more file in the last segment's postings, without posBlocks
+    spark.read.parquet(pst).drop("posBlocks").limit(1).coalesce(1)
+      .write.parquet(s"$work/sniff-multi-nopos")
+    val extra = new java.io.File(s"$work/sniff-multi-nopos").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.copy(extra.toPath, Paths.get(pst, "part-99999-nopos.snappy.parquet"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(!PostingReader.everyFileHas(pst, "posBlocks", conf))
+    assert(PostingReader.everyFileHas(s"$root/${m.segments.head.name}/postings",
+      "posBlocks", conf))
+    tbl.commit(m.copy(version = m.version + 1, format = None))
+    val e = intercept[IllegalStateException] { new QueryEngine(spark, root) }
+    assert(e.getMessage.contains("rebuild"))
   }
 
   test("unstamped manifest whose parquet lacks the v4 columns still rejects") {

@@ -26,8 +26,17 @@ object SparkSessionFixture {
   /** `body`'s result and the WARN-or-higher messages logged under
     * `logger` while it ran (the suites run at ERROR, so the logger's
     * level is lowered to WARN for the duration). */
-  def warnings[T](logger: String)(body: => T): (T, String) = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  def warnings[T](logger: String)(body: => T): (T, String) =
+    logged(logger, org.apache.logging.log4j.Level.WARN)(body)
+
+  /** `body`'s result and the ERROR-or-higher messages logged under
+    * `logger` while it ran. */
+  def errors[T](logger: String)(body: => T): (T, String) =
+    logged(logger, org.apache.logging.log4j.Level.ERROR)(body)
+
+  private def logged[T](logger: String, level: org.apache.logging.log4j.Level)
+      (body: => T): (T, String) = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
@@ -41,7 +50,7 @@ object SparkSessionFixture {
     app.start()
     val saved = lg.getLevel
     lg.addAppender(app)
-    lg.setLevel(Level.WARN)
+    lg.setLevel(level)
     try (body, out.toString)
     finally { lg.removeAppender(app); lg.setLevel(saved); app.stop() }
   }

@@ -318,9 +318,8 @@ object IndexBuilder {
         throw new IllegalStateException(
           s"accumRuns exceeded $hardCap postings in one partition (shard " +
             s"${p.shard}) — token mass is skewed far beyond the build's " +
-            "estimate; rebuild with more shards, or set " +
-            "IndexBuilder.AccumMaxPostings = 0 to force the spillable " +
-            "sorted postings path")
+            "estimate; rebuild with more shards (numShards) so each " +
+            "partition holds fewer postings")
       if (((size + 1) << 1) >= cap) grow()
       val mask = cap - 1
       var j = (p.term.hashCode ^ (p.shard * 0x9e3779b9)) & mask

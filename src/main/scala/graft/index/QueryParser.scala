@@ -6,35 +6,24 @@ import org.apache.spark.sql.functions.{col, lit}
 import scala.collection.mutable
 
 /** One OR-group: every term required (AND), every phrase required to
-  * occur at consecutive post-filter token positions. Phrase tokens are
-  * ALSO terms (the phrase both ANDs its words and constrains order), so
-  * scoring — the fixed-order sum over `terms` — is identical whether a
-  * word arrived bare or quoted; the phrase only filters.
+  * occur at consecutive post-filter token positions (near-spans: in
+  * order within their slop). Phrase and near-span tokens are ALSO terms,
+  * so scoring — the fixed-order sum over `terms` — is identical whether
+  * a word arrived bare or quoted; the span only filters.
   *
-  * `prefixes` are trailing-wildcard requirements (`term*`): the doc must
-  * contain at least one token starting with each prefix. Like phrases
-  * they FILTER, never score (the Lucene/ES constant-score rewrite of
-  * multi-term queries in boolean context), so group scores stay the
-  * plain fixed-order sum over `terms` and the SQL oracle stays
-  * expressible.
+  * `prefixes` (`term*`: some doc token starts with each) and `fuzzies`
+  * (`word~1`: some doc token within that Levenshtein distance) FILTER,
+  * never score (the Lucene/ES constant-score rewrite of multi-term
+  * queries in boolean context), so group scores stay the plain sum over
+  * `terms` and the SQL oracle stays expressible.
   *
   * Negations (the ES query_string `-` operator, must_not clauses) are
-  * PROHIBITIONS — a doc matching any of them is excluded from the group:
-  *  - `negTerms`: excluded if the doc contains ANY of these tokens
-  *    (`-word` analyzes like a match query: every resulting token
-  *    prohibits — ES must_not + match semantics);
-  *  - `negPrefixes`: excluded if any doc token starts with one;
-  *  - `negPhrases`: excluded if the phrase occurs at consecutive
-  *    post-filter positions (`-"a b"`; a span analyzing to <2 tokens
-  *    degrades to its bare negTerms, mirroring the positive rule).
-  * Prohibitions FILTER only — they contribute nothing to the score sum
-  * and their tokens are NOT group terms.
-  *
-  * `fuzzies` are edit-distance requirements (`word~1`, the ES
-  * query_string fuzzy operator): the doc must contain at least one token
-  * within the stated Levenshtein distance of the stem. Like prefixes
-  * they FILTER in boolean context (constant-score rewrite), and
-  * `negFuzzies` prohibit the same way. */
+  * PROHIBITIONS — a doc matching any is excluded from the group:
+  * `negTerms` if it contains ANY of them (`-word` prohibits every token
+  * it analyzes to, ES must_not + match semantics; `-"a"` degrades to its
+  * bare tokens), `negPrefixes` / `negFuzzies` / `negPhrases` /
+  * `negNearSpans` like their positive twins. Prohibitions contribute
+  * nothing to the score and their tokens are NOT group terms. */
 final case class MatchGroup(terms: Seq[String], phrases: Seq[Seq[String]],
                             prefixes: Seq[String] = Nil,
                             negTerms: Seq[String] = Nil,
@@ -51,11 +40,10 @@ final case class MatchGroup(terms: Seq[String], phrases: Seq[Seq[String]],
   * reference Kibana panel pairs with its query
   * (reference export.json:40,77,82,91): `lang:en`, `-repo:web`,
   * `id:[100 TO 400]`, `dlen:{10 TO *}`. Fields address the index's
-  * DOCMETA columns (stored metadata), never the text: a field atom GATES
-  * candidates (filter context — scoring statistics stay global, the ES
-  * bool query+filter contract) and never scores. `eq` and (`lo`,`hi`)
-  * are mutually exclusive; a `*` bound is open; `[`/`]` are inclusive,
-  * `{`/`}` exclusive (mixes allowed, the Lucene grammar). */
+  * DOCMETA columns, never the text: a field atom GATES candidates
+  * (filter context: scoring statistics stay global) and never scores.
+  * `eq` and (`lo`,`hi`) are exclusive; a `*` bound is open; `[`/`]` are
+  * inclusive, `{`/`}` exclusive (mixes allowed, the Lucene grammar). */
 final case class FieldFilter(field: String, neg: Boolean,
                              eq: Option[String],
                              lo: Option[String], hi: Option[String],
@@ -109,8 +97,8 @@ final case class FieldFilter(field: String, neg: Boolean,
   }
 }
 
-/** Scored-query atom: a plain analyzed term, or a trailing-`*` prefix.
-  * Wildcard words BYPASS the analyzer (the Lucene query_string contract:
+/** Scored-query atom: a plain analyzed term, a trailing-`*` prefix or a
+  * fuzzy stem. Wildcard words BYPASS the analyzer (the Lucene contract:
   * `mergeSort*` lowercases to the prefix `mergesort`, which matches the
   * preserveOriginal combined token of camelCase identifiers). */
 sealed trait QueryAtom extends Serializable {
@@ -128,139 +116,215 @@ final case class PrefixAtom(prefix: String, boost: Double = 1.0)
 final case class FuzzyAtom(stem: String, maxEd: Int, boost: Double = 1.0)
   extends QueryAtom
 
-/** "spaces are ANDs commas are ORs" (reference sentiment.py:638-641):
-  * OR groups split on ',', AND terms split on whitespace, every word run
-  * through the analyzer (a camelCase query word can contribute several
-  * required tokens). Empty groups dropped.
+/** The two `query_string` surfaces, read by ONE lexer and ONE word
+  * classifier. Lexing order: a query is cut into quoted spans (`-?"…"`,
+  * then an optional `~n` slop and `^n` boost right after the closing
+  * quote), range atoms (`-?field:[lo TO hi]` starting a word) and the
+  * whitespace words between them; a quote with no partner is whitespace.
+  * Quoted text is LITERAL on both surfaces: a span contributes only its
+  * analyzed tokens, so no `*`, `~n`, `^n`, `field:value` or range inside
+  * quotes is ever an operator. Each word is then classified once: a
+  * `field:value` gate, a `word*` prefix, a `word~n` fuzzy, or text.
   *
-  * `"exact phrase"` spans (the ES match_phrase analogue) additionally
-  * constrain their analyzed tokens to CONSECUTIVE post-filter positions.
-  * A phrase that analyzes to fewer than two tokens degrades to its bare
-  * terms (no positional constraint to enforce); an unbalanced quote is
-  * treated as whitespace. Commas split BEFORE quotes are read, so a
-  * phrase cannot span OR groups.
+  * BOOLEAN surface (`parseGroups`, "spaces are ANDs commas are ORs",
+  * reference sentiment.py:638-641): OR groups split on ',' BEFORE lexing
+  * (a phrase cannot span groups); a camelCase word can contribute
+  * several required tokens; empty groups drop. A positive span's tokens
+  * are group terms and, if two or more, a phrase (consecutive
+  * post-filter positions, the ES match_phrase analogue) or with `~n` an
+  * in-order near-span. A leading `-` negates a word or span (the ES
+  * must_not operator, see MatchGroup). There are no boosts.
   *
-  * A leading `-` negates the word/wildcard/quoted span (the ES
-  * query_string must_not operator): see MatchGroup for the prohibition
-  * semantics. Negation exists on the BOOLEAN surface only — the scored
-  * disjunctive parse (`parseScored`, the ES `match` analogue) has no
-  * operators, so `-foo` there analyzes to the plain term `foo`, exactly
-  * as an ES match query would. Groups that carry prohibitions but no
-  * positive requirement are rejected loudly (Lucene matches nothing on
-  * must_not-only boolean queries; at corpus scale the complement walk
-  * would be an accidental full scan). */
+  * SCORED surface (`parseScored`, the ES `match` analogue plus the `*`,
+  * `~n`, `^n` word operators): no negation (`-foo` is the term `foo`)
+  * and no fields (`splitFieldFilters` takes them out first). A span is
+  * its tokens as plain terms in order; its `^n` boosts each of them (the
+  * Lucene phrase boost), its `~n` is ignored. */
 object QueryParser {
 
   /** The queryable FIELD surface: query field name -> (docmeta column,
     * numeric?). `id` is the source table's join key (docmeta.tableId),
-    * `dlen` the analyzed token count (docmeta.docLen); the rest are the
-    * stored string columns. An unknown name in the unambiguous RANGE
-    * form (`x:[a TO b]`) rejects loudly; in the bare `name:value` form
-    * it falls through to the analyzer (which strips `:` like any
-    * punctuation), so pre-field queries keep their meaning. */
+    * `dlen` the analyzed token count (docmeta.docLen), the rest stored
+    * strings. An unknown name rejects loudly in the RANGE form; in the
+    * bare `name:value` form it is text, so pre-field queries keep their
+    * meaning. */
   val Fields: Map[String, (String, Boolean)] = Map(
     "lang" -> ("lang", false), "repo" -> ("repo", false),
     "path" -> ("path", false), "commit" -> ("commit", false),
     "id" -> ("tableId", true), "dlen" -> ("docLen", true))
 
-  /** `field:[lo TO hi]` / `field:{lo TO hi}` with optional leading `-`;
-    * `*` bounds are open. Extracted BEFORE the whitespace split (the
-    * one query atom that contains spaces, like quoted spans). A range
-    * must start a query word: `foo-id:[1 TO 5]` or `a.lang:[x TO y]` is
-    * rejected, never read as a term plus a (negated) filter. */
-  private val RangeBody =
-    """([A-Za-z_]+):([\[{])([^\s\]}]+)\s+TO\s+([^\s\]}]+)([\]}])"""
-  private val RangeRe = ("""(?<!\S)(-?)""" + RangeBody).r
-  private val StrayRangeRe = RangeBody.r
+  /** A lexed piece of a query; `raw` is its text as typed. */
+  private sealed trait Lexeme { def raw: String }
+  /** `-?"text"` with its optional `~slop` / `^boost`. */
+  private final case class Span(neg: Boolean, text: String, slop: Int,
+                                boost: Double, raw: String) extends Lexeme
+  /** `-?field:[lo TO hi]` (`{`/`}` exclusive). `stray`: one starting
+    * mid-word (`foo-id:[1 TO 5]`), which the field surfaces reject. */
+  private final case class Range(neg: Boolean, field: String, lo: String,
+      hi: String, loInc: Boolean, hiInc: Boolean, raw: String,
+      stray: Boolean) extends Lexeme
+  private final case class Word(raw: String) extends Lexeme
 
-  /** Replace every range atom in `s` by a space, collecting its filter. */
-  private def extractRanges(s: String,
-                            into: mutable.Buffer[FieldFilter]): String = {
-    val rest = RangeRe.replaceAllIn(s, m => { into += rangeFilter(m); " " })
-    val stray = StrayRangeRe.findFirstIn(rest)
-    require(stray.isEmpty, s"range filter '${stray.getOrElse("")}' in " +
-      s"query '$s' does not start a word — separate it with a space")
-    rest
+  /** Java regex `\s`: the whitespace the query surfaces split on. */
+  private def isSpace(c: Char): Boolean = " \t\n\u000B\f\r".indexOf(c) >= 0
+  private def isFieldChar(c: Char): Boolean = c == '_' || c < 128 && c.isLetter
+
+  private def runEnd(s: String, i: Int, ok: Char => Boolean): Int = {
+    var j = i
+    while (j < s.length && ok(s.charAt(j))) j += 1
+    j
   }
 
-  private def rangeFilter(m: scala.util.matching.Regex.Match): FieldFilter = {
-    val field = m.group(2).toLowerCase
+  /** The range atom whose field name starts at `p`, with its end. Bounds
+    * hold no whitespace, `]` or `}`; a `*` bound is open. */
+  private def rangeAt(s: String, p: Int, neg: Boolean,
+                      stray: Boolean): Option[(Range, Int)] = {
+    val bound = (c: Char) => !isSpace(c) && c != ']' && c != '}'
+    val f = runEnd(s, p, isFieldChar)
+    if (f == p || f + 1 >= s.length || s.charAt(f) != ':' ||
+        (s.charAt(f + 1) != '[' && s.charAt(f + 1) != '{')) return None
+    val lo = runEnd(s, f + 2, bound)
+    val to = runEnd(s, lo, isSpace)
+    if (lo == f + 2 || to == lo || !s.startsWith("TO", to)) return None
+    val hs = runEnd(s, to + 2, isSpace)
+    val he = runEnd(s, hs, bound)
+    if (hs == to + 2 || he == hs || he == s.length || isSpace(s.charAt(he)))
+      return None
+    Some((Range(neg, s.substring(p, f), s.substring(f + 2, lo),
+      s.substring(hs, he), s.charAt(f + 1) == '[', s.charAt(he) == ']',
+      s.substring(if (neg) p - 1 else p, he + 1), stray), he + 1))
+  }
+
+  /** Cut `s` into spans, ranges and words, left to right. A word ends at
+    * whitespace or a quote; the next lexeme starts right after a span or
+    * range, so `"a b"c` is a span and the word `c`. */
+  private def lex(s: String): Seq[Lexeme] = {
+    val out = Seq.newBuilder[Lexeme]
+    val n = s.length
+    def opens(q: Int) = q < n && s.charAt(q) == '"' && s.indexOf('"', q + 1) > 0
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      val neg = c == '-'
+      val at = if (neg) i + 1 else i
+      if (isSpace(c) || (c == '"' && !opens(i))) i += 1
+      else if (opens(at)) {
+        val close = s.indexOf('"', at + 1)
+        val d = runEnd(s, close + 2, x => x >= '0' && x <= '9')
+        val e = if (s.startsWith("~", close + 1) && d > close + 2) d else close + 1
+        val b = runEnd(s, e + 1, x => !isSpace(x) && x != '"')
+        val boost = if (s.startsWith("^", e)) positiveNumber(s.substring(e + 1, b)) else None
+        val end = if (boost.isEmpty) e else b
+        out += Span(neg, s.substring(at + 1, close),
+          if (e > close + 1) s.substring(close + 2, e).toInt else 0,
+          boost.getOrElse(1.0), s.substring(i, end))
+        i = end
+      } else rangeAt(s, at, neg, stray = false) match {
+        case Some((r, e)) => out += r; i = e
+        case None =>
+          var j = i + 1
+          var stray: Option[(Range, Int)] = None
+          while (stray.isEmpty && j < n && !isSpace(s.charAt(j)) &&
+                 s.charAt(j) != '"') {
+            if (isFieldChar(s.charAt(j)) && !isFieldChar(s.charAt(j - 1)))
+              stray = rangeAt(s, j, neg = false, stray = true)
+            if (stray.isEmpty) j += 1
+          }
+          out += Word(s.substring(i, j))
+          i = stray.fold(j) { case (r, e) => out += r; e }
+      }
+    }
+    out.result()
+  }
+
+  private def rangeFilter(r: Range): FieldFilter = {
+    require(!r.stray, s"range filter '${r.raw}' does not start a word — " +
+      "separate it with a space")
+    val field = r.field.toLowerCase
     require(Fields.contains(field),
-      s"unknown field '${m.group(2)}' in range filter '${m.matched}' — " +
+      s"unknown field '${r.field}' in range filter '${r.raw}' — " +
         s"queryable fields: ${Fields.keys.toSeq.sorted.mkString(", ")}")
-    val lo = Some(m.group(4)).filter(_ != "*")
-    val hi = Some(m.group(5)).filter(_ != "*")
+    val Seq(lo, hi) = Seq(r.lo, r.hi).map(Some(_).filter(_ != "*"))
     require(lo.nonEmpty || hi.nonEmpty,
-      s"range filter '${m.matched}' has no bounds (both sides are *)")
-    FieldFilter(field, m.group(1) == "-", None, lo, hi,
-      m.group(3) == "[", m.group(6) == "]").validate()
+      s"range filter '${r.raw}' has no bounds (both sides are *)")
+    FieldFilter(field, r.neg, None, lo, hi, r.loInc, r.hiInc).validate()
   }
 
-  /** Is this word a `field:value` equality filter? Only for RECOGNIZED
-    * field names — anything else falls through to the analyzer. The
-    * value is matched verbatim against the stored column (keyword-field
-    * semantics — never analyzed); boosts do not apply to filters. */
-  private def fieldEq(w: String): Option[FieldFilter] = {
-    val ci = w.indexOf(':')
-    if (ci <= 0 || ci == w.length - 1) return None
-    val f = w.substring(0, ci).toLowerCase
-    if (!Fields.contains(f)) return None
-    Some(FieldFilter(f, neg = false, Some(w.substring(ci + 1)),
+  /** `-` negates only at word START: `a-b` is one positive word. */
+  private def isNeg(w: String): Boolean = w.length >= 2 && w.charAt(0) == '-'
+
+  /** Is this word a `field:value` equality filter, with an optional
+    * leading `-`? Only for RECOGNIZED field names — anything else falls
+    * through to the analyzer. The value is matched verbatim against the
+    * stored column (keyword-field semantics — never analyzed). */
+  private def fieldWord(w: String): Option[FieldFilter] = {
+    val stem = if (isNeg(w)) w.tail else w
+    val ci = stem.indexOf(':')
+    val f = if (ci > 0) stem.substring(0, ci).toLowerCase else ""
+    if (ci == stem.length - 1 || !Fields.contains(f)) None
+    else Some(FieldFilter(f, isNeg(w), Some(stem.substring(ci + 1)),
       None, None).validate())
+  }
+
+  /** Classify a non-field word once: (negated?, operand). The boolean
+    * surface reads a leading `-`, the scored surface a trailing `^boost`
+    * instead (binding LAST: `mer*^2` boosts the wildcard). Then `word*`
+    * is a PrefixAtom, `word~n` a FuzzyAtom, and anything else comes back
+    * as a TermAtom of the RAW word, for the caller to analyze. */
+  private def classify(w0: String, scored: Boolean): (Boolean, QueryAtom) = {
+    val neg = !scored && isNeg(w0)
+    val (w, boost) =
+      if (scored) boostSuffix(w0) else (if (neg) w0.tail else w0, 1.0)
+    (neg, wildcardStem(w).map(PrefixAtom(_, boost))
+      .orElse(fuzzyStem(w).map { case (s, d) => FuzzyAtom(s, d, boost) })
+      .getOrElse(TermAtom(w, boost)))
   }
 
   /** Conjunction of compiled field predicates (a Column over docmeta). */
   def compileFields(fs: Seq[FieldFilter]): Column =
     fs.map(_.predicate).reduce(_ && _)
 
-  /** Split the SCORED surface's field atoms out of a query: returns
-    * (residual scored query, field filters). Range atoms extract by the
-    * unambiguous bracket syntax; bare `field:value` words extract only
-    * for recognized fields and honor a leading `-` (a negated filter —
-    * the scored surface otherwise has no operators). The residual
-    * parses exactly as before (parseScored). */
+  /** (range filters, then `field:value` filters; the other lexemes). */
+  private def takeFields(ls: Seq[Lexeme]): (Seq[FieldFilter], Seq[Lexeme]) = {
+    val ranges = ls.collect { case r: Range => rangeFilter(r) }
+    val (eqs, rest) = ls.filter(!_.isInstanceOf[Range]).partitionMap {
+      case l @ Word(w) => fieldWord(w).toLeft(l)
+      case l => Right(l)
+    }
+    (ranges ++ eqs, rest)
+  }
+
+  /** Split the SCORED surface's field atoms out of a query: (residual
+    * scored query, field filters). Every other lexeme, quoted spans
+    * included, stays in the residual as typed, for parseScored. */
   def splitFieldFilters(query: String): (String, Seq[FieldFilter]) = {
     if (query == null || query.isEmpty) return (query, Nil)
-    val fs = mutable.Buffer.empty[FieldFilter]
-    val noRanges = extractRanges(query, fs)
-    val words = noRanges.split("\\s+").toSeq.filter(_.nonEmpty).filter { w =>
-      val (stem, neg) =
-        if (w.length >= 2 && w.charAt(0) == '-') (w.tail, true) else (w, false)
-      fieldEq(stem) match {
-        case Some(f) => fs += f.copy(neg = neg); false
-        case None => true
-      }
-    }
-    (words.mkString(" "), fs.toSeq)
+    val (fields, rest) = takeFields(lex(query))
+    (rest.map(_.raw).mkString(" "), fields)
   }
 
   /** Cap on dictionary expansions of one prefix in SCORED contexts (the
-    * Lucene top-terms rewrite budget; ES match_phrase_prefix defaults to
-    * 50). Expansions are RANKED df-desc, term-asc before the cut, so the
-    * kept terms are deterministic and SQL-reproducible. Filter contexts
-    * (boolean groups, WHERE match()) expand UNCAPPED — they are
-    * constant-score, so extra expansions only tighten the bitset walk,
-    * and a cap there would silently diverge from row-level semantics. */
+    * Lucene top-terms rewrite budget), RANKED df-desc, term-asc before
+    * the cut so the kept terms are deterministic and SQL-reproducible.
+    * Filter contexts (boolean groups, WHERE match()) expand UNCAPPED:
+    * they are constant-score, and a cap would diverge from row level. */
   val MaxScoredExpansions = 64
 
-  /** Is this whitespace word a trailing-wildcard prefix? (one `*`, at
-    * the end, non-empty stem). Anything else — `*` alone, `a*b` — is
-    * left to the analyzer, which strips the `*` like any punctuation. */
+  /** Is this word a trailing-wildcard prefix? (one `*`, at the end,
+    * non-empty stem). Anything else — `*` alone, `a*b` — is left to the
+    * analyzer, which strips the `*` like any punctuation. */
   private def wildcardStem(w: String): Option[String] =
     if (w.length >= 2 && w.endsWith("*") && !w.init.contains("*"))
       Some(w.init.toLowerCase)
     else None
 
-  /** Lucene's fuzzy hard cap: edit distances above 2 are rejected (the
-    * Levenshtein-automaton blowup past ed 2 is the same reason our
-    * banded dict scan stops there). */
+  /** Lucene's fuzzy hard cap (the banded dict scan stops there too). */
   val MaxFuzzyEd = 2
 
   /** Is this word a fuzzy term? (`stem~`, `stem~0..2`; non-empty stem,
-    * one `~`). Bare `~` defaults to distance 2 (the Lucene QueryParser
-    * default). Like wildcards, the stem BYPASSES the analyzer and is
-    * lowercased verbatim. A distance above 2 is rejected LOUDLY —
-    * silently clamping would diverge from what the user asked for. */
+    * one `~`). Bare `~` is distance 2 (the Lucene default); the stem is
+    * lowercased verbatim. A distance above 2 rejects LOUDLY rather than
+    * silently clamping to something the user did not ask for. */
   private def fuzzyStem(w: String): Option[(String, Int)] = {
     val ti = w.indexOf('~')
     if (ti <= 0 || ti != w.lastIndexOf('~')) return None
@@ -276,11 +340,98 @@ object QueryParser {
     } else None // 'a~xy' is not fuzzy syntax: fall through to the analyzer
   }
 
+  /** A boost value: a positive, finite number. */
+  private def positiveNumber(s: String): Option[Double] =
+    scala.util.Try(s.toDouble).toOption.filter(b => b > 0.0 && !b.isInfinite)
+
+  /** Strip a trailing `^<positive number>` boost (the Lucene boost
+    * operator): (word without it, boost). A malformed suffix (`^`, `^x`,
+    * `^-2`, second `^`) is not boost syntax: the word stays whole. */
+  private def boostSuffix(w: String): (String, Double) = {
+    val ci = w.lastIndexOf('^')
+    if (ci <= 0 || w.indexOf('^') != ci) (w, 1.0)
+    else positiveNumber(w.substring(ci + 1))
+      .fold((w, 1.0))(b => (w.substring(0, ci), b))
+  }
+
+  /** One polarity's share of a boolean group, filled in query order. */
+  private final class Side {
+    val terms, prefixes = mutable.Buffer.empty[String]
+    val fuzzies = mutable.Buffer.empty[(String, Int)]
+    val phrases = mutable.Buffer.empty[Seq[String]]
+    val near = mutable.Buffer.empty[(Seq[String], Int)]
+  }
+
+  def parseGroups(query: String): Seq[MatchGroup] = {
+    val out = query.split(',').toSeq.map { g =>
+      val pos, neg = new Side
+      val (fields, rest) = takeFields(lex(g))
+      rest.foreach {
+        case Span(n, text, slop, _, _) =>
+          val toks = CodeAnalyzer.analyze(text)
+          val side = if (n) neg else pos
+          if (!n || toks.length < 2) side.terms ++= toks
+          if (toks.length >= 2) {
+            if (slop == 0) side.phrases += toks else side.near += ((toks, slop))
+          }
+        case l =>
+          val (n, atom) = classify(l.raw, scored = false)
+          val side = if (n) neg else pos
+          atom match {
+            case PrefixAtom(p, _) => side.prefixes += p
+            case FuzzyAtom(s, d, _) => side.fuzzies += ((s, d))
+            case TermAtom(t, _) => side.terms ++= CodeAnalyzer.analyze(t)
+          }
+      }
+      MatchGroup(pos.terms.distinct.toSeq, pos.phrases.toSeq,
+        pos.prefixes.distinct.toSeq, neg.terms.distinct.toSeq,
+        neg.prefixes.distinct.toSeq, neg.phrases.toSeq,
+        pos.fuzzies.distinct.toSeq, neg.fuzzies.distinct.toSeq,
+        pos.near.toSeq, neg.near.toSeq, fields)
+    }
+    // a group with prohibitions or gates but no positive requirement is
+    // rejected LOUDLY: Lucene matches nothing on must_not-only clauses,
+    // and walking the complement at corpus scale is an accidental scan
+    out.foreach { g =>
+      require(g.terms.nonEmpty || g.prefixes.nonEmpty || g.fuzzies.nonEmpty ||
+        (g.negTerms.isEmpty && g.negPrefixes.isEmpty &&
+          g.negPhrases.isEmpty && g.negFuzzies.isEmpty &&
+          g.negNearSpans.isEmpty && g.fields.isEmpty),
+        s"pure-negative or field-only group in query '$query': every " +
+          "OR-group carrying a negation or a field filter needs a required " +
+          "term/prefix/fuzzy — field atoms GATE text matches, they do not " +
+          "enumerate documents (select on metadata with a SQL predicate)")
+    }
+    out.filter(g => g.terms.nonEmpty || g.prefixes.nonEmpty ||
+      g.fuzzies.nonEmpty)
+  }
+
+  /** The SCORED parse: atoms in query order (the frozen float-sum
+    * order); duplicates drop, the first occurrence keeping its boost. A
+    * range atom here is no filter: it reads as the words it is made of. */
+  def parseScored(query: String): Seq[QueryAtom] = {
+    if (query == null || query.isEmpty) return Nil
+    def text(t: String, boost: Double) =
+      CodeAnalyzer.analyze(t).map(TermAtom(_, boost))
+    def word(w: String) = classify(w, scored = true)._2 match {
+      case TermAtom(t, boost) => text(t, boost)
+      case atom => Seq(atom)
+    }
+    lex(query).flatMap {
+      case s: Span => text(s.text, s.boost)
+      case r: Range => r.raw.split("\\s+").toSeq.flatMap(word)
+      case l => word(l.raw)
+    }.distinctBy {
+      case TermAtom(t, _) => t
+      case PrefixAtom(p, _) => (p, "*")
+      case FuzzyAtom(s, d, _) => (s, d)
+    }
+  }
+
   /** In-order sloppy-span check over an analyzed token stream: do the
     * span's tokens occur in order with (last − first) ≤ tokens−1+slop?
-    * Greedy earliest-next is optimal per start position (it minimizes
-    * the final position, hence the width), so this is exact. The
-    * obviously-correct reference for the engine's position-array walk. */
+    * Greedy earliest-next minimizes the width per start, so this is
+    * exact: the reference for the engine's position-array walk. */
   def nearMatch(toks: Seq[String], ph: Seq[String], slop: Int): Boolean = {
     if (ph.isEmpty) return true
     val arr = toks.toIndexedSeq
@@ -333,155 +484,6 @@ object QueryParser {
     prev(lb) <= max
   }
 
-  /** Is this word a negation? (`-` + at least one more char). The `-`
-    * only negates at word START — `a-b` stays one positive word for the
-    * analyzer (which strips the hyphen like any punctuation). */
-  private def negStem(w: String): Option[String] =
-    if (w.length >= 2 && w.charAt(0) == '-') Some(w.tail) else None
-
-  /** Quoted span with an optional leading `-` (negated phrase) and an
-    * optional trailing `~n` slop (`"a b"~2` — the match_phrase slop /
-    * SpanNear analogue): the span's tokens must occur IN ORDER with at
-    * most `slop` extra positions between first and last (span width ≤
-    * tokens−1+slop). Slop 0 (or absent) is the exact consecutive
-    * phrase. In-order semantics — the simpler SpanNear(inOrder=true)
-    * contract, documented; Lucene's move-counting reordered slop is
-    * not reproduced. */
-  private val SpanRe = "(-?)\"([^\"]*)\"(?:~([0-9]+))?".r
-
-  def parseGroups(query: String): Seq[MatchGroup] = {
-    val out = query.split(',').toSeq.map { g =>
-      val posPhrases = mutable.Buffer.empty[Seq[String]]
-      val negPhrases = mutable.Buffer.empty[Seq[String]]
-      val nearSpans = mutable.Buffer.empty[(Seq[String], Int)]
-      val negNearSpans = mutable.Buffer.empty[(Seq[String], Int)]
-      val negPhraseTerms = mutable.Buffer.empty[String]
-      // quoted spans first: a positive span keeps its words in the
-      // residual (phrase words are ordinary AND terms as well — the
-      // phrase only adds the positional constraint); a NEGATED span is
-      // removed entirely (its tokens prohibit, they are not required).
-      // Wildcard detection runs on the span-stripped words, so a `*`
-      // inside a phrase never becomes a prefix (no wildcard-in-phrase
-      // semantics — same restriction as Lucene's match_phrase).
-      val residual = SpanRe.replaceAllIn(g, m => {
-        val toks = CodeAnalyzer.analyze(m.group(2))
-        val slop = Option(m.group(3)).map(_.toInt).getOrElse(0)
-        if (m.group(1) == "-") {
-          if (toks.length < 2) negPhraseTerms ++= toks
-          else if (slop == 0) negPhrases += toks
-          else negNearSpans += ((toks, slop))
-          " "
-        } else {
-          if (toks.length >= 2) {
-            if (slop == 0) posPhrases += toks
-            else nearSpans += ((toks, slop))
-          }
-          scala.util.matching.Regex.quoteReplacement(" " + m.group(2) + " ")
-        }
-      })
-      // field RANGE atoms next (the other space-containing atom; quotes
-      // were consumed first, so a bracket inside a phrase stays text):
-      // each compiles to a docmeta gate on THIS group only
-      val fields = mutable.Buffer.empty[FieldFilter]
-      val deRanged = extractRanges(residual, fields)
-      // any quote left over is unbalanced: treated as whitespace
-      val words = deRanged.replace('"', ' ').trim
-        .split("\\s+").toSeq.filter(_.nonEmpty)
-      val (negWords, posWords0) = words.partition(negStem(_).isDefined)
-      // bare `field:value` atoms (recognized fields only) become gates;
-      // a leading `-` negates the gate like any prohibition
-      val posWords = posWords0.filter { w =>
-        fieldEq(w) match {
-          case Some(f) => fields += f; false
-          case None => true
-        }
-      }
-      val negStems = negWords.flatMap(negStem).filter { w =>
-        fieldEq(w) match {
-          case Some(f) => fields += f.copy(neg = true); false
-          case None => true
-        }
-      }
-      val negPrefixes = negStems.flatMap(wildcardStem).distinct
-      val negFuzzies = negStems.filter(wildcardStem(_).isEmpty)
-        .flatMap(fuzzyStem).distinct
-      val negTerms = (negStems
-        .filter(w => wildcardStem(w).isEmpty && fuzzyStem(w).isEmpty)
-        .flatMap(w => CodeAnalyzer.analyze(w)) ++ negPhraseTerms).distinct
-      val prefixes = posWords.flatMap(wildcardStem).distinct
-      val fuzzies = posWords.filter(wildcardStem(_).isEmpty)
-        .flatMap(fuzzyStem).distinct
-      val terms = posWords
-        .filter(w => wildcardStem(w).isEmpty && fuzzyStem(w).isEmpty)
-        .flatMap(w => CodeAnalyzer.analyze(w)).distinct
-      MatchGroup(terms, posPhrases.toSeq, prefixes,
-        negTerms, negPrefixes, negPhrases.toSeq, fuzzies, negFuzzies,
-        nearSpans.toSeq, negNearSpans.toSeq, fields.toSeq)
-    }
-    // a group with prohibitions but no positive requirement is rejected
-    // LOUDLY: Lucene's BooleanQuery matches nothing on must_not-only
-    // clauses, and silently walking the complement at corpus scale is an
-    // accidental full scan — the user must supply a positive anchor
-    out.foreach { g =>
-      require(g.terms.nonEmpty || g.prefixes.nonEmpty || g.fuzzies.nonEmpty ||
-        (g.negTerms.isEmpty && g.negPrefixes.isEmpty &&
-          g.negPhrases.isEmpty && g.negFuzzies.isEmpty &&
-          g.negNearSpans.isEmpty && g.fields.isEmpty),
-        s"pure-negative or field-only group in query '$query': every " +
-          "OR-group carrying a negation or a field filter needs at least " +
-          "one required term/prefix/fuzzy — field atoms GATE text matches, " +
-          "they do not enumerate documents (metadata-only selection is a " +
-          "plain SQL predicate, not a match query)")
-    }
-    out.filter(g => g.terms.nonEmpty || g.prefixes.nonEmpty ||
-      g.fuzzies.nonEmpty)
-  }
-
-  /** Terms-only view (scoring order; used by paths with no positional
-    * machinery — the full structure is parseGroups). */
-  def parse(query: String): Seq[Seq[String]] = parseGroups(query).map(_.terms)
-
-  /** Wildcard-aware SCORED-query parse (the disjunctive topK surface):
-    * atoms in word order — the frozen float-sum order — plain words
-    * analyzed as before (dedup first-occurrence, same stream
-    * CodeAnalyzer.analyzeQuery yields), `word*` words as PrefixAtoms. */
-  /** Strip a trailing `^<positive number>` boost (the Lucene
-    * query_string boost operator). Returns (word without the boost
-    * suffix, boost). A malformed suffix (`^`, `^x`, `^-2`, second `^`)
-    * is NOT boost syntax — the word falls through whole to the analyzer
-    * (which strips `^` like any punctuation). */
-  private def boostSuffix(w: String): (String, Double) = {
-    val ci = w.lastIndexOf('^')
-    if (ci <= 0 || ci == w.length - 1 || w.indexOf('^') != ci) return (w, 1.0)
-    val numS = w.substring(ci + 1)
-    try {
-      val b = numS.toDouble
-      if (b > 0.0 && !b.isInfinite) (w.substring(0, ci), b) else (w, 1.0)
-    } catch { case _: NumberFormatException => (w, 1.0) }
-  }
-
-  def parseScored(query: String): Seq[QueryAtom] = {
-    if (query == null || query.isEmpty) return Nil
-    val seen = mutable.HashSet.empty[String]
-    val seenPre = mutable.HashSet.empty[String]
-    val seenFuz = mutable.HashSet.empty[(String, Int)]
-    query.split("\\s+").toSeq.filter(_.nonEmpty).flatMap { w0 =>
-      // boost binds LAST: 'mer*^2' boosts the wildcard, 'a~1^2' the
-      // fuzzy; first occurrence of an atom keeps its boost (dedup rule)
-      val (w, boost) = boostSuffix(w0)
-      wildcardStem(w) match {
-        case Some(p) => if (seenPre.add(p)) Seq(PrefixAtom(p, boost)) else Nil
-        case None => fuzzyStem(w) match {
-          case Some(f) => if (seenFuz.add(f))
-            Seq(FuzzyAtom(f._1, f._2, boost)) else Nil
-          case None =>
-            CodeAnalyzer.analyze(w).filter(seen.add)
-              .map(t => TermAtom(t, boost))
-        }
-      }
-    }
-  }
-
   /** Frozen expansion ranking: df DESC, term ASC, first `cap` kept —
     * deterministic, and what the DuckDB oracle reproduces with
     * `ORDER BY df DESC, token LIMIT cap`. */
@@ -490,26 +492,20 @@ object QueryParser {
 
   /** Resolve scored atoms to the final WEIGHTED term order: atom order,
     * each prefix/fuzzy replaced in place by its (ranked, capped)
-    * expansions, global first-occurrence dedup (first occurrence keeps
-    * its boost; expansions inherit their atom's). The expand hooks are
-    * the dictionary — the real engine's dict, or NaiveIndex's postings
-    * keys. */
+    * expansions, first-occurrence dedup (expansions inherit their atom's
+    * boost). The expand hooks are the dictionary (the engine's dict, or
+    * NaiveIndex's postings keys). */
   def resolveScoredW(atoms: Seq[QueryAtom],
                      expand: String => Seq[String],
                      expandFuzzy: (String, Int) => Seq[String] =
                        (_, _) => throw new IllegalArgumentException(
                          "fuzzy atoms are not supported on this path"))
-      : Seq[(String, Double)] = {
-    val out = Seq.newBuilder[(String, Double)]
-    val seen = mutable.HashSet.empty[String]
-    atoms.foreach { a =>
-      val terms = a match {
+      : Seq[(String, Double)] =
+    atoms.flatMap { a =>
+      (a match {
         case TermAtom(t, _) => Seq(t)
         case PrefixAtom(p, _) => expand(p)
         case FuzzyAtom(s, d, _) => expandFuzzy(s, d)
-      }
-      terms.foreach(t => if (seen.add(t)) out += (t -> a.boost))
-    }
-    out.result()
-  }
+      }).map(_ -> a.boost)
+    }.distinctBy(_._1)
 }

@@ -1056,16 +1056,14 @@ object SearchOps {
   /** Resolve the engine behind a MatchRegistry index reference: the
     * documents convention ensure-builds/reopens; an explicit index root
     * is OPEN-only (the caller built it — a query must not kick off a
-    * surprise build against an empty root, it fails loudly instead). */
+    * surprise build against an empty root, it fails loudly instead) and
+    * shares match_topk's version-keyed cache, so it sees new commits. */
   def engineFor(spark: SparkSession,
                 index: graft.plans.MatchRegistry.IndexRef): QueryEngine =
     index match {
       case graft.plans.MatchRegistry.DocsTable(dir) => docEngine(spark, dir)
-      case graft.plans.MatchRegistry.IndexRoot(root) => synchronized {
-        evictDeadSessions(engineCache, spark)
-        engineCache.getOrElseUpdate(sessionCacheKey(spark, s"root:$root"),
-          new QueryEngine(spark, root))
-      }
+      case graft.plans.MatchRegistry.IndexRoot(root) =>
+        graft.plans.MatchTopKExec.engineFor(spark, root)
     }
 
   /** The docmeta join-key columns of every document matching a boolean

@@ -85,11 +85,7 @@ case class AnnTopKExec(plan: AnnTopK) extends LeafExecNode {
           if (r.isNullAt(1)) null else r.getDouble(1),
           UTF8String.fromString(plan.method))
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(AnnTopK.schema)
-      it.map(r => proj(r).copy())
-    }
+    DriverRows(sparkContext, rows, AnnTopK.schema)
   }
 }
 

@@ -1,10 +1,11 @@
 package graft.plans
 
 import graft.index.{QueryEngine, SearchRequest}
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types._
@@ -46,9 +47,8 @@ case class MatchTopKExec(plan: MatchTopK) extends LeafExecNode {
   override protected def doExecute(): RDD[InternalRow] = {
     // Coordinator phase runs driver-side (it launches its own Spark jobs,
     // like a broadcast-exchange build); the k result rows come back as a
-    // one-partition RDD.
-    val spark = SparkSession.active
-    val eng = MatchTopKExec.engineFor(spark, plan.indexRoot)
+    // one-partition RDD. The plan's own session, as in MatchIdsExec.
+    val eng = MatchTopKExec.engineFor(session, plan.indexRoot)
     // the scored path honors the field/range syntax (field atoms gate,
     // ANDed after an explicit filter argument); boolean mode gates each
     // OR-group through its own field atoms and rejects a filter
@@ -74,11 +74,7 @@ case class MatchTopKExec(plan: MatchTopK) extends LeafExecNode {
             UTF8String.fromString(m.getString(5)))
         }
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(MatchTopK.schema)
-      it.map(r => proj(r).copy())
-    }
+    DriverRows(sparkContext, rows, MatchTopK.schema)
   }
 }
 
@@ -104,6 +100,17 @@ object MatchTopKExec {
         eng
     }
   }
+}
+
+/** Rows computed on the driver as the one-partition RDD a leaf exec node
+  * returns, projected to UnsafeRows of `schema`. */
+private[plans] object DriverRows {
+  def apply(sc: SparkContext, rows: Seq[InternalRow],
+            schema: StructType): RDD[InternalRow] =
+    sc.parallelize(rows, 1).mapPartitions { it =>
+      val proj = UnsafeProjection.create(schema)
+      it.map(r => proj(r).copy())
+    }
 }
 
 object MatchStrategy extends SparkStrategy {
@@ -143,11 +150,7 @@ case class HighlightExec(plan: Highlight) extends LeafExecNode {
       eng.highlight(plan.query, plan.docId).flatMap { h =>
         h.positions.map(p => InternalRow(UTF8String.fromString(h.term), p))
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(Highlight.schema)
-      it.map(r => proj(r).copy())
-    }
+    DriverRows(sparkContext, rows, Highlight.schema)
   }
 }
 
@@ -180,11 +183,7 @@ case class ExplainScoreExec(plan: ExplainScore) extends LeafExecNode {
         InternalRow(UTF8String.fromString(e.term), e.df, e.idf, e.tf, e.dl,
           e.contribution)
       }
-    sparkContext.parallelize(rows, 1).mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(ExplainScore.schema)
-      it.map(r => proj(r).copy())
-    }
+    DriverRows(sparkContext, rows, ExplainScore.schema)
   }
 }
 

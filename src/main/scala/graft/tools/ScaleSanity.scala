@@ -199,7 +199,7 @@ object ScaleSanity {
         println(f"[scale] match-set '$q' -> $n docs in ${(System.nanoTime()-t0)/1e9}%.2f s")
       }
     val mq = "def return"
-    val mGroups = QueryParser.parse(mq)
+    val mGroups = QueryParser.parseGroups(mq).map(_.terms)
     val direct = timed("match direct re-analysis") {
       CorpusGen.dataset(spark, nDocs + 20000, 42L, 128)
         .map(d => graft.analyze.CodeAnalyzer.analyze(d.content).toSet)

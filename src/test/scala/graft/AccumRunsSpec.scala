@@ -81,7 +81,9 @@ class AccumRunsSpec extends AnyFunSuite with SparkSessionFixture {
       val e = intercept[IllegalStateException] {
         IndexBuilder.accumRuns(stream).toSeq
       }
-      assert(e.getMessage.contains("AccumMaxPostings"))
+      // the remedy an operator can act on, not the private test seam
+      assert(e.getMessage.contains("rebuild with more shards"))
+      assert(!e.getMessage.contains("AccumMaxPostings"))
     } finally IndexBuilder.AccumMaxPostings = saved
   }
 

@@ -138,6 +138,24 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       .fields.map(_.field) === Seq("id"))
   }
 
+  test("quoted field and range syntax is text on both surfaces") {
+    val q = "\"id:[1 TO 5]\" spark"
+    val g = QueryParser.parseGroups(q).head
+    assert(g.fields.isEmpty && g.terms === Seq("id", "spark"))
+    val (res, fs) = QueryParser.splitFieldFilters(q)
+    assert(fs.isEmpty && res === q)
+    assert(QueryParser.parseScored(res) === Seq(TermAtom("id"), TermAtom("spark")))
+    val g2 = QueryParser.parseGroups("\"lang:en spark\" scan").head
+    assert(g2.fields.isEmpty && g2.terms === Seq("lang", "en", "spark", "scan") &&
+      g2.phrases === Seq(Seq("lang", "en", "spark")))
+    assert(QueryParser.splitFieldFilters("\"lang:en\" -\"repo:web\" spark")._2.isEmpty)
+    // unquoted, the same atoms still gate
+    assert(QueryParser.parseGroups("id:[1 TO 5] spark").head.fields
+      .map(_.field) === Seq("id"))
+    assert(QueryParser.splitFieldFilters("lang:en spark") ===
+      (("spark", Seq(FieldFilter("lang", neg = false, Some("en"), None, None)))))
+  }
+
   test("field values with backslashes gate exactly like the oracle") {
     // a SQL literal would unescape `a\b` and break on a trailing `\`;
     // the gate binds the value verbatim, as the oracle compares it
@@ -254,6 +272,108 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
     val q = s"${terms.head} lang:scala dlen:[10 TO 200]"
     assert(distEngine.run(SearchRequest.queryString(q, 10)) ===
       engine.run(SearchRequest.queryString(q, 10)))
+  }
+
+  /** A random query over the whole grammar: words carrying `*`, `~n`
+    * (n = 3 rejects), `^n` and `-`, quoted spans holding any of those
+    * plus field syntax, `lang:`/`id:[a TO b]` atoms, and `,` groups. */
+  private def randomQuery(rnd: Random, terms: Seq[String],
+                          fields: Boolean): String = {
+    def word(): String = {
+      val t = terms(rnd.nextInt(terms.length))
+      rnd.nextInt(8) match {
+        case 0 => t.take(2 + rnd.nextInt(2)) + "*"
+        case 1 => s"$t~${rnd.nextInt(4)}"
+        case 2 => s"$t^${1 + rnd.nextInt(3)}"
+        case 3 => "-" + t
+        case _ => t
+      }
+    }
+    def atom(): String = rnd.nextInt(6) match {
+      case 0 =>
+        val body = Seq.fill(1 + rnd.nextInt(3))(
+          if (rnd.nextInt(4) == 0) randomFieldAtom(rnd) else word())
+        (if (rnd.nextInt(4) == 0) "-" else "") + body.mkString("\"", " ", "\"") +
+          (if (rnd.nextBoolean()) s"~${rnd.nextInt(3)}" else "") +
+          (if (rnd.nextInt(4) == 0) "^2" else "")
+      case 1 if fields => randomFieldAtom(rnd)
+      case _ => word()
+    }
+    Seq.fill(1 + rnd.nextInt(2))(Seq.fill(1 + rnd.nextInt(4))(atom())
+      .mkString(" ")).mkString(", ")
+  }
+
+  test("property: random queries parse, reject and answer alike on every path") {
+    import scala.util.{Failure, Try}
+    val rnd = new Random(1009)
+    val terms = topTerms(8)
+    val distEngine = new QueryEngine(spark, indexRoot, driverPathMaxPostings = 0L)
+    /** Same answer on every path, or an IllegalArgumentException on each. */
+    def agree[T](q: String, paths: Seq[(String, () => T)]): Option[T] = {
+      val got = paths.map { case (name, run) => name -> Try(run()) }
+      got.collect { case (name, Failure(e)) =>
+        assert(e.isInstanceOf[IllegalArgumentException],
+          s"'$q' on $name failed with $e")
+      }
+      assert(got.forall(_._2.isFailure) || got.forall(_._2.isSuccess),
+        s"'$q' rejected on some paths only: $got")
+      got.head._2.toOption.map { first =>
+        got.foreach { case (name, r) => assert(r.get === first, s"'$q' on $name") }
+        first
+      }
+    }
+    var answered = 0
+    (1 to 60).foreach { round =>
+      val q = randomQuery(rnd, terms, fields = round % 3 != 0)
+      Try(QueryParser.parseGroups(q)).foreach(_.foreach { g =>
+        assert((g.phrases.flatten ++ g.nearSpans.flatMap(_._1)).toSet
+          .subsetOf(g.terms.toSet), s"'$q': span tokens must be terms: $g")
+      })
+      val k = 10
+      agree(q, Seq(
+        "driver" -> (() => engine.booleanTopK(q, k)),
+        "distributed" -> (() => distEngine.booleanTopK(q, k)),
+        "oracle" -> (() => oracle.booleanTopK(q, k, metaOf))))
+        .foreach(_ => answered += 1)
+      // the scored surface: the engine's two paths, then the oracle
+      agree(q, Seq(
+        "driver" -> (() => engine.run(SearchRequest.queryString(q, k))),
+        "distributed" -> (() => distEngine.run(SearchRequest.queryString(q, k)))))
+        .foreach { hits =>
+          val (residual, fs) = QueryParser.splitFieldFilters(q)
+          assert(hits === oracle.topKFiltered(residual, k,
+            id => fs.forall(f => f.matches(metaOf(id, f.field)))), s"scored '$q'")
+        }
+    }
+    assert(answered > 20, s"only $answered of 60 queries were answerable")
+  }
+
+  test("property: row-level match() agrees with the index on field-free queries") {
+    import spark.implicits._
+    graft.GraftSql.ensureMatchSupport(spark)
+    val rnd = new Random(1013)
+    val terms = topTerms(8)
+    // a derived relation: match() evaluates row by row on the text
+    val byId = corpusDocs.map(d => (d.repo, d.path, d.commit) -> d.content).toMap
+    engine.docmeta.select("docId", "repo", "path", "commit")
+      .as[(Long, String, String, String)].collect()
+      .map { case (id, r, p, c) => (id, byId((r, p, c))) }.toSeq
+      .toDF("doc_id", "text").createOrReplaceTempView("prop_roweval_docs")
+    var compared = 0
+    (1 to 25).foreach { _ =>
+      val q = randomQuery(rnd, terms, fields = false)
+      def rowLevel = spark.sql("SELECT doc_id FROM prop_roweval_docs " +
+        s"WHERE match(text, '$q')").collect().map(_.getLong(0)).toSet
+      scala.util.Try(oracle.booleanTopK(q, nDocs.toInt * 2).map(_.docId).toSet) match {
+        case scala.util.Success(exp) =>
+          assert(rowLevel === exp, s"row-level '$q'")
+          compared += 1
+        case scala.util.Failure(e) =>
+          assert(e.isInstanceOf[IllegalArgumentException], s"'$q': $e")
+          intercept[Exception](rowLevel)
+      }
+    }
+    assert(compared > 10)
   }
 
   test("match_topk operator path honors field syntax (scored + filter arg)") {

@@ -102,8 +102,16 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
       if (toks.length >= 6) Some("\"" + toks.slice(3, 5).mkString(" ") + "\"")
       else None
     }.distinct.take(4)
-    val queries = ReferenceQueries.phraseQueries ++ sampled ++
+    // operator characters inside quotes are literal text: the span's
+    // tokens are terms plus the phrase, never a prefix, fuzzy or gate
+    val quotedOps = Seq("\"merg* join\"", "\"posting read*\" def",
+      "\"raeder~2 posting\"", "\"lang:en posting\" reader",
+      "\"id:[1 TO 5]\" posting", "\"posting reader\"^2 def") ++
+      sampled.take(2).flatMap(s => // hits: `"t1* t2"`, `"t1 t2~1"`
+        Seq(s.replaceFirst(" ", "* "), s.init + "~1\""))
+    val queries = ReferenceQueries.phraseQueries ++ sampled ++ quotedOps ++
       Seq("\"zzznope qqqnope\" def", "\"posting reader\" zzznope")
+    val distEngine = new QueryEngine(spark, indexRoot, driverPathMaxPostings = 0L)
     queries.foreach { q =>
       val expected = parityOracle.booleanTopK(q, 10)
       val got = engine.booleanTopK(q, 10)
@@ -111,7 +119,9 @@ class IndexEndToEndSpec extends AnyFunSuite with SparkSessionFixture {
       got.zip(expected).foreach { case (g, e) =>
         assert(g.score === e.score, s"query '$q' score doc ${g.docId}")
       }
+      assert(distEngine.booleanTopK(q, 10) === got, s"distributed '$q'")
     }
+    assert(quotedOps.exists(q => engine.booleanTopK(q, 10).nonEmpty))
     // a phrase is strictly tighter than its bare AND terms
     val loose = engine.booleanTopK("posting reader", 1000).map(_.docId).toSet
     val tight = engine.booleanTopK("\"posting reader\"", 1000).map(_.docId).toSet

@@ -388,6 +388,40 @@ class MatchTopKSpec extends AnyFunSuite with SparkSessionFixture {
     } finally MatchRegistry.unregister(tablePath)
   }
 
+  test("registered index root: WHERE match() sees a batch committed after the first query") {
+    import graft.corpus.CorpusDoc
+    import graft.plans.MatchRegistry
+    import spark.implicits._
+    val work = Files.createTempDirectory(
+      Paths.get("target").toAbsolutePath, "matchcommit").toString
+    val tablePath = s"$work/corpus.parquet"
+    val idxRoot = s"$work/index"
+    def doc(name: String, content: String) =
+      CorpusDoc("r", s"$name.scala", "c0", "scala", content)
+    val first = Seq(doc("a", "zebraquery alpha"), doc("b", "other words"))
+    first.toDS().write.parquet(tablePath)
+    IndexBuilder.build(spark, first.toDS(), idxRoot, 2)
+    MatchRegistry.register(tablePath, "content",
+      Seq("repo" -> "repo", "path" -> "path", "commit" -> "commit"),
+      MatchRegistry.IndexRoot(idxRoot))
+    try {
+      GraftSql.ensureMatchSupport(spark)
+      def matched(): Seq[String] = {
+        spark.read.parquet(tablePath).createOrReplaceTempView("commitcorpus")
+        spark.sql("SELECT path FROM commitcorpus WHERE match(content, 'zebraquery')")
+          .collect().map(_.getString(0)).sorted.toSeq
+      }
+      assert(matched() === Seq("a.scala"))
+      val more = Seq(doc("c", "zebraquery gamma"))
+      more.toDS().write.mode("append").parquet(tablePath)
+      IndexBuilder.build(spark, more.toDS(), idxRoot, 2, batch = 1)
+      assert(matched() === Seq("a.scala", "c.scala"))
+      assert(GraftSql.search(spark, idxRoot, "zebraquery", 10)
+        .collect().map(_.getAs[String]("path")).sorted.toSeq ===
+        Seq("a.scala", "c.scala"))
+    } finally MatchRegistry.unregister(tablePath)
+  }
+
   test("lang=-partitioned corpus: match() takes the semi-join on whole-root, sub-dir and multi-root reads") {
     import graft.plans.{MatchFilter, MatchIds, MatchRegistry}
     import org.apache.spark.sql.functions.expr

@@ -483,6 +483,18 @@ class WandSpec extends AnyFunSuite {
     // boolean surface ignores '^' (analyzer strips it): no boost leaks
     assert(QueryParser.parseGroups("alpha^2 beta").head.terms ===
       Seq("alpha", "beta"))
+    // "…"^n: on the scored surface the boost applies to every token of
+    // the span (the Lucene phrase boost), after an optional ~n; the
+    // boolean surface has no boosts, so it changes nothing there
+    assert(QueryParser.parseScored("\"merge scan\"^2 join") ===
+      Seq(TermAtom("merge", 2.0), TermAtom("scan", 2.0), TermAtom("join")))
+    assert(QueryParser.parseScored("\"merge scan\"~1^3") ===
+      Seq(TermAtom("merge", 3.0), TermAtom("scan", 3.0)))
+    assert(QueryParser.parseGroups("\"merge scan\"^2 join") ===
+      QueryParser.parseGroups("\"merge scan\" join"))
+    // a malformed span boost is not boost syntax: the suffix is a word
+    assert(QueryParser.parseScored("\"merge scan\"^xy") ===
+      Seq(TermAtom("merge"), TermAtom("scan"), TermAtom("xy")))
   }
 
   test("SEARCH_AFTER: page chain reconstructs the full ranking exactly") {
@@ -616,6 +628,19 @@ class WandSpec extends AnyFunSuite {
     assert(one("\"alpha\"~3 beta").terms === Seq("alpha", "beta"))
     // a word-level '~n' is fuzzy, never slop; quoted '~' has no stem
     assert(one("alpha~2 beta").fuzzies === Seq(("alpha", 2)))
+    // operators inside quotes are text: span tokens are always terms
+    assert(one("\"merg* join\"") ===
+      MatchGroup(Seq("merg", "join"), Seq(Seq("merg", "join"))))
+    assert(one("\"raeder~2 posting\"") ===
+      MatchGroup(Seq("raeder", "posting"), Seq(Seq("raeder", "posting"))))
+    assert(one("\"posting read*\"~1 def") ===
+      MatchGroup(Seq("posting", "read", "def"), Nil,
+        nearSpans = Seq((Seq("posting", "read"), 1))))
+    // scored surface: a span is its tokens as plain terms, ~n ignored
+    assert(QueryParser.parseScored("\"merg* join\"") ===
+      Seq(TermAtom("merg"), TermAtom("join")))
+    assert(QueryParser.parseScored("\"merge scan\"~2 join") ===
+      Seq(TermAtom("merge"), TermAtom("scan"), TermAtom("join")))
     // pure-negative sloppy span rejected
     intercept[IllegalArgumentException] {
       QueryParser.parseGroups("-\"alpha beta\"~2") }
@@ -670,6 +695,11 @@ class WandSpec extends AnyFunSuite {
     // free and analyzes to nothing, beta stays a positive term)
     assert(one("alpha -\"beta") ===
       MatchGroup(Seq("alpha", "beta"), Nil, Nil, Nil, Nil, Nil))
+    // on both surfaces: an unpartnered quote does not hide an operator
+    assert(one("\"merg* join") ===
+      MatchGroup(Seq("join"), Nil, prefixes = Seq("merg")))
+    assert(QueryParser.parseScored("\"merg* join") ===
+      Seq(PrefixAtom("merg"), TermAtom("join")))
     // '-' mid-word is punctuation for the analyzer, not a negation
     assert(one("alpha-beta").terms === Seq("alpha", "beta"))
     // a lone '-' word contributes nothing

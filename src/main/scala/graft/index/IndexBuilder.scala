@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-document index metadata (the ES-internal "stored fields + norms"
   * analogue; carries the sha256 row invariant vs the source table).
@@ -56,10 +57,7 @@ final case class PostingRow(shard: Int, term: String, df: Long, bytes: Long,
   * when the build disabled positions). Phrase queries read this shape. */
 final case class PostingRowPos(shard: Int, term: String, df: Long, bytes: Long,
                                blocks: Seq[Array[Byte]], skips: Seq[Skip],
-                               posBlocks: Seq[Array[Byte]]) {
-  /** This row in the scoring projection (posBlocks dropped). */
-  def scoring: PostingRow = PostingRow(shard, term, df, bytes, blocks, skips)
-}
+                               posBlocks: Seq[Array[Byte]])
 
 object PostingRow {
   /** The scoring-projection column list (everything but posBlocks). */
@@ -69,6 +67,50 @@ object PostingRow {
 
 final case class BuildReport(manifest: Manifest, segment: Option[SegmentInfo],
                              builtShards: Seq[Int], docs: Long)
+
+/** Named Long sums and maxima over one job's rows, folded by the job's
+  * own tasks: no extra pass, and nothing registered on the session (an
+  * `Observation` installs a listener for the session's lifetime, which
+  * re-raises every later failed query at ERROR). Each partition reports
+  * once its rows are drained, keyed by partition id, so a partition
+  * recomputed after a lost cache block or a retried task counts once.
+  * `get` reads like an Observation's metrics: a sum or max over no rows
+  * is null (IndexBuilder.obsLong reads it as 0). */
+private[graft] final class PassMetrics[T](spark: SparkSession, name: String,
+    sums: Seq[(String, T => Long)], maxes: Seq[(String, T => Long)] = Nil)
+    extends Serializable {
+  private val fs = (sums ++ maxes).map(_._2).toArray
+  private val acc = spark.sparkContext.collectionAccumulator[(Int, Array[Long])](name)
+
+  /** `it`, reporting its partition's metrics (and row count, last) once
+    * drained. */
+  def track(it: Iterator[T]): Iterator[T] = new Iterator[T] {
+    private val v = Array.tabulate(fs.length + 1)(i =>
+      if (i < sums.size || i == fs.length) 0L else Long.MinValue)
+    private var reported = false
+    def hasNext: Boolean = it.hasNext || {
+      if (!reported) { reported = true; acc.add(TaskContext.getPartitionId() -> v) }
+      false
+    }
+    def next(): T = {
+      val x = it.next()
+      for (i <- fs.indices)
+        v(i) = if (i < sums.size) v(i) + fs(i)(x) else math.max(v(i), fs(i)(x))
+      v(fs.length) += 1
+      x
+    }
+  }
+
+  /** Every metric by name, once the job has run. */
+  def get: Map[String, Any] = {
+    val parts = acc.value.asScala.toMap.values.toSeq
+    val empty = parts.forall(_(fs.length) == 0)
+    (sums ++ maxes).map(_._1).zipWithIndex.map { case (n, i) =>
+      val vs = parts.map(_(i))
+      n -> (if (empty) null else java.lang.Long.valueOf(if (i < sums.size) vs.sum else vs.max))
+    }.toMap
+  }
+}
 
 /**
  * SPIMI-style distributed index build over an Iceberg-style corpus table
@@ -137,7 +179,7 @@ object IndexBuilder {
             "(drop the root and re-run IndexBuilder, or point at a fresh root)")
     }
 
-  /** One numeric metric of a build pass's Observation. Null is the empty
+  /** One numeric metric of a build pass (PassMetrics). Null is the empty
     * pass (sum/max over no rows) and reads 0; a missing key or a value of
     * another type fails naming the key — read as 0 it would make every
     * budget check downstream of it pass. */
@@ -453,9 +495,13 @@ object IndexBuilder {
       .sortWithinPartitions("repo", "path", "commit")
       .as[CorpusDoc]
 
-    // 2. single analysis pass: docIds, sha256, term freqs + positions
+    // 2. single analysis pass: docIds, sha256, term freqs + positions;
+    //    the pass's doc and token counts ride it (PassMetrics)
     val idOf = tableIdOf
     val withPos = positions
+    val anMetrics = new PassMetrics[AnalyzedDoc](spark, "graft-build analyze",
+      sums = Seq(("docs", _ => 1L), ("tokens", _.docLen.toLong)),
+      maxes = Seq(("maxDl", _.docLen.toLong)))
     val analyzed: Dataset[AnalyzedDoc] = routed.mapPartitions { it =>
       val shard = TaskContext.getPartitionId()
       var idx = 0L
@@ -463,7 +509,7 @@ object IndexBuilder {
       // partition's documents (a shard's docs repeat their vocabulary),
       // and the per-doc map/position buffers are reused (r8)
       val session = new CodeAnalyzer.AnalyzerSession
-      it.map { d =>
+      anMetrics.track(it.map { d =>
         val id = docIdFor(effBatch, shard, idx)
         idx += 1
         // fused single-pass analysis (r8): term-sorted positions straight
@@ -484,7 +530,7 @@ object IndexBuilder {
         AnalyzedDoc(id, d.repo, d.path, d.commit, d.lang,
           sha256Hex(d.content), dl, terms,
           idOf.map(f => f(d)).getOrElse(-1L))
-      }
+      })
     }.persist(StorageLevel.MEMORY_AND_DISK)
 
     // Named by the MONOTONIC manifest version, never by segment count:
@@ -503,15 +549,14 @@ object IndexBuilder {
     // noop-sink materialization (guide §1.4): same full evaluation as
     // count() but one job with no aggregation final stage — every AQE
     // barrier here is SERIAL time both bench levels pay equally, which
-    // is exactly what depresses the 2->8 scaling ratio (r8). The token
-    // count rides this job via observe() and feeds the postings-path
-    // choice below (no extra pass).
-    val anObs = org.apache.spark.sql.Observation(s"analyze-$segName")
-    analyzed.observe(anObs, sum("docLen").as("tokens"), max("docLen").as("maxDl"))
-      .write.format("noop").mode("overwrite").save()
-    val anMetrics = anObs.get
-    val passTokens = obsLong(anMetrics, "tokens")
-    val passMaxDl = obsLong(anMetrics, "maxDl")
+    // is exactly what depresses the 2->8 scaling ratio (r8). The
+    // analysis metrics fill as this job runs and feed the postings-path
+    // choice below and the manifest (no extra pass).
+    analyzed.write.format("noop").mode("overwrite").save()
+    val an = anMetrics.get
+    val docCount = obsLong(an, "docs")
+    val passTokens = obsLong(an, "tokens")
+    val passMaxDl = obsLong(an, "maxDl")
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -522,43 +567,36 @@ object IndexBuilder {
     // analysis instead of deserializing AnalyzedDoc per row (r8)
     val shardCol = shardColOf(col("docId"))
 
-    // 3. docmeta segment; doc/token metrics ride the write job via
-    //    observe() (A11 stream-counter analogue) — no extra pass.
-    val docObs = org.apache.spark.sql.Observation(s"docmeta-$segName")
+    // 3. docmeta segment
     val docmetaJob = Future {
       spark.sparkContext.setJobDescription(s"graft-build $segName: docmeta")
       analyzed
         .select(col("docId"), col("repo"), col("path"), col("commit"),
           col("lang"), col("sha256"), col("docLen"), shardCol.as("shard"),
           col("tableId"))
-        .observe(docObs, count(lit(1)).as("docs"), sum("docLen").as("tokens"))
         .write.mode("overwrite").parquet(s"$segRoot/docmeta")
     }
 
-    // 4. postings: one MAP-ONLY job — runs are built and term-major
-    //    sorted inside the analysis partition (partitionId == shard) and
-    //    written directly, one file per shard. The old reduce
-    //    (repartition on hash(shard, term) + re-sort) only re-established
-    //    an order the map side already emits; dropping it removes the
-    //    run shuffle, a job barrier and an AQE planning gap from every
-    //    build (r8 continuation). Parquet row-group min/max pruning on
-    //    `term` is unchanged: row groups are term-ranges within each
-    //    file either way (files never had disjoint term spans — the old
-    //    hash placement interleaved terms across files too).
+    // 4. postings: one MAP-ONLY job. partitionId == shard after the
+    //    routing repartition, so every (shard, term) run lives inside
+    //    one analysis partition and is built right there (no run
+    //    shuffle), and each shard's postings are one term-major file —
+    //    the layout merges keep and the query path's shard reads take.
     // Sort-free postings path decision (r8 continuation): the mean
     // tokens-per-built-shard (an upper bound on postings per partition —
     // tf >= 1) with 2x skew headroom, PLUS the largest single document
     // (hash-sharding scatters a repo's files uniformly, so the realistic
     // per-shard token-mass skew driver is one giant document landing
-    // whole on one shard — maxDl rides the same observation for free),
+    // whole on one shard — maxDl rides the same pass metrics for free),
     // must fit the accumulation budget; otherwise keep the spillable
-    // in-stage sort. Decided DRIVER-side from the observation that rode
+    // in-stage sort. Decided DRIVER-side from the metrics that rode
     // the analyze job — both paths share encodeRun and produce
     // byte-identical segments. (todo is non-empty here: build() returned
     // early above when there was nothing to build.)
     val accumOk =
       (passTokens / todo.size) * 2 + passMaxDl <= AccumMaxPostings
-    val pstObs = org.apache.spark.sql.Observation(s"postings-$segName")
+    val pstMetrics = new PassMetrics[PostingRowPos](spark, "graft-build postings",
+      sums = Seq(("terms", _ => 1L), ("postings", _.df), ("bytes", _.bytes)))
     val postingsJob = Future {
       spark.sparkContext.setJobDescription(s"graft-build $segName: postings")
       val exploded = analyzed
@@ -570,22 +608,16 @@ object IndexBuilder {
         .select(shardCol.as("shard"), col("t.term").as("term"), col("docId"),
           col("t.tf").as("tf"), col("docLen").as("dl"), col("t.pos").as("pos"))
         .as[TokenPosting]
-      // MAP-SIDE run build (r8, guide §2.3 "aggregate before you
-      // shuffle"): partitionId == shard after the routing repartition,
-      // so every (shard, term) posting run lives entirely inside one
-      // analysis partition — build the runs right there. The shuffle
-      // then carries one compressed row per (shard, term) instead of
-      // one thin row per posting (bench corpus: ~6.4k rows vs ~10M).
       // Within budget, accumRuns groups by hash with no sort at all
-      // (docIds arrive ascending per key — r8 continuation); above it,
-      // the spillable in-stage SortExec + one-run-at-a-time buildRuns
-      // keep the memory bound. Both key runs on (shard, term), so even
-      // a multi-shard input partition (foreign corpora fed to build()
-      // directly) stays correct.
+      // (docIds arrive ascending per key); above it, the spillable
+      // in-stage SortExec + one-run-at-a-time buildRuns keep the memory
+      // bound. Both key runs on (shard, term), so even a multi-shard
+      // input partition (foreign corpora fed to build() directly) stays
+      // correct.
       val runs =
-        if (accumOk) exploded.mapPartitions(accumRuns)
+        if (accumOk) exploded.mapPartitions(it => pstMetrics.track(accumRuns(it)))
         else exploded.sortWithinPartitions("term", "shard", "docId")
-          .mapPartitions(buildRuns)
+          .mapPartitions(it => pstMetrics.track(buildRuns(it)))
       // TERM-major row order (both run builders emit (term, shard)
       // ascending): parquet min/max stats on `term` then actually prune
       // row groups for the query path's term-IN filter (shard-major made
@@ -593,19 +625,16 @@ object IndexBuilder {
       // hot-term queries at 220k docs). Small row groups (4 MB) give the
       // pruning its granularity.
       runs
-        .observe(pstObs, count(lit(1)).as("terms"), sum("df").as("postings"),
-          sum("bytes").as("bytes"))
         .write.mode("overwrite")
         .option("parquet.block.size", (4 * 1024 * 1024).toString)
         .parquet(s"$segRoot/postings")
     }
     Await.result(docmetaJob, Duration.Inf)
     Await.result(postingsJob, Duration.Inf)
-    val docCount = docObs.get("docs").asInstanceOf[Long]
-    val tokCount = docObs.get("tokens").asInstanceOf[Long]
-    val termRows = pstObs.get("terms").asInstanceOf[Long]
-    val postingCount = pstObs.get("postings").asInstanceOf[Long]
-    val byteCount = pstObs.get("bytes").asInstanceOf[Long]
+    val pst = pstMetrics.get
+    val termRows = obsLong(pst, "terms")
+    val postingCount = obsLong(pst, "postings")
+    val byteCount = obsLong(pst, "bytes")
     analyzed.unpersist()
 
     val seg = SegmentInfo(
@@ -633,7 +662,7 @@ object IndexBuilder {
     // the new segment's postings — new manifest falls back to derived dfs
     // until the next compaction re-materializes it.
     val manifest = Manifest(prev.version + 1, numShards,
-      prev.segments :+ seg, prev.numDocs + docCount, prev.totalTokens + tokCount,
+      prev.segments :+ seg, prev.numDocs + docCount, prev.totalTokens + passTokens,
       dict = None, batchBase = prev.batchBase,
       format = Some(FormatVersion))
 

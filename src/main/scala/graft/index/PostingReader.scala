@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -15,36 +15,61 @@ import org.apache.parquet.schema.{GroupType, MessageType}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** The held-open postings files of one snapshot: the driver path's read
-  * of a query's posting rows with no Spark job (ES: the query phase over
-  * segments the node holds open). Footers are read once, at
-  * construction; each read opens the files' streams, reads only the row
-  * groups, pages and records whose `term` is in the query's set
-  * (parquet-mr's stats, dictionary and column-index filters take one
-  * `term IN (...)` predicate; records are filtered as they are assembled)
-  * and returns exactly the rows the Spark scan of the same directories
-  * yields. Thread-safe: the footers
-  * are immutable and every read has its own streams. */
-final class PostingReader(dirs: Seq[String], conf: Configuration) {
-  private val files: Seq[(HadoopInputFile, ParquetMetadata)] =
-    dirs.flatMap(PostingReader.dataFiles(_, conf)).map { st =>
-      val in = HadoopInputFile.fromStatus(st, conf)
-      in -> PostingReader.footer(in, conf)
-    }
+/** The held-open postings files of one snapshot: the one way the query
+  * path reads a query's posting rows (ES: the query phase over segments
+  * a node holds open). Footers are read once, at construction; each read
+  * opens the files' streams, reads only the row groups, pages and records
+  * whose `term` is in the query's set (and whose `shard` is the asked
+  * one; parquet-mr's stats, dictionary and column-index filters take the
+  * one predicate; records are filtered as they are assembled) and
+  * returns exactly the rows the Spark scan of the same files yields. The
+  * driver holds one per engine; a distributed task opens one over the
+  * files the driver listed for its shard. Thread-safe: the footers are
+  * immutable and every read has its own streams. */
+final class PostingReader private (conf: Configuration, inputs: Seq[HadoopInputFile]) {
+  /** Every postings data file under `dirs`. */
+  def this(dirs: Seq[String], conf: Configuration) = this(conf,
+    dirs.flatMap(PostingReader.dataFiles(_, conf)).map(HadoopInputFile.fromStatus(_, conf)))
 
-  /** The posting rows of `terms` in every held file; `positions = false`
-    * projects `posBlocks` out of the read (the rows then carry none, as
-    * the scoring projection's rows do). */
-  def rows(terms: Seq[String], positions: Boolean): Seq[PostingRowPos] =
+  private val files: IndexedSeq[(HadoopInputFile, ParquetMetadata)] =
+    inputs.toIndexedSeq.map(in => in -> PostingReader.footer(in, conf))
+
+  /** Per file, each row group's `shard` min/max (every shard when the
+    * group has no stats). Builder-, merge- and rebase-written files hold
+    * one shard each; files merged by older engines span several, and a
+    * shard read of them reads their other shards' pages too. */
+  private val shardSpans: IndexedSeq[Seq[(Int, Int)]] = files.map { case (_, f) =>
+    f.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+      .find(_.getPath.toDotString == "shard").map(_.getStatistics)
+      .filter(st => st != null && st.hasNonNullValue)
+      .fold((0, Int.MaxValue))(st => (st.genericGetMin.asInstanceOf[Integer].intValue,
+        st.genericGetMax.asInstanceOf[Integer].intValue)))
+  }
+
+  private def holds(f: Int, shard: Int): Boolean =
+    shardSpans(f).exists { case (lo, hi) => lo <= shard && shard <= hi }
+
+  /** The paths of the held files that may hold rows of `shard`. */
+  def filesOf(shard: Int): Seq[String] =
+    files.indices.filter(holds(_, shard)).map(files(_)._1.getPath.toString)
+
+  /** The posting rows of `terms` in every held file, or only those of
+    * `shard`; `positions = false` projects `posBlocks` out of the read
+    * (the rows then carry none, as the scoring projection's rows do). */
+  def rows(terms: Seq[String], positions: Boolean,
+           shard: Option[Int] = None): Seq[PostingRowPos] =
     if (terms.isEmpty) Nil
     else {
       val wanted = terms.toSet
-      val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("term"),
-        wanted.map(Binary.fromString).asJava))
+      val termIn = FilterApi.in(FilterApi.binaryColumn("term"),
+        wanted.map(Binary.fromString).asJava)
+      val filter = FilterCompat.get(shard.fold(termIn: FilterPredicate)(s =>
+        FilterApi.and(termIn, FilterApi.eq(FilterApi.intColumn("shard"), Integer.valueOf(s)))))
       // options built from the held conf: the no-argument builder loads
       // a fresh Configuration, ~10 ms per file
       val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
-      files.flatMap { case (in, footer) =>
+      files.indices.filter(f => shard.forall(holds(f, _))).flatMap { f =>
+        val (in, footer) = files(f)
         val stream = in.newStream()
         val r = try new ParquetFileReader(in, footer, options, stream)
           catch { case e: Throwable => stream.close(); throw e }
@@ -60,10 +85,10 @@ final class PostingReader(dirs: Seq[String], conf: Configuration) {
           var pages = r.readNextFilteredRowGroup()
           while (pages != null) {
             val rr = io.getRecordReader(pages,
-              new PostingReader.RowMaterializer(schema, wanted), FilterCompat.NOOP)
+              new PostingReader.RowMaterializer(schema, wanted, shard), FilterCompat.NOOP)
             var i = 0L
             while (i < pages.getRowCount) {
-              val row = rr.read() // null: a term outside the set
+              val row = rr.read() // null: a term or shard outside the read
               if (row != null) out += row
               i += 1
             }
@@ -76,6 +101,11 @@ final class PostingReader(dirs: Seq[String], conf: Configuration) {
 }
 
 object PostingReader {
+  /** A reader over the listed data files (paths as [[filesOf]] gives
+    * them): a distributed task's view of its shard's files. */
+  def ofFiles(paths: Seq[String], conf: Configuration): PostingReader =
+    new PostingReader(conf, paths.map(p => HadoopInputFile.fromPath(new Path(p), conf)))
+
   /** The data files of one parquet directory as Spark's scan lists them:
     * names starting with `_` or `.` (`_SUCCESS`, checksum files) are not
     * data. */
@@ -129,10 +159,11 @@ object PostingReader {
 
   /** Assembles one stored posting row from its parquet record, by column
     * name; a null list stays null and an empty one empty, as the Spark
-    * encoder decodes them. A row whose term is not `wanted` is null, and
-    * its byte columns are never copied (`term` precedes them in the
-    * record). */
-  private final class RowMaterializer(schema: MessageType, wanted: Set[String])
+    * encoder decodes them. A row whose term is not `wanted`, or whose
+    * shard is not `only`, is null, and its byte columns are never copied
+    * (`shard` and `term` precede them in the record). */
+  private final class RowMaterializer(schema: MessageType, wanted: Set[String],
+                                      only: Option[Int])
       extends RecordMaterializer[PostingRowPos] {
     private var shard = 0
     private var term: String = _
@@ -161,7 +192,7 @@ object PostingReader {
         case "shard" => ints(shard = _)
         case "term" => binaries { v =>
           term = v.toStringUsingUTF8
-          keep = wanted(term)
+          keep = wanted(term) && only.forall(_ == shard)
         }
         case "df" => longs(df = _)
         case "bytes" => longs(bytes = _)

@@ -1,9 +1,12 @@
 package graft.index
 
 import graft.table.IcebergLite
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, GraftBridge,
-  SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+import scala.reflect.ClassTag
 
 /**
  * Read path: BM25 top-k over the committed index — the engine-side
@@ -11,52 +14,44 @@ import org.apache.spark.sql.functions._
  * (analyzed fields in the reference's sentiment.py:782-793; dashboard
  * reads its export.json).
  *
- * Plan shape (scale-first):
- *   dict lookup (parquet filtered on term => row-group pruned, tiny)
- *   -> postings scan filtered to the query terms (pushed to parquet;
- *      files are sorted by (shard, term) at build time so min/max stats
- *      prune row groups)
- *   -> per document-shard block-max WAND top-k (groupByKey(shard) —
- *      shards score in parallel, the ES "query phase")
- *   -> global top-k merge: orderBy(score desc, docId asc).limit(k),
- *      planned as TakeOrderedAndProject (the ES "reduce phase")
+ * Read shape (scale-first):
+ *   dict lookup (driver-resident map, or a term-filtered parquet read)
+ *   -> per document-shard block-max WAND top-k over that shard's posting
+ *      rows of the query terms, read by PostingReader (parquet-mr with
+ *      `term IN (...)` and `shard = s` on row-group stats, dictionary and
+ *      column index; postings files are term-major, one shard each) —
+ *      shards score in parallel, the ES "query phase"
+ *   -> global top-k merge of the per-shard top-k on the driver (the ES
+ *      "reduce phase")
  *   -> docmeta fetch for the k winners only (IN-filter, pushed down).
  *
- * A driver fast path handles small posting volumes (below ~0.5M
- * postings) with no Spark job: the query's rows come straight from the
- * postings files' held-open footers (PostingReader), so an ungated query
- * plans no scan and schedules nothing, and a gated one runs only its gate
- * collect. The distributed per-shard path is the 10^12-doc route and
- * already wins at 1M docs (measured p95 0.30s vs 5.7s driver-side).
- * Selection is automatic from the dictionary's df totals, in one place:
- * the per-shard executor (point lookups have their own, on the pruned
- * scan's volume).
+ * Small posting volumes (below ~0.5M postings) take the driver path: the
+ * held-open reader walks every shard with no Spark job (a gated query
+ * runs only its gate collect). Larger ones run one Spark job with one
+ * task per shard; each task opens only its own shard's files and runs
+ * the same walk, with no Catalyst plan and no postings shuffle. The
+ * distributed path is the 10^12-doc route and already won at 1M docs in
+ * its earlier scan-and-group form (measured p95 0.30s vs 5.7s
+ * driver-side). Selection is automatic from the dictionary's df totals,
+ * in one place: the per-shard executor, whose one-shard walks are also
+ * the point lookups.
  */
 object QueryEngine {
-  /** The ONE place per-term cursors are built from posting rows (driver
-    * fast path, distributed topK, boolean groups, match sets): sub-lists
-    * of a term sorted by first docId, wrapped with the term's idf —
-    * PRE-MULTIPLIED by its query boost (`word^2`), which scales scores
-    * AND every WAND bound consistently (both derive from the cursor's
-    * idf). Kept static so distributed closures capture only
-    * (bm, dfs, weights). */
-  private[index] def termCursors(rs: Seq[PostingRow], bm: Bm25,
+  /** The ONE place per-term cursors are built from posting rows (every
+    * walk and point lookup): sub-lists of a term sorted by first docId,
+    * wrapped with the term's idf — PRE-MULTIPLIED by its query boost
+    * (`word^2`), which scales scores AND every WAND bound consistently
+    * (both derive from the cursor's idf). Positions ride along when the
+    * read took them (rows read without them carry none — curPositions
+    * then rejects loudly). Kept static so distributed closures capture
+    * only (bm, dfs, weights). */
+  private[index] def termCursors(rs: Seq[PostingRowPos], bm: Bm25,
       dfs: Map[String, Long],
       weights: Map[String, Double] = Map.empty)
       : Map[String, PostingCursor] =
     rs.groupBy(_.term).map { case (t, subs) =>
       val sorted = subs.sortBy(_.skips.head.firstDoc)
       t -> new PostingCursor(t, bm.idf(dfs(t)) * weights.getOrElse(t, 1.0),
-        sorted.map(r => (r.blocks, r.skips, Seq.empty[Array[Byte]])), bm)
-    }
-
-  /** Cursors over the FULL stored rows: positions ride along (empty
-    * posBlocks stay empty — curPositions then rejects loudly). */
-  private[index] def termCursorsPos(rs: Seq[PostingRowPos], bm: Bm25,
-      dfs: Map[String, Long]): Map[String, PostingCursor] =
-    rs.groupBy(_.term).map { case (t, subs) =>
-      val sorted = subs.sortBy(_.skips.head.firstDoc)
-      t -> new PostingCursor(t, bm.idf(dfs(t)),
         sorted.map(r => (r.blocks, r.skips, r.posBlocks)), bm)
     }
 
@@ -71,34 +66,34 @@ object QueryEngine {
       : (Map[String, PostingCursor], Seq[Seq[PostingCursor]],
          Seq[PostingCursor], Seq[(Seq[String], Map[String, PostingCursor])],
          Seq[(Seq[String], Int, Map[String, PostingCursor])]) = {
-    val cur = termCursorsPos(
+    val cur = termCursors(
       rs.filter(r => group.terms.contains(r.term)), bm, dfsB)
     // one cursor set per required union: this shard's posting rows of
     // the expansion terms (an empty set kills the group in this shard)
     val preSets = group.reqSets.map(s =>
-      termCursorsPos(rs.filter(r => s.contains(r.term)), bm, dfsB)
+      termCursors(rs.filter(r => s.contains(r.term)), bm, dfsB)
         .values.toSeq)
     val negCur =
       if (group.exclTerms.isEmpty) Nil
-      else termCursorsPos(
+      else termCursors(
         rs.filter(r => group.exclTerms.contains(r.term)), bm, dfsB)
         .values.toSeq
     val negPh = group.negPhrases.map { ph =>
       val phSet = ph.toSet
-      ph -> termCursorsPos(rs.filter(r => phSet.contains(r.term)), bm, dfsB)
+      ph -> termCursors(rs.filter(r => phSet.contains(r.term)), bm, dfsB)
     }
     // negated sloppy spans carry their own cursor maps, same reason
     val negNear = group.negNearSpans.map { case (ph, slop) =>
       val phSet = ph.toSet
       (ph, slop,
-        termCursorsPos(rs.filter(r => phSet.contains(r.term)), bm, dfsB))
+        termCursors(rs.filter(r => phSet.contains(r.term)), bm, dfsB))
     }
     (cur, preSets, negCur, negPh, negNear)
   }
 
   /** One shard's (gate index, docId) rows -> per-gate SORTED docId
-    * arrays (the allowedCursor input). Static: runs inside cogrouped
-    * closures. */
+    * arrays (the allowedCursor input). Static: runs inside the gated
+    * walk's shard tasks. */
   private[index] def sortGates(ts: Array[(Int, Long)]): Map[Int, Array[Long]] =
     ts.groupBy(_._1).map { case (i, ps) =>
       val arr = ps.map(_._2)
@@ -279,18 +274,23 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
   // lazy vals: file listings + parquet footers are resolved once per
   // engine, not once per query (ES analogue: segments held open).
-  /** Full stored rows, positions included — ONLY phrase paths read this. */
+  /** Full stored rows, positions included, as a Spark scan. The query
+    * path reads through `postingReader`; this scan serves the
+    * uncompacted `dict` derivation and callers outside the engine. */
   lazy val postingsFull: DataFrame = spark.read.parquet(postingPaths: _*)
-  /** The scoring projection: posBlocks pruned out of the parquet scan —
-    * BM25/boolean scoring never pays the position bytes (the Lucene
-    * .doc/.pos split as column pruning). */
+  /** The scoring projection of the scan: posBlocks pruned out (the
+    * Lucene .doc/.pos split as column pruning). */
   lazy val postings: DataFrame = postingsFull.select(
     PostingRow.LiteCols.map(col): _*)
   lazy val docmeta: DataFrame = spark.read.parquet(docmetaPaths: _*)
-  /** The same postings files, footers held open: the driver path's
-    * job-free read (opened by the first driver-path query). */
-  @transient private lazy val postingReader =
-    new PostingReader(postingPaths, spark.sessionState.newHadoopConf())
+  @transient private lazy val hadoopConf = spark.sessionState.newHadoopConf()
+  /** The snapshot's postings files, footers held open: every posting
+    * read of the query path (opened by the first query). */
+  @transient private lazy val postingReader = new PostingReader(postingPaths, hadoopConf)
+  /** The Hadoop conf the distributed path's shard tasks open files with,
+    * shipped once per engine. */
+  @transient private lazy val taskConf =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
 
   /** Every committed segment was built with positions — the phrase-query
     * precondition. */
@@ -409,41 +409,47 @@ final class QueryEngine(spark: SparkSession, val root: String,
       .orderBy(desc("score"), asc("docId"))
   }
 
-  /** Per-shard walk results: on the driver fast path, the collected shard
-    * outputs; on the distributed path, the plan (not yet run). */
-  private type Shards[R] = Either[Seq[R], Dataset[R]]
+  /** Per-shard walk results: on the driver path, the collected shard
+    * outputs; on the distributed path, the job (not yet run). */
+  private type Shards[R] = Either[Seq[R], RDD[R]]
 
   /** The ONE driver-vs-distributed fork of every posting walk: `walk`
-    * runs once per document shard over that shard's rows and the
-    * shard's (gate index -> sorted allowed docIds). The driver path takes
-    * its rows from `local` (the held-open postings files, no job), the
-    * distributed path from the `rows` scan; each is built only on its own
-    * path. Each gate is a docmeta predicate scanned with the predicate
-    * pushed down. Without gates the plan has no cogroup. With gates, one
-    * job collects at most limit+1 allowed ids (instead of
-    * count-then-collect): within the limit the array IS every allowed id;
-    * over it, the walk falls through to the distributed path, where gates
-    * cogroup with the postings by shard and are never collected to the
-    * driver. */
-  private def perShard[P, R: Encoder](rows: => Dataset[P], local: => Seq[P],
-      shardOf: P => Int, volume: Long, gates: Seq[Column])
-      (walk: (Seq[P], Map[Int, Array[Long]]) => Iterator[R]): Shards[R] = {
+    * runs once per document shard (every shard, or only `shard`) over the
+    * shard's PostingReader rows of `terms` (posBlocks only when
+    * `positions`) and its (gate index -> sorted allowed docIds). Within
+    * `driverPathMaxPostings` of `volume`, the driver's held-open reader
+    * serves every shard with no Spark job; over it, one job runs one task
+    * per shard over the files the driver listed for it (so a pinned
+    * engine keeps its snapshot). Gates are docmeta predicates, pushed
+    * down. A small gated walk collects at most limit+1 allowed ids
+    * (within the limit the array IS every allowed id); over it, the ids
+    * are shuffled to their shard's task, never to the driver. */
+  private def perShard[R: ClassTag](terms: Seq[String], positions: Boolean,
+      volume: Long, gates: Seq[Column], shard: Option[Int] = None)
+      (walk: (Seq[PostingRowPos], Map[Int, Array[Long]]) => Iterator[R]): Shards[R] = {
     def onDriver(gatesOf: Int => Map[Int, Array[Long]]): Shards[R] =
-      Left(local.groupBy(shardOf).toSeq.flatMap { case (s, rs) =>
-        walk(rs, gatesOf(s)) })
+      Left(postingReader.rows(terms, positions, shard).groupBy(_.shard).toSeq
+        .flatMap { case (s, rs) => walk(rs, gatesOf(s)) })
+    // one partition per walked shard, in shard order (partition id ==
+    // shard when every shard walks); a shard with no rows walks nothing
+    def shardRows: RDD[Seq[PostingRowPos]] = {
+      val ids = shard.fold(0 until manifest.numShards: Seq[Int])(Seq(_))
+      val conf = taskConf
+      spark.sparkContext.parallelize(ids.map(s => s -> postingReader.filesOf(s)), ids.size)
+        .map { case (s, files) =>
+          PostingReader.ofFiles(files, conf.value.value).rows(terms, positions, Some(s))
+        }.filter(_.nonEmpty)
+    }
     val small = volume <= driverPathMaxPostings
     if (gates.isEmpty) {
       if (small) onDriver(_ => Map.empty)
-      else Right(rows.groupByKey(shardOf)
-        .flatMapGroups((_, it) => walk(it.toSeq, Map.empty)))
+      else Right(shardRows.flatMap(walk(_, Map.empty)))
     } else {
-      gates.foreach(GraftBridge.requireResolves(docmeta, _))
       val allowed = gates.zipWithIndex.map { case (g, i) =>
         docmeta.where(g)
           .select(lit(i).cast("int").as("_1"), col("docId").as("_2"))
           .as[(Int, Long)]
       }.reduce(_ union _)
-      val gateShard = (t: (Int, Long)) => IndexBuilder.shardOf(t._2)
       // overflow-safe limit: a threshold near Long.MaxValue clamps
       val limit =
         if (driverPathMaxPostings >= Int.MaxValue) Int.MaxValue
@@ -453,14 +459,17 @@ final class QueryEngine(spark: SparkSession, val root: String,
           .filter(_.length <= driverPathMaxPostings)
       local match {
         case Some(a) =>
-          val byShard = a.groupBy(gateShard)
+          val byShard = a.groupBy(t => IndexBuilder.shardOf(t._2))
             .map { case (s, ts) => s -> QueryEngine.sortGates(ts) }
           onDriver(byShard.getOrElse(_, Map.empty))
         case None =>
-          Right(rows.groupByKey(shardOf)
-            .cogroup(allowed.groupByKey(gateShard)) { (_, rIt, aIt) =>
-              walk(rIt.toSeq, QueryEngine.sortGates(aIt.toArray))
-            })
+          // HashPartitioner is the identity on shard ids 0 until numShards
+          val allowedByShard = allowed.rdd.map(t => IndexBuilder.shardOf(t._2) -> t)
+            .partitionBy(new HashPartitioner(manifest.numShards))
+          Right(shardRows.zipPartitions(allowedByShard) { (rsIt, aIt) =>
+            val gs = QueryEngine.sortGates(aIt.map(_._2).toArray)
+            rsIt.flatMap(walk(_, gs))
+          })
       }
     }
   }
@@ -488,27 +497,14 @@ final class QueryEngine(spark: SparkSession, val root: String,
     if (present.isEmpty) return None
     val (bm, k, after, minMatch) = (bm25, req.k, req.after, req.minMatch)
     val gate = req.gate.map(_ => 0)
-    Some(perShard(postings.where(col("term").isin(present: _*)).as[PostingRow],
-        postingReader.rows(present, positions = false).map(_.scoring),
-        (_: PostingRow).shard, dfs.values.sum, req.gate.toSeq) { (rs, gates) =>
+    Some(perShard(present, positions = false, dfs.values.sum, req.gate.toSeq) {
+        (rs, gates) =>
       QueryEngine.required(gate, gates).iterator.flatMap { r =>
         WandScorer.topK(present, QueryEngine.termCursors(rs, bm, dfs, wMap),
           k, r, after, minMatch)
       }
     })
   }
-
-  /** Read the query's posting rows as FULL rows; when no phrase needs
-    * positions, the scan takes the scoring projection (posBlocks never
-    * read) and the rows get empty position streams. */
-  private def postingRowsFor(terms: Seq[String], needPos: Boolean)
-      : Dataset[PostingRowPos] =
-    if (needPos)
-      postingsFull.where(col("term").isin(terms: _*)).as[PostingRowPos]
-    else
-      postings.where(col("term").isin(terms: _*)).as[PostingRow]
-        .map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes, r.blocks,
-          r.skips, Nil))
 
   private def requirePositions(): Unit =
     require(hasPositions,
@@ -579,7 +575,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * expansions, and every surviving prohibition's lists (exclusion
     * advances pay their posting volume — the Lucene must_not cost
     * model). None when no group is live. */
-  private def booleanWalk[R: Encoder](query: String)
+  private def booleanWalk[R: ClassTag](query: String)
       (perShardOut: Seq[Iterator[ScoredDoc]] => Iterator[R])
       : Option[Shards[R]] = {
     val groups = QueryParser.parseGroups(query)
@@ -594,40 +590,29 @@ final class QueryEngine(spark: SparkSession, val root: String,
       valid.flatMap(_.exclTerms) ++ valid.flatMap(_.negPhrases).flatten ++
       valid.flatMap(_.negNearSpans).flatMap(_._1)).distinct
     val bm = bm25
-    Some(perShard(postingRowsFor(readSet, needPos),
-        postingReader.rows(readSet, needPos), (_: PostingRowPos).shard,
-        readSet.map(dfs).sum, gates) { (rs, gs) =>
+    Some(perShard(readSet, needPos, readSet.map(dfs).sum, gates) { (rs, gs) =>
       perShardOut(QueryEngine.groupMatches(valid, rs, gs, bm, dfs))
     })
   }
 
-  /** The ONE point-lookup fork (explainScore, highlight): rows are
-    * pruned to the docId's shard, each (shard, term) sub-list's cursor
-    * skip-advances straight to the docId, and `read` takes what it needs
-    * from a cursor that lands on it. A stopword-dense query over a large
-    * corpus must not pull the full posting volume to the driver for one
-    * lookup, so the gate sums the PRUNED scan's own df column (a
-    * column-pruned one-column job; a global-df average divided by
-    * numShards under-gates a term skewed into the looked-up shard) and,
-    * over it, the advance runs per (shard, term) on the executors. */
-  private def pointLookup[P, R](rows: Dataset[P], docId: Long)
-      (key: P => (Int, String), cursor: (String, Seq[P]) => PostingCursor,
-       read: PostingCursor => R)
-      (implicit enc: Encoder[(String, R)]): Map[String, R] = {
-    val at = (t: String, rs: Seq[P]) => {
-      val cur = cursor(t, rs)
-      cur.advanceTo(docId)
-      if (!cur.exhausted && cur.curDoc == docId) Some(t -> read(cur)) else None
-    }
-    val volume = rows.toDF()
-      .agg(coalesce(sum(col("df")), lit(0L))).as[Long].head()
-    if (volume <= driverPathMaxPostings)
-      rows.collect().groupBy(key).toSeq
-        .flatMap { case ((_, t), rs) => at(t, rs.toSeq) }.toMap
-    else
-      rows.groupByKey(key)
-        .flatMapGroups((sk, it) => at(sk._2, it.toSeq).iterator)
-        .collect().toMap
+  /** The ONE point lookup (explainScore, highlight): a one-shard walk
+    * over the docId's shard, where each term's cursor skip-advances
+    * straight to the docId and `read` takes what it needs from a cursor
+    * that lands on it. The walk is gated on the terms' global Σdf, an
+    * upper bound on any one shard's volume, so a term skewed into the
+    * looked-up shard can never under-gate. A docId whose shard holds no
+    * postings file reads nothing. */
+  private def pointLookup[R](terms: Seq[String], dfs: Map[String, Long],
+      weights: Map[String, Double], positions: Boolean, docId: Long)
+      (read: PostingCursor => R): Map[String, R] = {
+    val bm = bm25
+    perShard(terms, positions, terms.map(dfs).sum, Nil,
+        Some(IndexBuilder.shardOf(docId))) { (rs, _) =>
+      QueryEngine.termCursors(rs, bm, dfs, weights).iterator.flatMap { case (t, cur) =>
+        cur.advanceTo(docId)
+        if (!cur.exhausted && cur.curDoc == docId) Some(t -> read(cur)) else None
+      }
+    }.fold(identity, _.collect().toSeq).toMap
   }
 
   /** The ES `/_explain` analogue: the per-term BM25 breakdown of one
@@ -641,14 +626,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
   def explainScore(query: String, docId: Long): Seq[ScoreExplain] = {
     val (present, dfs, wMap) = scoredTerms(query)
     if (present.isEmpty) return Nil
-    val rows = postings
-      .where(col("term").isin(present: _*) &&
-        col("shard") === IndexBuilder.shardOf(docId))
-      .as[PostingRow]
-    val bm = bm25
-    val hits = pointLookup(rows, docId)(r => (r.shard, r.term),
-      (t, rs) => QueryEngine.termCursors(rs, bm, dfs, wMap)(t),
-      c => (c.curTf, c.curDl, c.curScore))
+    val hits = pointLookup(present, dfs, wMap, positions = false, docId)(c =>
+      (c.curTf, c.curDl, c.curScore))
     present.flatMap { t =>
       hits.get(t).map { case (tf, dl, contribution) =>
         ScoreExplain(t, dfs(t), bm25.idf(dfs(t)), tf, dl, contribution)
@@ -668,13 +647,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     requirePositions()
     val (present, dfs, _) = scoredTerms(query)
     if (present.isEmpty) return Nil
-    val rows = postingsFull
-      .where(col("term").isin(present: _*) &&
-        col("shard") === IndexBuilder.shardOf(docId))
-      .as[PostingRowPos]
-    val bm = bm25
-    val hits = pointLookup(rows, docId)(r => (r.shard, r.term),
-      (t, rs) => QueryEngine.termCursorsPos(rs, bm, dfs)(t),
+    val hits = pointLookup(present, dfs, Map.empty, positions = true, docId)(
       _.curPositions.toSeq)
     present.flatMap(t => hits.get(t).map(ps => HighlightTerm(t, ps)))
   }
@@ -689,6 +662,6 @@ final class QueryEngine(spark: SparkSession, val root: String,
     booleanWalk(query)(QueryEngine.unionAscending) match {
       case None => spark.createDataset(Seq.empty[Long]).toDF("docId")
       case Some(Left(ids)) => ids.toDF("docId")
-      case Some(Right(ids)) => ids.toDF("docId")
+      case Some(Right(ids)) => spark.createDataset(ids).toDF("docId")
     }
 }

@@ -15,11 +15,13 @@ import scala.collection.mutable
  * re-scoring, deterministic output. Sub-lists are re-blocked into fresh
  * 128-entry blocks so skip density is restored after many small ingests.
  *
- * Plan: union segment postings -> shuffle on (shard, term) -> stream
- * re-encode runs -> new immutable segment + snapshot commit. Old segment
- * files are left in place (snapshot isolation; readers of the old
- * manifest stay correct) until `IcebergLite.gc(keepManifests)` physically
- * deletes everything unreachable from the kept snapshot horizon.
+ * Plan: union segment postings -> shuffle by shard (partition id ==
+ * shard) -> term-major sort -> stream re-encode runs -> one postings file
+ * per shard, as the builder writes them -> new immutable segment +
+ * snapshot commit. Old segment files are left in place (snapshot
+ * isolation; readers of the old manifest stay correct) until
+ * `IcebergLite.gc(keepManifests)` physically deletes everything
+ * unreachable from the kept snapshot horizon.
  */
 object SegmentMerge {
 
@@ -164,9 +166,8 @@ object SegmentMerge {
         }
     }
       .toDF()
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("shard"), col("term"))
-      .sortWithinPartitions("term", "shard")
+      .repartitionById(prev.numShards, col("shard"))
+      .sortWithinPartitions("term")
       .write.mode("overwrite")
       .option("parquet.block.size", (4 * 1024 * 1024).toString)
       .parquet(s"$segRoot/postings")
@@ -218,15 +219,15 @@ object SegmentMerge {
     val segName = s"seg-merged-${prev.version}"
     val segRoot = s"$root/$segName"
 
-    spark.read.parquet(postingPaths: _*).as[PostingRowPos]
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("shard"), col("term"))
-      .map(r => (r.shard, r.term, r.skips.head.firstDoc, r))
-      .toDF("shard", "term", "firstDoc", "row")
-      .sortWithinPartitions("term", "shard", "firstDoc")
-      .as[(Int, String, Long, PostingRowPos)]
+    // one partition per shard (partition id == shard), term-major within
+    // it: one postings file per shard, the layout the builder writes and
+    // the query path's per-shard reads take
+    spark.read.parquet(postingPaths: _*)
+      .repartitionById(prev.numShards, col("shard"))
+      .sortWithinPartitions(col("term"), col("skips")(0)("firstDoc"))
+      .as[PostingRowPos]
       .mapPartitions { it =>
-        val in = it.map(_._4).buffered
+        val in = it.buffered
         new Iterator[PostingRowPos] {
           def hasNext: Boolean = in.hasNext
           def next(): PostingRowPos = {

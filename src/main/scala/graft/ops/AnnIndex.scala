@@ -233,26 +233,25 @@ object AnnIndex {
     }-r${p.refineIters}-c${p.cells}-l${p.lshBits}"
 
   /** One LSH segment write: bucket every vector, partition by bucket6,
-    * return the row count (rides the write job via observe — no extra
-    * pass). Shared by the base build and append. */
+    * return the row count (rides the write job's tasks — no extra pass).
+    * Shared by the base build and append. */
   private def writeLshSegment(spark: SparkSession, src: DataFrame,
                               dest: String, mask: Int): Long = {
     import spark.implicits._
-    val obs = org.apache.spark.sql.Observation(s"ann-lsh-$dest")
+    val rows = new graft.index.PassMetrics[(Long, Int, Seq[Float])](spark,
+      s"ann-lsh-$dest", sums = Seq(("rows", _ => 1L)))
     src.select(col("vec_id"), col("label"), col("embedding"))
       .as[(Long, Int, Seq[Float])]
-      .map { case (id, label, e) =>
+      .mapPartitions(it => rows.track(it).map { case (id, label, e) =>
         val b = lshBucket16(e)
         // the partition column keeps its historical name whatever the
         // mask width: it holds the low lshBits of the 16-bit bucket
         (id, label, e, b.toLong, (b & mask).toLong)
-      }
+      })
       .toDF("vec_id", "label", "embedding", "bucket16", "bucket6")
-      .observe(obs, count(lit(1)).as("rows"))
       .repartition(col("bucket6"))
       .write.partitionBy("bucket6").mode("overwrite").parquet(dest)
-    // an empty write fires no observation metric at all
-    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
+    graft.index.IndexBuilder.obsLong(rows.get, "rows")
   }
 
   /** One IVF segment write against a FIXED quantizer. */

@@ -755,7 +755,7 @@ object SearchOps {
     * every reference panel pairs with its query,
     * /root/reference/export.json:40,77,82,91): `lang:en` and
     * `id:[100 TO 400]` compile to a docmeta gate that rides
-    * the engine's cogrouped gate path; the residual scores like
+    * the engine's gated per-shard walk; the residual scores like
     * any disjunctive query. Scoring statistics stay GLOBAL (filter
     * context), so the oracle scores every doc corpus-wide and only then
     * applies the gate — the q87 pattern, now driven by query syntax
@@ -791,7 +791,7 @@ object SearchOps {
   /** q93: field gates in FILTER context — `WHERE match(text, '...')`
     * with PER-GROUP field atoms through the semi-join rewrite: each
     * OR-group's gate joins that group's leapfrog as a required cursor
-    * on the cogrouped distributed walk (the allowed sets are pushed
+    * on the gated distributed walk (the allowed sets are pushed
     * docmeta scans, never driver-collected at scale). The oracle is the
     * plain row predicate with each group's metadata condition attached
     * to that group only. */
@@ -1163,7 +1163,7 @@ object SearchOps {
   /** Per-segment metrics from the committed manifest, SQL-checkable
     * subset: docs + postings are corpus-derivable (postings = sum of
     * per-doc distinct analyzed terms), so the oracle verifies the
-    * builder's observe() counters end-to-end. terms/bytes (shard- and
+    * builder's pass metrics end-to-end. terms/bytes (shard- and
     * codec-dependent) are asserted in IndexEndToEndSpec instead. */
   def qIndexMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -55,7 +55,8 @@ object ExplainDump {
     section("q02 terms top-5 (TakeOrderedAndProject)", DashboardOps.qTermsTop5(spark, sf))
     section("q11 broadcast dimension joins", DashboardOps.qJoinDims(spark, sf))
     val eng = SearchOps.docEngine(spark, sf)
-    section("engine postings scan, term-IN pushdown",
+    // the query path reads postings with PostingReader, not this scan
+    section("postings scan for dict derivation and replay, term-IN pushdown",
       eng.postings.where(col("term").isin("spark", "query")), exec = false)
     section("q74 WHERE match(): index semi-join rewrite (no text re-analysis)",
       SearchOps.qMatchWhere(spark, sf))
@@ -79,7 +80,7 @@ object ExplainDump {
     section("q80 WHERE match() with wildcard groups (same semi-join shape)",
       SearchOps.qPrefixMatchWhere(spark, sf))
     // r7: field gates — the docmeta scan under the gate carries the
-    // compiled predicate as PushedFilters (pruned before the cogroup)
+    // compiled predicate as PushedFilters (pruned before the allowed-set shuffle)
     section("field gate: docmeta scan with compiled predicate pushdown",
       eng.docmeta.where(QueryParser.compileFields(
         QueryParser.splitFieldFilters("x lang:en id:[100 TO 400]")._2)), exec = false)

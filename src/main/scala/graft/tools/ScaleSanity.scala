@@ -111,7 +111,7 @@ object ScaleSanity {
     }
     // round-6 surfaces: sloppy span (same pruned positional read the
     // exact phrase pays), minimum_should_match (same WAND walk + a
-    // counter), filtered search (allowed-set cogroup), deep page
+    // counter), filtered search (allowed-set shuffle), deep page
     if (eng1.hasPositions) Seq(0, 2, 5).foreach { slop =>
       val t0 = System.nanoTime()
       val n = eng1.booleanTopK(s""""posting reader"~$slop""", 10).size
@@ -131,7 +131,7 @@ object ScaleSanity {
     val pg2 = eng1.run(SearchRequest("posting reader", 10,
       after = Some((pg1.last.score, pg1.last.docId))))
     println(f"[scale] page1+page2 -> ${pg1.size}+${pg2.size} hits in ${(System.nanoTime()-tP)/1e9}%.3f s")
-    // r7 field syntax: the query-string gate must ride the SAME cogroup
+    // r7 field syntax: the query-string gate must ride the SAME allowed-set
     // path as the explicit predicate (parity + timing), per-group gates
     // must agree with a docmeta join over the ungated match set, and the
     // dense multi-group match set exercises the merge-dedup emission

@@ -303,6 +303,20 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       .mkString(" ")).mkString(", ")
   }
 
+  /** `body`'s result, asserting that the listener bus logged no ERROR
+    * while it ran: no session-wide listener (a build's Observation left
+    * one behind) re-raises a failed query. */
+  private def noListenerError[T](body: => T): T = {
+    val (out, logged) = SparkSessionFixture.errors(
+        "org.apache.spark.sql.util.ExecutionListenerBus") {
+      val r = body
+      Thread.sleep(500) // listener events are posted asynchronously
+      r
+    }
+    assert(logged.isEmpty, s"listener bus logged an error: $logged")
+    out
+  }
+
   test("property: random queries parse, reject and answer alike on every path") {
     import scala.util.{Failure, Try}
     val rnd = new Random(1009)
@@ -360,7 +374,8 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
       .map { case (id, r, p, c) => (id, byId((r, p, c))) }.toSeq
       .toDF("doc_id", "text").createOrReplaceTempView("prop_roweval_docs")
     var compared = 0
-    (1 to 25).foreach { _ =>
+    // the rejected queries fail their Spark query: nothing re-raises them
+    noListenerError((1 to 25).foreach { _ =>
       val q = randomQuery(rnd, terms, fields = false)
       def rowLevel = spark.sql("SELECT doc_id FROM prop_roweval_docs " +
         s"WHERE match(text, '$q')").collect().map(_.getLong(0)).toSet
@@ -372,7 +387,7 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
           assert(e.isInstanceOf[IllegalArgumentException], s"'$q': $e")
           intercept[Exception](rowLevel)
       }
-    }
+    })
     assert(compared > 10)
   }
 
@@ -419,17 +434,18 @@ class FieldQuerySpec extends AnyFunSuite with SparkSessionFixture {
     // the field gate rather than silently dropping it
     Seq((1L, "spark merge", "en")).toDF("doc_id", "text", "lang")
       .createOrReplaceTempView("field_roweval_docs")
-    val err = intercept[Exception] {
+    engine // the build ran in this session
+    val err = noListenerError(intercept[Exception] {
       spark.sql(
         "SELECT doc_id FROM field_roweval_docs WHERE match(text, 'spark lang:en')")
         .collect()
-    }
+    })
     assert(err.getMessage.contains("field-scoped") ||
       Option(err.getCause).exists(_.getMessage.contains("field-scoped")))
   }
 
   test("a gate naming a missing column rejects with no listener ERROR") {
-    engine.topK("def", 1) // the build (two Observations) ran in this session
+    engine.topK("def", 1) // the build ran in this session
     val (err, logged) = SparkSessionFixture.errors(
         "org.apache.spark.sql.util.ExecutionListenerBus") {
       val e = intercept[org.apache.spark.sql.AnalysisException] {

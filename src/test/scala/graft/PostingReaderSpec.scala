@@ -7,23 +7,30 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
-/** The held-open postings reader against the Spark scan it replaces on
-  * the driver path, over a multi-segment, unmerged index (a bulk build in
-  * two passes of half the shards each, a small ingest batch that reaches
-  * only some shards, and a batch built without positions), and again
-  * after a tiered merge:
+/** The held-open postings reader against the Spark scan of the same
+  * files, over a multi-segment, unmerged index (a bulk build in two
+  * passes of half the shards each, a small ingest batch that reaches only
+  * some shards, and a batch built without positions), again after a
+  * tiered merge and again after a rebase:
   *  - for every reference query's term set, plus a term missing from the
   *    dictionary, the reader's rows equal the scan's, byte for byte, in
-  *    both projections;
-  *  - under the driver gate, topK, booleanTopK and matchingDocIds run no
-  *    Spark job (a gated search only its gate collect's), and their answers
-  *    equal the distributed path's. */
+  *    both projections; and the per-shard reads a distributed task makes
+  *    (a reader over the files listed for its shard, asked for that
+  *    shard) add up to the unrestricted read, also over a legacy postings
+  *    dir whose files span shards;
+  *  - under the driver gate, topK, booleanTopK, matchingDocIds,
+  *    explainScore and highlight run no Spark job (a gated search only its
+  *    gate collect's); over it, an ungated walk is one job; both paths
+  *    answer alike;
+  *  - merge and rebase write one shard per postings file. */
 class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
   import spark.implicits._
 
+  private lazy val work = Files.createTempDirectory(Paths.get("target"), "postreader")
+    .toAbsolutePath.toString
+  private def conf = spark.sparkContext.hadoopConfiguration
+
   private lazy val root = {
-    val work = Files.createTempDirectory(Paths.get("target"), "postreader")
-      .toAbsolutePath.toString
     val r = s"$work/index"
     IndexBuilder.buildAll(spark, CorpusGen.dataset(spark, 240, 5L, 4), r,
       numShards = 4, shardsPerPass = 2)
@@ -57,13 +64,34 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
   private def sorted(rs: Seq[PostingRowPos]) =
     rs.map(norm).sortBy(n => (n._1, n._2, n._6.head.firstDoc))
 
+  private def termSets(eng: QueryEngine): Seq[Seq[String]] =
+    ReferenceQueries.entries.map { case (_, q, _, kind) =>
+      termsOf(eng, q, kind) } :+ Seq("zzqqnotaterm", "def")
+
+  /** Per shard, the read a distributed task makes (a reader over only
+    * the files `reader` lists for the shard, asked for that shard's
+    * rows) equals `reader`'s own shard read and holds only that shard's
+    * rows; over every shard they add up to the unrestricted read, in
+    * both projections. */
+  private def checkShardReads(reader: PostingReader, numShards: Int,
+                              sets: Seq[Seq[String]]): Unit =
+    for (terms <- sets; positions <- Seq(true, false)) {
+      val byShard = (0 until numShards).map { s =>
+        val task = PostingReader.ofFiles(reader.filesOf(s), conf)
+          .rows(terms, positions, shard = Some(s))
+        assert(task.forall(_.shard == s))
+        assert(sorted(task) == sorted(reader.rows(terms, positions, shard = Some(s))),
+          s"shard $s: task read differs for $terms")
+        task
+      }
+      assert(sorted(byShard.flatten) == sorted(reader.rows(terms, positions)),
+        s"shard reads (positions=$positions) do not add up for $terms")
+    }
+
   private def checkRows(eng: QueryEngine): Unit = {
     val reader = new PostingReader(
-      eng.manifest.segments.map(s => s"$root/${s.name}/postings"),
-      spark.sparkContext.hadoopConfiguration)
-    val termSets = ReferenceQueries.entries.map { case (_, q, _, kind) =>
-      termsOf(eng, q, kind) } :+ Seq("zzqqnotaterm", "def")
-    termSets.foreach { terms =>
+      eng.manifest.segments.map(s => s"$root/${s.name}/postings"), conf)
+    termSets(eng).foreach { terms =>
       val full = eng.postingsFull.where(col("term").isin(terms: _*))
         .as[PostingRowPos].collect().toSeq
       val lite = eng.postings.where(col("term").isin(terms: _*)).as[PostingRow]
@@ -77,7 +105,19 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     }
     assert(reader.rows(Seq("zzqqnotaterm"), positions = true).isEmpty)
     assert(reader.rows(Nil, positions = false).isEmpty)
+    checkShardReads(reader, eng.manifest.numShards, termSets(eng))
+    assert(reader.filesOf(IndexBuilder.shardOf(-1L)).isEmpty)
   }
+
+  /** Every postings file of the committed snapshot holds one shard. */
+  private def checkSingleShardFiles(): Unit =
+    new QueryEngine(spark, root).manifest.segments.foreach { seg =>
+      PostingReader.dataFiles(s"$root/${seg.name}/postings", conf).foreach { st =>
+        val shards = spark.read.parquet(st.getPath.toString).select("shard")
+          .distinct().count()
+        assert(shards == 1, s"${st.getPath} holds $shards shards")
+      }
+    }
 
   /** Spark jobs submitted while `body` runs: a marker job after it
     * flushes the asynchronous listener bus. */
@@ -148,6 +188,22 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
       .run(SearchRequest("def return", 10, gate = Some(gate))))
   }
 
+  /** Over the driver gate, an ungated walk is one Spark job, and a match
+    * set is built lazily and collected in one. */
+  private def checkDistributedJobs(): Unit = {
+    val dist = new QueryEngine(spark, root, driverPathMaxPostings = 0L)
+    dist.topK("def", 1) // the resident dictionary's job
+    val (hits, topJobs) = jobsDuring(dist.topK("def return", 10))
+    assert(hits.nonEmpty && topJobs == 1, s"distributed topK submitted $topJobs jobs")
+    val (boolHits, boolJobs) = jobsDuring(dist.booleanTopK("def return, posting", 10))
+    assert(boolHits.nonEmpty && boolJobs == 1,
+      s"distributed booleanTopK submitted $boolJobs jobs")
+    val (ids, planJobs) = jobsDuring(dist.matchingDocIds("def return"))
+    assert(planJobs == 0, s"building the match set submitted $planJobs jobs")
+    val (got, idJobs) = jobsDuring(ids.as[Long].collect())
+    assert(got.nonEmpty && idJobs == 1, s"collecting the match set submitted $idJobs jobs")
+  }
+
   test("reader rows equal the Spark scan's on an unmerged multi-segment index") {
     val m = new QueryEngine(spark, root).manifest
     assert(m.segments.size == 4)
@@ -159,10 +215,69 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     checkJobs()
   }
 
+  test("distributed walks are one Spark job each") {
+    checkDistributedJobs()
+  }
+
+  test("shard reads of a legacy postings dir whose files span shards") {
+    val eng = new QueryEngine(spark, root)
+    // the layout merges wrote before they wrote one file per shard
+    val legacy = s"$work/legacy-postings"
+    eng.postingsFull.repartition(spark.sessionState.conf.numShufflePartitions,
+        col("shard"), col("term"))
+      .sortWithinPartitions("term", "shard")
+      .write.parquet(legacy)
+    val reader = new PostingReader(Seq(legacy), conf)
+    val files = (0 until 4).flatMap(reader.filesOf)
+    assert(files.size > files.distinct.size, "no legacy file spans two shards")
+    val sets = termSets(eng)
+    sets.foreach { terms =>
+      assert(sorted(reader.rows(terms, positions = true)) == sorted(
+        eng.postingsFull.where(col("term").isin(terms: _*)).as[PostingRowPos].collect().toSeq))
+    }
+    checkShardReads(reader, 4, sets)
+  }
+
   test("after a tiered merge: same rows, still no job") {
     SegmentMerge.tiered(spark, root, maxSegments = 2, fanIn = 2)
     assert(new QueryEngine(spark, root).manifest.segments.size <= 2)
+    checkSingleShardFiles()
     checkRows(new QueryEngine(spark, root))
     checkJobs()
+    checkDistributedJobs()
+  }
+
+  test("after a rebase: single-shard files, same rows, same job counts") {
+    SegmentMerge.rebase(spark, root)
+    assert(new QueryEngine(spark, root).manifest.segments.size == 1)
+    checkSingleShardFiles()
+    checkRows(new QueryEngine(spark, root))
+    checkJobs()
+    checkDistributedJobs()
+  }
+
+  test("point lookups: no job under the gate, one shard's answer on both paths") {
+    val posRoot = s"$work/positional"
+    IndexBuilder.build(spark, CorpusGen.dataset(spark, 160, 9L, 4), posRoot, numShards = 4)
+    val driver = new QueryEngine(spark, posRoot)
+    val dist = new QueryEngine(spark, posRoot, driverPathMaxPostings = 0L)
+    val q = "def return posting"
+    val hits = driver.topK(q, 5)
+    assert(hits.nonEmpty)
+    hits.foreach { h =>
+      val ((explained, highlighted), jobs) =
+        jobsDuring((driver.explainScore(q, h.docId), driver.highlight(q, h.docId)))
+      assert(jobs == 0, s"point lookups under the gate submitted $jobs jobs")
+      assert(explained.nonEmpty && highlighted.nonEmpty)
+      assert(explained.map(_.contribution).sum == h.score)
+      assert(dist.explainScore(q, h.docId) == explained)
+      assert(dist.highlight(q, h.docId) == highlighted)
+    }
+    // a docId whose shard holds no postings file reads nothing
+    Seq(-1L, Long.MaxValue).foreach { id =>
+      Seq(driver, dist).foreach { eng =>
+        assert(eng.explainScore(q, id).isEmpty && eng.highlight(q, id).isEmpty)
+      }
+    }
   }
 }

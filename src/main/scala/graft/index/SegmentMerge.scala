@@ -134,7 +134,7 @@ object SegmentMerge {
     // postings: cogroup by shard, remap each decoded docId through the
     // shard's map (monotone: rank order == old docId order), re-encode
     val pst = spark.read.parquet(s"$root/${seg.name}/postings").as[PostingRowPos]
-    pst.groupByKey(_.shard).cogroup(mapping.groupByKey(_._1)) {
+    IndexBuilder.writePostings(pst.groupByKey(_.shard).cogroup(mapping.groupByKey(_._1)) {
       (_, rows, maps) =>
         val mp = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         maps.foreach { case (_, o, nw) => mp.put(o, nw) }
@@ -167,10 +167,7 @@ object SegmentMerge {
     }
       .toDF()
       .repartitionById(prev.numShards, col("shard"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite")
-      .option("parquet.block.size", (4 * 1024 * 1024).toString)
-      .parquet(s"$segRoot/postings")
+      .sortWithinPartitions("term"), s"$segRoot/postings")
 
     val pstOut = spark.read.parquet(s"$segRoot/postings")
     val mrow = pstOut.agg(count(lit(1)), sum("df"), sum("bytes")).head()
@@ -222,7 +219,7 @@ object SegmentMerge {
     // one partition per shard (partition id == shard), term-major within
     // it: one postings file per shard, the layout the builder writes and
     // the query path's per-shard reads take
-    spark.read.parquet(postingPaths: _*)
+    IndexBuilder.writePostings(spark.read.parquet(postingPaths: _*)
       .repartitionById(prev.numShards, col("shard"))
       .sortWithinPartitions(col("term"), col("skips")(0)("firstDoc"))
       .as[PostingRowPos]
@@ -266,10 +263,7 @@ object SegmentMerge {
               posOut)
           }
         }
-      }
-      .write.mode("overwrite")
-      .option("parquet.block.size", (4 * 1024 * 1024).toString)
-      .parquet(s"$segRoot/postings")
+      }, s"$segRoot/postings")
 
     spark.read.parquet(docmetaPaths: _*)
       .write.mode("overwrite").parquet(s"$segRoot/docmeta")

@@ -3,7 +3,7 @@ package graft
 import graft.corpus.CorpusGen
 import graft.index._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -14,15 +14,20 @@ import java.nio.file.{Files, Paths}
   * tiered merge and again after a rebase:
   *  - for every reference query's term set, plus a term missing from the
   *    dictionary, the reader's rows equal the scan's, byte for byte, in
-  *    both projections; and the per-shard reads a distributed task makes
-  *    (a reader over the files listed for its shard, asked for that
-  *    shard) add up to the unrestricted read, also over a legacy postings
-  *    dir whose files span shards;
+  *    both projections (a legacy file of one page per column chunk
+  *    included); and the per-shard reads a distributed task makes (the
+  *    pages the reader selected for its shard) add up to the unrestricted
+  *    read, also over a legacy postings dir whose files span shards (as
+  *    written before bounded pages, and in 4-row pages);
+  *  - the reader's counters: a one-term read assembles at most its rows
+  *    plus page slack, and fewer records and pages than an all-term read;
   *  - under the driver gate, topK, booleanTopK, matchingDocIds,
   *    explainScore and highlight run no Spark job (a gated search only its
-  *    gate collect's); over it, an ungated walk is one job; both paths
-  *    answer alike;
-  *  - merge and rebase write one shard per postings file. */
+  *    one gate collect job), also from 8 concurrent client threads; over
+  *    it, an ungated walk is one job; both paths answer alike;
+  *  - merge and rebase write one shard per postings file; build, merge
+  *    and rebase write pages of at most IndexBuilder.PostingsPageRows
+  *    rows. */
 class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
   import spark.implicits._
 
@@ -68,17 +73,18 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     ReferenceQueries.entries.map { case (_, q, _, kind) =>
       termsOf(eng, q, kind) } :+ Seq("zzqqnotaterm", "def")
 
-  /** Per shard, the read a distributed task makes (a reader over only
-    * the files `reader` lists for the shard, asked for that shard's
-    * rows) equals `reader`'s own shard read and holds only that shard's
-    * rows; over every shard they add up to the unrestricted read, in
-    * both projections. */
+  /** Per shard, the read a distributed task makes (the pages `reader`
+    * selects for the shard's terms, read from only the shard's files)
+    * equals `reader`'s own shard read and holds only that shard's rows;
+    * over every shard they add up to the unrestricted read, in both
+    * projections. */
   private def checkShardReads(reader: PostingReader, numShards: Int,
                               sets: Seq[Seq[String]]): Unit =
     for (terms <- sets; positions <- Seq(true, false)) {
       val byShard = (0 until numShards).map { s =>
-        val task = PostingReader.ofFiles(reader.filesOf(s), conf)
-          .rows(terms, positions, shard = Some(s))
+        val selected = reader.select(terms, Some(s))
+        assert(selected.map(_.path).toSet.subsetOf(reader.filesOf(s).toSet))
+        val task = PostingReader.readPages(selected, terms, positions, Some(s), conf)
         assert(task.forall(_.shard == s))
         assert(sorted(task) == sorted(reader.rows(terms, positions, shard = Some(s))),
           s"shard $s: task read differs for $terms")
@@ -88,13 +94,26 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
         s"shard reads (positions=$positions) do not add up for $terms")
     }
 
+  /** The reader over `eng`'s postings files plus one legacy file: the
+    * same rows as one file, written as builds wrote postings before
+    * bounded pages (one page per column chunk). */
   private def checkRows(eng: QueryEngine): Unit = {
-    val reader = new PostingReader(
-      eng.manifest.segments.map(s => s"$root/${s.name}/postings"), conf)
+    val legacy = Files.createTempDirectory(Paths.get(work), "single-page").toString
+    eng.postingsFull.coalesce(1).sortWithinPartitions("term", "shard")
+      .write.mode("overwrite").option("parquet.block.size", (4 * 1024 * 1024).toString)
+      .parquet(legacy)
+    val legacyFiles = PostingReader.dataFiles(legacy, conf)
+    assert(legacyFiles.size == 1)
+    assert(termPages(legacyFiles.head.getPath.toString).forall(_.size == 1),
+      "the legacy file is not one page per column chunk")
+    val dirs = eng.manifest.segments.map(s => s"$root/${s.name}/postings")
+    val reader = new PostingReader(dirs :+ legacy, conf)
+    val scan = spark.read.parquet(dirs :+ legacy: _*)
     termSets(eng).foreach { terms =>
-      val full = eng.postingsFull.where(col("term").isin(terms: _*))
+      val full = scan.where(col("term").isin(terms: _*))
         .as[PostingRowPos].collect().toSeq
-      val lite = eng.postings.where(col("term").isin(terms: _*)).as[PostingRow]
+      val lite = scan.select(PostingRow.LiteCols.map(col): _*)
+        .where(col("term").isin(terms: _*)).as[PostingRow]
         .collect().toSeq.map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes,
           r.blocks, r.skips, Nil))
       assert(full.nonEmpty)
@@ -107,6 +126,64 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     assert(reader.rows(Nil, positions = false).isEmpty)
     checkShardReads(reader, eng.manifest.numShards, termSets(eng))
     assert(reader.filesOf(IndexBuilder.shardOf(-1L)).isEmpty)
+    checkCounters(eng)
+  }
+
+  /** Per row group, the row count of each `term` page of one file (from
+    * its offset index). */
+  private def termPages(file: String): Seq[Seq[Long]] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+    try r.getRowGroups.asScala.toSeq.map { b =>
+      val oi = r.readOffsetIndex(b.getColumns.asScala.find(_.getPath.toDotString == "term").get)
+      (0 until oi.getPageCount).map(i =>
+        oi.getLastRowIndex(i, b.getRowCount) - oi.getFirstRowIndex(i) + 1)
+    } finally r.close()
+  }
+
+  /** Every postings file of the committed snapshot is written in pages
+    * of at most IndexBuilder.PostingsPageRows rows, several per file
+    * (an empty partition's file holds no row group). */
+  private def checkPageBounds(): Unit =
+    new QueryEngine(spark, root).manifest.segments.foreach { seg =>
+      PostingReader.dataFiles(s"$root/${seg.name}/postings", conf).foreach { st =>
+        val pages = termPages(st.getPath.toString).flatten
+        assert(pages.isEmpty || pages.size > 1, s"${st.getPath} has one term page")
+        assert(pages.forall(_ <= IndexBuilder.PostingsPageRows),
+          s"${st.getPath} has a page over ${IndexBuilder.PostingsPageRows} rows: $pages")
+      }
+    }
+
+  /** The reader's counters against the rows it returns: a one-term read
+    * assembles at most the term's rows plus page slack, and strictly
+    * fewer records and pages than an all-term read; read + skipped add up
+    * to the same totals; a positional one-term read decompresses strictly
+    * fewer `posBlocks` pages than the files hold. */
+  private def checkCounters(eng: QueryEngine): Unit = {
+    val dirs = eng.manifest.segments.map(s => s"$root/${s.name}/postings")
+    val reader = new PostingReader(dirs, conf)
+    val nFiles = dirs.map(PostingReader.dataFiles(_, conf).size).sum
+    val all = eng.dict.select("term").as[String].collect().toSeq
+    val allRead = reader.read(all, positions = false)
+    assert(allRead.recordsSkipped == 0)
+    for (term <- Seq("def", "return", all.min, all.max)) {
+      val one = reader.read(Seq(term), positions = false)
+      assert(one.rows.nonEmpty)
+      assert(one.recordsRead <= one.rows.size + 2L * IndexBuilder.PostingsPageRows * nFiles,
+        s"'$term': ${one.recordsRead} records assembled for ${one.rows.size} rows")
+      assert(one.recordsRead < allRead.recordsRead && one.pagesRead < allRead.pagesRead)
+      assert(one.recordsRead + one.recordsSkipped == allRead.recordsRead)
+      assert(one.pagesRead + one.pagesSkipped == allRead.pagesRead + allRead.pagesSkipped)
+      // posBlocks is the one column the positional projection adds
+      val pos = reader.read(Seq(term), positions = true)
+      assert(pos.rows.map(r => (r.shard, r.term)) == one.rows.map(r => (r.shard, r.term)))
+      val posRead = pos.pagesRead - one.pagesRead
+      val posHeld = posRead + pos.pagesSkipped - one.pagesSkipped
+      assert(posRead > 0 && posRead < posHeld,
+        s"'$term': positional read decompressed $posRead of $posHeld posBlocks pages")
+    }
   }
 
   /** Every postings file of the committed snapshot holds one shard. */
@@ -173,16 +250,12 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     assert(hits == collected(calls(new QueryEngine(spark, root, driverPathMaxPostings = 0L))))
     assert(hits.count { case s: Seq[_] => s.nonEmpty; case _ => false } >= 10)
     assert(hits.exists(_.isInstanceOf[(_, _)]))
-    // a gated driver-path query runs the jobs of its limited gate collect
-    // (Spark's incremental take), no postings job
+    // a gated driver-path query runs one job, its gate collect, and no
+    // postings job
     val gate = col("docLen") > 20
     val (gatedHits, gatedJobs) = jobsDuring(driver.run(SearchRequest("def return", 10,
       gate = Some(gate))))
-    val (_, collectJobs) = jobsDuring(driver.docmeta.where(gate)
-      .select(lit(0).as("_1"), col("docId").as("_2")).as[(Int, Long)]
-      .limit(500001).collect())
-    assert(collectJobs >= 1 && gatedJobs == collectJobs,
-      s"gated driver-path query submitted $gatedJobs Spark jobs, its gate collect $collectJobs")
+    assert(gatedJobs == 1, s"gated driver-path query submitted $gatedJobs Spark jobs")
     assert(gatedHits.nonEmpty)
     assert(gatedHits == new QueryEngine(spark, root, driverPathMaxPostings = 0L)
       .run(SearchRequest("def return", 10, gate = Some(gate))))
@@ -208,6 +281,7 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     val m = new QueryEngine(spark, root).manifest
     assert(m.segments.size == 4)
     assert(m.segments.exists(_.lineage("positions") == "false"))
+    checkPageBounds()
     checkRows(new QueryEngine(spark, root))
   }
 
@@ -221,27 +295,35 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("shard reads of a legacy postings dir whose files span shards") {
     val eng = new QueryEngine(spark, root)
-    // the layout merges wrote before they wrote one file per shard
-    val legacy = s"$work/legacy-postings"
-    eng.postingsFull.repartition(spark.sessionState.conf.numShufflePartitions,
-        col("shard"), col("term"))
-      .sortWithinPartitions("term", "shard")
-      .write.parquet(legacy)
-    val reader = new PostingReader(Seq(legacy), conf)
-    val files = (0 until 4).flatMap(reader.filesOf)
-    assert(files.size > files.distinct.size, "no legacy file spans two shards")
-    val sets = termSets(eng)
-    sets.foreach { terms =>
-      assert(sorted(reader.rows(terms, positions = true)) == sorted(
-        eng.postingsFull.where(col("term").isin(terms: _*)).as[PostingRowPos].collect().toSeq))
+    // the layout merges wrote before they wrote one file per shard; then
+    // the same layout in bounded pages, where a term's rows (one per
+    // segment and shard, contiguous) run across page boundaries
+    val pageRows = IndexBuilder.PostingsPageRows.toString
+    Seq("legacy-postings" -> Map.empty[String, String],
+        "legacy-postings-paged" -> Map("parquet.page.row.count.limit" -> pageRows,
+          "parquet.page.size.row.check.min" -> pageRows)).foreach { case (name, opts) =>
+      val legacy = s"$work/$name"
+      eng.postingsFull.repartition(spark.sessionState.conf.numShufflePartitions,
+          col("shard"), col("term"))
+        .sortWithinPartitions("term", "shard")
+        .write.options(opts).parquet(legacy)
+      val reader = new PostingReader(Seq(legacy), conf)
+      val files = (0 until 4).flatMap(reader.filesOf)
+      assert(files.size > files.distinct.size, "no legacy file spans two shards")
+      val sets = termSets(eng)
+      sets.foreach { terms =>
+        assert(sorted(reader.rows(terms, positions = true)) == sorted(
+          eng.postingsFull.where(col("term").isin(terms: _*)).as[PostingRowPos].collect().toSeq))
+      }
+      checkShardReads(reader, 4, sets)
     }
-    checkShardReads(reader, 4, sets)
   }
 
   test("after a tiered merge: same rows, still no job") {
     SegmentMerge.tiered(spark, root, maxSegments = 2, fanIn = 2)
     assert(new QueryEngine(spark, root).manifest.segments.size <= 2)
     checkSingleShardFiles()
+    checkPageBounds()
     checkRows(new QueryEngine(spark, root))
     checkJobs()
     checkDistributedJobs()
@@ -251,14 +333,19 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     SegmentMerge.rebase(spark, root)
     assert(new QueryEngine(spark, root).manifest.segments.size == 1)
     checkSingleShardFiles()
+    checkPageBounds()
     checkRows(new QueryEngine(spark, root))
     checkJobs()
     checkDistributedJobs()
   }
 
+  private lazy val posRoot = {
+    val r = s"$work/positional"
+    IndexBuilder.build(spark, CorpusGen.dataset(spark, 160, 9L, 4), r, numShards = 4)
+    r
+  }
+
   test("point lookups: no job under the gate, one shard's answer on both paths") {
-    val posRoot = s"$work/positional"
-    IndexBuilder.build(spark, CorpusGen.dataset(spark, 160, 9L, 4), posRoot, numShards = 4)
     val driver = new QueryEngine(spark, posRoot)
     val dist = new QueryEngine(spark, posRoot, driverPathMaxPostings = 0L)
     val q = "def return posting"
@@ -279,5 +366,41 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
         assert(eng.explainScore(q, id).isEmpty && eng.highlight(q, id).isEmpty)
       }
     }
+  }
+
+  /** Every reference query through topK, booleanTopK, a collected
+    * matchingDocIds, explainScore and highlight (of the top hit). */
+  private def answers(eng: QueryEngine): Seq[Any] =
+    ReferenceQueries.entries.map { case (_, q, k, kind) =>
+      try {
+        if (scoredKinds(kind)) {
+          val hits = eng.topK(q, k)
+          val d = hits.headOption.fold(-1L)(_.docId)
+          (hits, eng.explainScore(q, d), eng.highlight(q, d))
+        } else (eng.booleanTopK(q, k), eng.matchingDocIds(q).as[Long].collect().sorted.toSeq)
+      } catch { case e: IllegalArgumentException => e.getMessage }
+    }
+
+  test("concurrent queries on one engine answer as serial ones, with no Spark job") {
+    val eng = new QueryEngine(spark, posRoot)
+    val serial = answers(eng) // also loads the resident dictionary
+    assert(serial == answers(new QueryEngine(spark, posRoot, driverPathMaxPostings = 0L)))
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val (concurrent, jobs) = try jobsDuring {
+      (0 until 8).map(_ => clients.submit(() => answers(eng))).map(_.get(300,
+        java.util.concurrent.TimeUnit.SECONDS))
+    } finally clients.shutdown()
+    assert(jobs == 0, s"concurrent driver-path queries submitted $jobs Spark jobs")
+    concurrent.foreach(a => assert(a == serial))
+    // queries issued from the shard pool's own threads, more of them than
+    // it has threads, run their shards inline and complete
+    val (q, k) = ("def return posting", 10)
+    val n = 2 * Runtime.getRuntime.availableProcessors
+    val nested = scala.concurrent.Future(QueryEngine.onShardPool(
+      (0 until n).map(_ => () => (Thread.currentThread.getName, eng.topK(q, k)))))(
+      scala.concurrent.ExecutionContext.global)
+    val got = scala.concurrent.Await.result(nested, scala.concurrent.duration.Duration(120, "s"))
+    assert(got.forall { case (thread, hits) =>
+      thread.startsWith("graft-shard-") && hits == eng.topK(q, k) })
   }
 }

@@ -288,7 +288,12 @@ object Codec {
           var i = 1
           while (i < n) { docs(i) = docs(i - 1) + deltas(i - 1); i += 1 }
         }
-        (docs, tfsL.map(_.toInt), dlsL.map(_.toInt))
+        // narrowed in a loop: ArrayOps.map boxes every element
+        val tfs = new Array[Int](n)
+        val dls = new Array[Int](n)
+        var i = 0
+        while (i < n) { tfs(i) = tfsL(i).toInt; dls(i) = dlsL(i).toInt; i += 1 }
+        (docs, tfs, dls)
       case other =>
         throw new IllegalStateException(s"unknown postings block format $other")
     }

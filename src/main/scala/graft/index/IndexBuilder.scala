@@ -236,12 +236,16 @@ object IndexBuilder {
     * compresses each small `blocks` page alone). */
   val PostingsPageRows = 4
 
-  /** The ONE postings write (build, merge, rebase): 4 MB row groups and
-    * [[PostingsPageRows]]-row pages. parquet-mr makes its first page-size
-    * check at `parquet.page.size.row.check.min` rows (default 100) and
-    * only then honours the row limit, so both are set. */
+  /** The ONE postings write (build, merge, rebase): SNAPPY pages, 4 MB
+    * row groups and [[PostingsPageRows]]-row pages. The codec is pinned
+    * whatever `spark.sql.parquet.compression.codec` says, so every
+    * engine-written page takes PostingReader's direct snappy
+    * decompression. parquet-mr makes its first page-size check at
+    * `parquet.page.size.row.check.min` rows (default 100) and only then
+    * honours the row limit, so both are set. */
   private[index] def writePostings(rows: Dataset[_], path: String): Unit =
     rows.write.mode("overwrite")
+      .option("compression", "snappy")
       .option("parquet.block.size", (4 * 1024 * 1024).toString)
       .option("parquet.page.row.count.limit", PostingsPageRows.toString)
       .option("parquet.page.size.row.check.min", PostingsPageRows.toString)

@@ -3,10 +3,14 @@ package graft.index
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
+import org.apache.parquet.bytes.{BytesInput, HeapByteBufferAllocator}
 import org.apache.parquet.column.page.PageReadStore
+import org.apache.parquet.compression.CompressionCodecFactory
+import org.apache.parquet.compression.CompressionCodecFactory.{BytesInputCompressor,
+  BytesInputDecompressor}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.hadoop.metadata.{ColumnPath, CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.column.columnindex.{BoundaryOrder, ColumnIndex,
   OffsetIndex}
@@ -15,6 +19,9 @@ import org.apache.parquet.io.{ColumnIOFactory, SeekableInputStream}
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
   PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{GroupType, MessageType}
+import org.xerial.snappy.{Snappy, SnappyError}
+import java.io.IOException
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -128,21 +135,110 @@ final class PostingReader private (conf: Configuration, inputs: Seq[HadoopInputF
 object PostingReader {
   private val TermPath = ColumnPath.get("term")
 
-  /** Read options for one file reader: they carry its decompressors,
-    * which are neither thread-safe nor usable after the reader closes.
-    * Built from the held conf (the no-argument builder loads a fresh
-    * Configuration, ~10 ms per file), with two changes for reads of many
-    * small pages, measured on a 4.5k-doc index:
-    *  - Hadoop vectored reads off: on the local file system they hand
-    *    each page range to an asynchronous channel and park the reader
-    *    until it lands (median read of the 35 reference term sets 9.4 ->
-    *    5.6 ms);
-    *  - decompressors configured from an empty Configuration: the codec
-    *    looks its buffer size up in its conf on every page, and a lookup
-    *    in the session's Hadoop conf was a third of an all-term read. */
+  /** Read options for one file reader: they carry its decompressors
+    * ([[PageCodecs]]), which are neither thread-safe nor usable after the
+    * reader closes. Built from the held conf (the no-argument builder
+    * loads a fresh Configuration, ~10 ms per file), with Hadoop vectored
+    * reads off: on the local file system they hand each page range to an
+    * asynchronous channel and park the reader until it lands (median read
+    * of the 35 reference term sets 9.4 -> 5.6 ms, 4.5k-doc index). */
   private def options(conf: Configuration): ParquetReadOptions =
     HadoopReadOptions.builder(conf).withUseHadoopVectoredIo(false)
-      .withCodecFactory(new CodecFactory(new Configuration(false), 0)).build()
+      .withCodecFactory(new PageCodecs(conf)).build()
+
+  /** The reader's page decompression. SNAPPY pages (every postings file
+    * the engine writes: [[IndexBuilder.writePostings]] pins the codec)
+    * take one `Snappy.uncompress` from the page's heap bytes into an array
+    * of the header's uncompressed size; UNCOMPRESSED pages pass through;
+    * any other codec goes to parquet's CodecFactory. Parquet's own SNAPPY
+    * path opens a Hadoop codec stream per page, with a zeroed buffer of the
+    * `io.file.buffer.size` (64 KB in a Spark session) of whichever conf
+    * first reached the JVM-wide codec cache (`CodecFactory.CODEC_BY_NAME`,
+    * keyed by codec name alone, so the conf handed to the factory is
+    * ignored once any Spark parquet scan has run), plus direct-buffer
+    * copies: in a JFR profile of the search benchmark (seed 11) those
+    * streams were 42% of all bytes allocated, builds included. */
+  private[graft] final class PageCodecs(conf: Configuration) extends CompressionCodecFactory {
+    private var parquet: Option[CodecFactory] = None
+    private def fallback: CodecFactory = parquet.getOrElse {
+      val f = new CodecFactory(conf, 0)
+      parquet = Some(f)
+      f
+    }
+    def getDecompressor(codec: CompressionCodecName): BytesInputDecompressor = codec match {
+      case CompressionCodecName.SNAPPY => SnappyPages
+      case CompressionCodecName.UNCOMPRESSED => PlainPages
+      case other => fallback.getDecompressor(other)
+    }
+    def getCompressor(codec: CompressionCodecName): BytesInputCompressor =
+      fallback.getCompressor(codec)
+    def release(): Unit = parquet.foreach(_.release())
+  }
+
+  /** A page's bytes as (array, offset, length): the page's own heap
+    * array when it has one, else a copy. */
+  private def heapBytes(bytes: BytesInput): (Array[Byte], Int, Int) = {
+    val bb = bytes.toByteBuffer(HeapByteBufferAllocator.getInstance, _ => ())
+    if (bb.hasArray) (bb.array, bb.arrayOffset + bb.position(), bb.remaining)
+    else {
+      val a = new Array[Byte](bb.remaining)
+      bb.duplicate().get(a)
+      (a, 0, a.length)
+    }
+  }
+
+  private def pageError(codec: String, compressed: Int, expected: Int, got: String,
+                        cause: Throwable = null) =
+    new IOException(s"$codec page of $compressed compressed bytes: its header says " +
+      s"$expected uncompressed bytes, $got", cause)
+
+  /** Stateless, so one instance serves every reader. */
+  private object SnappyPages extends BytesInputDecompressor {
+    def decompress(bytes: BytesInput, uncompressedSize: Int): BytesInput = {
+      val (in, off, len) = heapBytes(bytes)
+      BytesInput.from(uncompress(in, off, len, uncompressedSize))
+    }
+    def decompress(input: ByteBuffer, compressedSize: Int, output: ByteBuffer,
+                   uncompressedSize: Int): Unit = {
+      val in = input.duplicate()
+      in.limit(in.position() + compressedSize)
+      output.put(decompress(BytesInput.from(in), uncompressedSize)
+        .toByteBuffer(HeapByteBufferAllocator.getInstance, _ => ()))
+    }
+    def release(): Unit = ()
+
+    /** `len` snappy bytes at `off` as exactly `size` bytes; an
+      * IOException naming both sizes when the page says another length or
+      * snappy rejects it. */
+    def uncompress(in: Array[Byte], off: Int, len: Int, size: Int): Array[Byte] = {
+      def rejected(e: Throwable) = pageError("SNAPPY", len, size, s"snappy rejects it: $e", e)
+      val said = try Snappy.uncompressedLength(in, off, len)
+        catch { case e @ (_: IOException | _: SnappyError) => throw rejected(e) }
+      if (said != size) throw pageError("SNAPPY", len, size, s"the page holds $said")
+      val out = new Array[Byte](size)
+      val n = try Snappy.uncompress(in, off, len, out, 0)
+        catch { case e @ (_: IOException | _: SnappyError) => throw rejected(e) }
+      if (n != size) throw pageError("SNAPPY", len, size, s"snappy wrote $n")
+      out
+    }
+  }
+
+  private object PlainPages extends BytesInputDecompressor {
+    def decompress(bytes: BytesInput, uncompressedSize: Int): BytesInput = {
+      if (bytes.size != uncompressedSize) throw pageError("UNCOMPRESSED",
+        bytes.size.toInt, uncompressedSize, s"the page holds ${bytes.size}")
+      bytes
+    }
+    def decompress(input: ByteBuffer, compressedSize: Int, output: ByteBuffer,
+                   uncompressedSize: Int): Unit = {
+      if (compressedSize != uncompressedSize) throw pageError("UNCOMPRESSED",
+        compressedSize, uncompressedSize, s"the page holds $compressedSize")
+      val in = input.duplicate()
+      in.limit(in.position() + compressedSize)
+      output.put(in)
+    }
+    def release(): Unit = ()
+  }
 
   /** One file's part of a read: per selected row group, the ascending
     * ordinals of the `term` pages that may hold the read's terms, or None

@@ -1,9 +1,10 @@
 package graft.index
 
 import graft.table.IcebergLite
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable.ArrayBuffer
@@ -40,6 +41,14 @@ import scala.reflect.ClassTag
  * driver-side). Selection is automatic from the dictionary's df totals,
  * in one place: the per-shard executor, whose one-shard walks are also
  * the point lookups.
+ *
+ * Jobs: every function the query path hands Spark lives in [[ShardJobs]],
+ * and every job is one `runJob(rdd, (TaskContext, Iterator) => U,
+ * partitions, handler)` call, never `rdd.collect()`: Spark's
+ * ClosureCleaner ASM-parses the class that defines each function on
+ * every job, and ShardJobs' class is small where QueryEngine's, RDD's and
+ * SparkContext's are not (a 4-partition job on 4 vCPU: ~10.5 ms as a
+ * collect, ~4 ms this way).
  */
 object QueryEngine {
   private final class ShardThread(r: Runnable, n: Int) extends Thread(r, s"graft-shard-$n") {
@@ -212,6 +221,80 @@ object QueryEngine {
       }
     }
   }
+}
+
+/** Every function the query path hands Spark, and its job submission
+  * (see the QueryEngine header): kept in this small class because Spark's
+  * ClosureCleaner parses the defining class of each function per job.
+  * Per-query state (terms, the walk) rides in the functions' captures,
+  * which the cleaner serializes but never parses. */
+private[index] object ShardJobs {
+  /** One shard's walk over its rows and (gate index -> sorted allowed
+    * docIds). */
+  type Walk[R] = (Seq[PostingRowPos], Map[Int, Array[Long]]) => Iterator[R]
+
+  /** `walk` over one shard's rows; a shard with no rows walks nothing. */
+  def walkRows[R](rs: Seq[PostingRowPos], gates: Map[Int, Array[Long]],
+                  walk: Walk[R]): Iterator[R] =
+    if (rs.isEmpty) Iterator.empty else walk(rs, gates)
+
+  private def read(terms: Seq[String], positions: Boolean,
+                   conf: Broadcast[SerializableConfiguration],
+                   shard: Int, pages: Seq[PostingReader.FilePages]): Seq[PostingRowPos] =
+    PostingReader.readPages(pages, terms, positions, Some(shard), conf.value.value)
+
+  /** An ungated shard task: read the (shard, page selection) it was
+    * handed and walk it. */
+  def walkShard[R](terms: Seq[String], positions: Boolean,
+                   conf: Broadcast[SerializableConfiguration], walk: Walk[R])
+      : ((Int, Seq[PostingReader.FilePages])) => Iterator[R] = { case (s, pages) =>
+    walkRows(read(terms, positions, conf, s, pages), Map.empty, walk)
+  }
+
+  /** A gated shard task: its (shard, page selection) zipped with the
+    * (shard, (gate index, docId)) ids shuffled to it. */
+  def gatedWalk[R](terms: Seq[String], positions: Boolean,
+                   conf: Broadcast[SerializableConfiguration], walk: Walk[R])
+      : (Iterator[(Int, Seq[PostingReader.FilePages])], Iterator[(Int, (Int, Long))])
+        => Iterator[R] = { (selected, allowed) =>
+    val gates = QueryEngine.sortGates(allowed.map(_._2).toArray)
+    selected.flatMap { case (s, pages) =>
+      walkRows(read(terms, positions, conf, s, pages), gates, walk)
+    }
+  }
+
+  /** A (gate index, docId) row keyed by its docId's shard. */
+  val keyByShard: ((Int, Long)) => (Int, (Int, Long)) = t => IndexBuilder.shardOf(t._2) -> t
+
+  private val all: (TaskContext, Iterator[Any]) => Vector[Any] = (_, it) => it.toVector
+
+  /** Every row of `rdd`, partitions in order, in one job. */
+  def collect[R](rdd: RDD[R]): Seq[R] = {
+    val parts = new Array[Vector[Any]](rdd.getNumPartitions)
+    rdd.sparkContext.runJob(rdd.asInstanceOf[RDD[Any]], all, parts.indices,
+      (i: Int, part: Vector[Any]) => parts(i) = part)
+    parts.iterator.flatten.toVector.asInstanceOf[Vector[R]]
+  }
+
+  /** Every row of `rdd` when it holds at most `max`, else None, in ONE
+    * job (a `limit` collect is Spark's incremental take, 2-3 jobs): each
+    * partition sends at most max+1 rows, and the driver keeps them only
+    * while the total stays within `max`. */
+  def collectUpTo(rdd: RDD[(Int, Long)], max: Long): Option[Array[(Int, Long)]] = {
+    // overflow-safe limit: a threshold near Long.MaxValue clamps
+    val per = if (max >= Int.MaxValue) Int.MaxValue else (max + 1).toInt
+    val got = ArrayBuffer.empty[(Int, Long)]
+    var over = false
+    rdd.sparkContext.runJob(rdd, upTo(per), 0 until rdd.getNumPartitions,
+      (_: Int, part: Array[(Int, Long)]) => if (!over) {
+        got ++= part
+        if (got.length > max) { over = true; got.clear() }
+      })
+    if (over) None else Some(got.toArray)
+  }
+
+  private def upTo(per: Int): (TaskContext, Iterator[(Int, Long)]) => Array[(Int, Long)] =
+    (_, it) => it.take(per).toArray
 }
 
 /** One OR-group with its filter-context expansions RESOLVED against the
@@ -427,7 +510,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val shards =
       if (req.boolMode) booleanWalk(req.query)(QueryEngine.bestOfGroups(_, k))
       else scoredWalk(req)
-    shards.fold(Seq.empty[ScoredDoc])(_.fold(identity, _.collect().toSeq))
+    shards.fold(Seq.empty[ScoredDoc])(_.fold(identity, ShardJobs.collect))
       .sorted(ScoredDoc.betterOrdering).take(k)
   }
 
@@ -449,47 +532,43 @@ final class QueryEngine(spark: SparkSession, val root: String,
   /** The ONE driver-vs-distributed fork of every posting walk: `walk`
     * runs once per document shard (every shard, or only `shard`) over the
     * shard's PostingReader rows of `terms` (posBlocks only when
-    * `positions`) and its (gate index -> sorted allowed docIds). Within
-    * `driverPathMaxPostings` of `volume`, the driver's held-open reader
-    * serves every shard with no Spark job: each shard reads and walks as
-    * its own task on the shard pool (one thread per processor), and the
-    * outputs concatenate in shard order. Over it, one job runs one task
-    * per shard, shipped the pages the driver's reader selected in the
-    * shard's files (so a pinned engine keeps its snapshot). Gates are
-    * docmeta predicates, pushed down. A small gated walk collects at most
-    * limit+1 allowed ids in one job (within the limit the array IS every
-    * allowed id); over it, the ids are shuffled to their shard's task,
-    * never to the driver. */
+    * `positions`) and its (gate index -> sorted allowed docIds); a shard
+    * with no rows walks nothing. Within `driverPathMaxPostings` of
+    * `volume`, the driver's held-open reader serves every shard with no
+    * Spark job: each shard reads and walks as its own task on the shard
+    * pool (one thread per processor), and the outputs concatenate in
+    * shard order. Over it, the walk is one job (run by its caller) of one
+    * task per shard, shipped the pages the driver's reader selected in
+    * the shard's files (so a pinned engine keeps its snapshot); the tasks'
+    * functions are [[ShardJobs]]', so the job's closure cleaning parses
+    * only that small class. Gates are docmeta predicates, pushed down. A
+    * small gated walk collects at most limit+1 allowed ids in one job
+    * (within the limit the array IS every allowed id); over it, the ids
+    * are shuffled to their shard's task, never to the driver. */
   private def perShard[R: ClassTag](terms: Seq[String], positions: Boolean,
       volume: Long, gates: Seq[Column], shard: Option[Int] = None)
-      (walk: (Seq[PostingRowPos], Map[Int, Array[Long]]) => Iterator[R]): Shards[R] = {
+      (walk: ShardJobs.Walk[R]): Shards[R] = {
     val ids = shard.fold(0 until manifest.numShards: Seq[Int])(Seq(_))
     val reader = postingReader
     def onDriver(gatesOf: Int => Map[Int, Array[Long]]): Shards[R] =
       Left(QueryEngine.onShardPool(ids.map { s => () =>
-        val rs = reader.rows(terms, positions, Some(s))
-        if (rs.isEmpty) Nil else walk(rs, gatesOf(s)).toVector
+        ShardJobs.walkRows(reader.rows(terms, positions, Some(s)), gatesOf(s), walk).toVector
       }).flatten)
     // one partition per walked shard, in shard order (partition id ==
-    // shard when every shard walks); a shard with no rows walks nothing
-    def shardRows: RDD[Seq[PostingRowPos]] = {
-      val conf = taskConf
+    // shard when every shard walks), holding the shard's page selection
+    def selections: RDD[(Int, Seq[PostingReader.FilePages])] =
       spark.sparkContext.parallelize(ids.map(s => s -> reader.select(terms, Some(s))), ids.size)
-        .map { case (s, pages) =>
-          PostingReader.readPages(pages, terms, positions, Some(s), conf.value.value)
-        }.filter(_.nonEmpty)
-    }
     val small = volume <= driverPathMaxPostings
     if (gates.isEmpty) {
       if (small) onDriver(_ => Map.empty)
-      else Right(shardRows.flatMap(walk(_, Map.empty)))
+      else Right(selections.flatMap(ShardJobs.walkShard(terms, positions, taskConf, walk)))
     } else {
       val allowed = gates.zipWithIndex.map { case (g, i) =>
         docmeta.where(g)
           .select(lit(i).cast("int").as("_1"), col("docId").as("_2"))
           .as[(Int, Long)]
       }.reduce(_ union _)
-      val local = if (small) collectUpTo(allowed, driverPathMaxPostings) else None
+      val local = if (small) ShardJobs.collectUpTo(allowed.rdd, driverPathMaxPostings) else None
       local match {
         case Some(a) =>
           val byShard = a.groupBy(t => IndexBuilder.shardOf(t._2))
@@ -497,31 +576,12 @@ final class QueryEngine(spark: SparkSession, val root: String,
           onDriver(byShard.getOrElse(_, Map.empty))
         case None =>
           // HashPartitioner is the identity on shard ids 0 until numShards
-          val allowedByShard = allowed.rdd.map(t => IndexBuilder.shardOf(t._2) -> t)
+          val allowedByShard = allowed.rdd.map(ShardJobs.keyByShard)
             .partitionBy(new HashPartitioner(manifest.numShards))
-          Right(shardRows.zipPartitions(allowedByShard) { (rsIt, aIt) =>
-            val gs = QueryEngine.sortGates(aIt.map(_._2).toArray)
-            rsIt.flatMap(walk(_, gs))
-          })
+          Right(selections.zipPartitions(allowedByShard)(
+            ShardJobs.gatedWalk(terms, positions, taskConf, walk)))
       }
     }
-  }
-
-  /** Every row of `ds` when it holds at most `max`, else None, in ONE
-    * Spark job (a `limit` collect is Spark's incremental take, 2-3 jobs):
-    * each partition sends at most max+1 rows, and the driver keeps them
-    * only while the total stays within `max`. */
-  private def collectUpTo(ds: Dataset[(Int, Long)], max: Long): Option[Array[(Int, Long)]] = {
-    // overflow-safe limit: a threshold near Long.MaxValue clamps
-    val per = if (max >= Int.MaxValue) Int.MaxValue else (max + 1).toInt
-    val got = ArrayBuffer.empty[(Int, Long)]
-    var over = false
-    spark.sparkContext.runJob(ds.rdd, (it: Iterator[(Int, Long)]) => it.take(per).toArray,
-      (_: Int, part: Array[(Int, Long)]) => if (!over) {
-        got ++= part
-        if (got.length > max) { over = true; got.clear() }
-      })
-    if (over) None else Some(got.toArray)
   }
 
   /** The ONE term resolver of every scored read (run, explainScore,
@@ -662,7 +722,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
         cur.advanceTo(docId)
         if (!cur.exhausted && cur.curDoc == docId) Some(t -> read(cur)) else None
       }
-    }.fold(identity, _.collect().toSeq).toMap
+    }.fold(identity, ShardJobs.collect).toMap
   }
 
   /** The ES `/_explain` analogue: the per-term BM25 breakdown of one

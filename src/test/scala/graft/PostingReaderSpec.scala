@@ -2,10 +2,16 @@ package graft
 
 import graft.corpus.CorpusGen
 import graft.index._
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import java.io.IOException
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The held-open postings reader against the Spark scan of the same
   * files, over a multi-segment, unmerged index (a bulk build in two
@@ -21,6 +27,12 @@ import java.nio.file.{Files, Paths}
   *    written before bounded pages, and in 4-row pages);
   *  - the reader's counters: a one-term read assembles at most its rows
   *    plus page slack, and fewer records and pages than an all-term read;
+  *  - page decompression: postings are written SNAPPY whatever the
+  *    session's parquet codec; SNAPPY pages decompress without a per-page
+  *    codec buffer (allocated bytes per page of a warm read, after a Spark
+  *    scan filled parquet's JVM-wide codec cache), GZIP and UNCOMPRESSED
+  *    files read as the scan does, and a page of the wrong length or a
+  *    corrupt one fails loudly;
   *  - under the driver gate, topK, booleanTopK, matchingDocIds,
   *    explainScore and highlight run no Spark job (a gated search only its
   *    one gate collect job), also from 8 concurrent client threads; over
@@ -94,6 +106,33 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
         s"shard reads (positions=$positions) do not add up for $terms")
     }
 
+  /** `reader`'s rows of every term set equal the Spark scan's of `dirs`,
+    * byte for byte, in both projections. */
+  private def checkScan(reader: PostingReader, dirs: Seq[String],
+                        sets: Seq[Seq[String]]): Unit = {
+    val scan = spark.read.parquet(dirs: _*)
+    sets.foreach { terms =>
+      val full = scan.where(col("term").isin(terms: _*))
+        .as[PostingRowPos].collect().toSeq
+      val lite = scan.select(PostingRow.LiteCols.map(col): _*)
+        .where(col("term").isin(terms: _*)).as[PostingRow]
+        .collect().toSeq.map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes,
+          r.blocks, r.skips, Nil))
+      assert(full.nonEmpty)
+      assert(sorted(reader.rows(terms, positions = true)) == sorted(full),
+        s"positional rows differ for $terms")
+      assert(sorted(reader.rows(terms, positions = false)) == sorted(lite),
+        s"scoring-projection rows differ for $terms")
+    }
+  }
+
+  /** The codecs of every column chunk of the data files under `dir`. */
+  private def codecsOf(dir: String): Set[CompressionCodecName] =
+    PostingReader.dataFiles(dir, conf).flatMap { st =>
+      PostingReader.footer(HadoopInputFile.fromStatus(st, conf), conf).getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec))
+    }.toSet
+
   /** The reader over `eng`'s postings files plus one legacy file: the
     * same rows as one file, written as builds wrote postings before
     * bounded pages (one page per column chunk). */
@@ -108,20 +147,7 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
       "the legacy file is not one page per column chunk")
     val dirs = eng.manifest.segments.map(s => s"$root/${s.name}/postings")
     val reader = new PostingReader(dirs :+ legacy, conf)
-    val scan = spark.read.parquet(dirs :+ legacy: _*)
-    termSets(eng).foreach { terms =>
-      val full = scan.where(col("term").isin(terms: _*))
-        .as[PostingRowPos].collect().toSeq
-      val lite = scan.select(PostingRow.LiteCols.map(col): _*)
-        .where(col("term").isin(terms: _*)).as[PostingRow]
-        .collect().toSeq.map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes,
-          r.blocks, r.skips, Nil))
-      assert(full.nonEmpty)
-      assert(sorted(reader.rows(terms, positions = true)) == sorted(full),
-        s"positional rows differ for $terms")
-      assert(sorted(reader.rows(terms, positions = false)) == sorted(lite),
-        s"scoring-projection rows differ for $terms")
-    }
+    checkScan(reader, dirs :+ legacy, termSets(eng))
     assert(reader.rows(Seq("zzqqnotaterm"), positions = true).isEmpty)
     assert(reader.rows(Nil, positions = false).isEmpty)
     checkShardReads(reader, eng.manifest.numShards, termSets(eng))
@@ -291,6 +317,85 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("distributed walks are one Spark job each") {
     checkDistributedJobs()
+  }
+
+  test("postings are written SNAPPY whatever the session's parquet codec") {
+    val key = "spark.sql.parquet.compression.codec"
+    val prev = spark.conf.getOption(key)
+    val r = s"$work/gzip-session"
+    spark.conf.set(key, "gzip")
+    try IndexBuilder.build(spark, CorpusGen.dataset(spark, 160, 7L, 4), r, numShards = 4)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val eng = new QueryEngine(spark, r)
+    assert(eng.manifest.segments.forall(s =>
+      codecsOf(s"$r/${s.name}/docmeta") == Set(CompressionCodecName.GZIP)),
+      "the session's codec did not reach the build")
+    val dirs = eng.manifest.segments.map(s => s"$r/${s.name}/postings")
+    dirs.foreach(d => assert(codecsOf(d) == Set(CompressionCodecName.SNAPPY), d))
+    checkScan(new PostingReader(dirs, conf), dirs, termSets(eng))
+  }
+
+  test("GZIP and UNCOMPRESSED postings read as the Spark scan reads them") {
+    val eng = new QueryEngine(spark, root)
+    val sets = termSets(eng)
+    val pageRows = IndexBuilder.PostingsPageRows.toString
+    Seq("gzip" -> CompressionCodecName.GZIP,
+        "uncompressed" -> CompressionCodecName.UNCOMPRESSED).foreach { case (codec, name) =>
+      val dir = s"$work/postings-$codec"
+      eng.postingsFull.repartition(4, col("shard")).sortWithinPartitions("term", "shard")
+        .write.option("compression", codec)
+        .option("parquet.page.row.count.limit", pageRows)
+        .option("parquet.page.size.row.check.min", pageRows).parquet(dir)
+      assert(codecsOf(dir) == Set(name))
+      val reader = new PostingReader(Seq(dir), conf)
+      checkScan(reader, Seq(dir), sets)
+      checkShardReads(reader, 4, sets)
+    }
+  }
+
+  test("a page of another length than its header says, or a corrupt one, fails loudly") {
+    val codecs = new PostingReader.PageCodecs(new Configuration(false))
+    val snappy = codecs.getDecompressor(CompressionCodecName.SNAPPY)
+    val raw = new Array[Byte](1000)
+    new scala.util.Random(7).nextBytes(raw)
+    val packed = org.xerial.snappy.Snappy.compress(raw)
+    assert(snappy.decompress(BytesInput.from(packed), raw.length).toByteArray.sameElements(raw))
+    val padded = Array[Byte](9, 9) ++ packed :+ 9.toByte
+    assert(snappy.decompress(BytesInput.from(padded, 2, packed.length), raw.length)
+      .toByteArray.sameElements(raw))
+    def fails(codec: String, bytes: Array[Byte], size: Int, why: String): Unit = {
+      val e = intercept[IOException](codecs.getDecompressor(CompressionCodecName.valueOf(codec))
+        .decompress(BytesInput.from(bytes), size))
+      Seq(codec, s"${bytes.length} compressed bytes", s"says $size uncompressed bytes", why)
+        .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    }
+    fails("SNAPPY", packed, raw.length + 8, s"the page holds ${raw.length}")
+    fails("SNAPPY", packed.take(packed.length / 2), raw.length, "snappy rejects it")
+    fails("UNCOMPRESSED", raw, raw.length - 1, s"the page holds ${raw.length}")
+    codecs.release()
+  }
+
+  test("a warm one-term read allocates no per-page codec buffer, after a Spark scan") {
+    val dirs = new QueryEngine(spark, root).manifest.segments
+      .map(s => s"$root/${s.name}/postings")
+    // a Spark scan first: parquet-mr's JVM-wide codec cache then holds a
+    // SNAPPY codec built from the session's conf (64 KB stream buffers)
+    assert(spark.read.parquet(dirs: _*).where(col("term") === "def").collect().nonEmpty)
+    val reader = new PostingReader(dirs, conf)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def bytesPerPage(): Long = {
+      val before = threads.getCurrentThreadAllocatedBytes
+      val read = reader.read(Seq("def"), positions = false)
+      val bytes = threads.getCurrentThreadAllocatedBytes - before
+      assert(read.rows.nonEmpty && read.pagesRead > 0)
+      bytes / read.pagesRead
+    }
+    (0 until 20).foreach(_ => bytesPerPage())
+    val perPage = (0 until 5).map(_ => bytesPerPage()).min
+    // measured on this index: ~150 KB per page through parquet-mr's codec
+    // (a 64 KB buffer per page and per dictionary page), ~28 KB without
+    assert(perPage < 64 * 1024, s"a one-term read allocated $perPage bytes per page")
   }
 
   test("shard reads of a legacy postings dir whose files span shards") {

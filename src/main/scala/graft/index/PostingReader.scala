@@ -1,5 +1,6 @@
 package graft.index
 
+import com.google.common.cache.{Cache, CacheBuilder, RemovalCause, RemovalNotification}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
@@ -23,113 +24,59 @@ import org.xerial.snappy.{Snappy, SnappyError}
 import java.io.IOException
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** The held-open postings files of one snapshot: the one way the query
-  * path reads a query's posting rows (ES: the query phase over segments
-  * a node holds open). Footers and each row group's page index (the
-  * `term` column's per-page min/max, the Lucene `.tip` analogue, plus
-  * every column's offset index) are read once, at construction. A read
-  * binary-searches each query term to the `term` pages that may hold it,
-  * opens only the files with such a page (and, for a shard read, only
-  * those that may hold the shard), and reads only those pages of every
-  * projected column; records of other terms or shards on them are
+/** The query path's one postings read (ES: the query phase over the
+  * segments a node holds open, their hot postings in the OS page cache).
+  * A reader is one snapshot's list of postings files, each named by its
+  * [[PostingReader.FileRef]] (path, length, modification time); what reads
+  * learn is held in one store per JVM ([[PostingReader.Store]]), under one
+  * byte budget:
+  *  - each file's footer and row groups' page indexes (the `term` column's
+  *    per-page min/max, the Lucene `.tip` analogue, plus every column's
+  *    offset index), read by the file's first read;
+  *  - the rows of each (file, term), kept as first read.
+  *
+  * A read answers resident terms from memory. For the rest it
+  * binary-searches each term to the `term` pages that may hold it, opens
+  * only the files with such a page (and, for a shard read, only those that
+  * may hold the shard), and reads only those pages of every projected
+  * column, in one pass per file; records of other terms on them are
   * dropped as they are assembled, before any byte is copied. It returns
-  * exactly the rows the Spark scan of the same files yields. Postings
-  * files are written with pages of [[IndexBuilder.PostingsPageRows]]
-  * rows; a file written with one page per column chunk reads whole, as
-  * before. The driver holds one per engine; a distributed task reads the
-  * pages the driver selected for its shard ([[PostingReader.readPages]]).
-  * Thread-safe: the held metadata is immutable and every read opens its
-  * own streams. */
-final class PostingReader private (conf: Configuration, inputs: Seq[HadoopInputFile]) {
+  * exactly the rows the Spark scan of the same files yields. Postings files
+  * are written with pages of [[IndexBuilder.PostingsPageRows]] rows; a file
+  * written with one page per column chunk reads whole, as before.
+  *
+  * The driver holds one reader per engine; a distributed task is shipped
+  * its shard's file refs and reads through the same store, so in local mode
+  * the driver and the tasks share one copy, and on a cluster each executor
+  * holds the files its tasks touch. Thread-safe: held entries are immutable
+  * and every page read opens its own streams. */
+final class PostingReader private[graft] (conf: Configuration,
+                                          private[graft] val files: Seq[PostingReader.FileRef]) {
   import PostingReader._
 
   /** Every postings data file under `dirs`. */
-  def this(dirs: Seq[String], conf: Configuration) = this(conf,
-    dirs.flatMap(PostingReader.dataFiles(_, conf)).map(HadoopInputFile.fromStatus(_, conf)))
+  def this(dirs: Seq[String], conf: Configuration) =
+    this(conf, dirs.flatMap(PostingReader.dataFiles(_, conf)).map(st =>
+      PostingReader.FileRef(st.getPath.toString, st.getLen, st.getModificationTime)))
 
-  private val files: IndexedSeq[Held] = inputs.toIndexedSeq.map(open(_, options(conf)))
+  /** The held files that may hold rows of `shard`: what a shard task is
+    * shipped. */
+  def filesOf(shard: Int): Seq[FileRef] = files.filter(store.holds(_, shard, conf))
 
-  private def holds(f: Held, shard: Int): Boolean =
-    f.shardSpans.exists { case (lo, hi) => lo <= shard && shard <= hi }
-
-  private def considered(shard: Option[Int]): IndexedSeq[Held] =
-    files.filter(f => shard.forall(holds(f, _)))
-
-  /** The paths of the held files that may hold rows of `shard`. */
-  def filesOf(shard: Int): Seq[String] = considered(Some(shard)).map(_.in.getPath.toString)
-
-  /** A file's row groups and `term` pages that may hold `keys` (UTF-8
-    * terms): a group without a page index is read whole (None). */
-  private def pick(f: Held, keys: Seq[Array[Byte]]): Seq[(Int, Option[Array[Int]])] =
-    if (keys.isEmpty) Nil
-    else f.index.indices.flatMap { g =>
-      f.index(g) match {
-        case None => Some(g -> None)
-        case Some(ix) => Some(ix.pagesOf(keys)).filter(_.nonEmpty).map(ps => g -> Some(ps))
-      }
-    }
-
-  private def utf8(terms: Seq[String]) = terms.distinct.map(_.getBytes(UTF_8))
-
-  /** Per file of the read that has any, the row groups and `term` pages
-    * that may hold `terms` (files that cannot hold `shard` are left out):
-    * the page selection the driver ships to a shard task. */
-  def select(terms: Seq[String], shard: Option[Int] = None): Seq[FilePages] = {
-    val keys = utf8(terms)
-    considered(shard).flatMap { f =>
-      Some(pick(f, keys)).filter(_.nonEmpty).map(FilePages(f.in.getPath.toString, _))
-    }
-  }
-
-  /** The posting rows of `terms` in every held file, or only those of
-    * `shard`; `positions = false` projects `posBlocks` out of the read
-    * (the rows then carry none, as the scoring projection's rows do). */
+  /** The posting rows of `terms` in every file, or only those of `shard`;
+    * `positions = false` projects `posBlocks` out of the read (the rows
+    * then carry none, as the scoring projection's rows do). */
   def rows(terms: Seq[String], positions: Boolean,
            shard: Option[Int] = None): Seq[PostingRowPos] = read(terms, positions, shard).rows
 
   /** [[rows]] with what the read cost. */
-  def read(terms: Seq[String], positions: Boolean, shard: Option[Int] = None): Read = {
-    val wanted = terms.toSet
-    val keys = utf8(terms)
-    val out = ArrayBuffer.empty[PostingRowPos]
-    var pagesRead, pagesSkipped, recordsRead, recordsSkipped = 0L
-    considered(shard).foreach { f =>
-      val schema = projection(f.footer.getFileMetaData.getSchema, positions)
-      val cols = schema.getColumns.asScala.map(c => ColumnPath.get(c.getPath: _*))
-      val picked = pick(f, keys).toMap
-      val ranges = f.footer.getBlocks.asScala.indices.flatMap { g =>
-        val rowCount = f.footer.getBlocks.get(g).getRowCount
-        val rr = picked.get(g).map(rowRanges(rowCount, _, f.index(g).orNull))
-        val n = rr.fold(0L)(_.rowCount)
-        recordsRead += n
-        recordsSkipped += rowCount - n
-        f.index(g).foreach { ix =>
-          cols.foreach { c =>
-            val oi = ix.getOffsetIndex(c)
-            var i = 0
-            while (i < oi.getPageCount) {
-              if (rr.exists(_.isOverlapping(oi.getFirstRowIndex(i),
-                  oi.getLastRowIndex(i, rowCount)))) pagesRead += 1
-              else pagesSkipped += 1
-              i += 1
-            }
-          }
-        }
-        rr.map(g -> _)
-      }
-      if (ranges.nonEmpty) {
-        val stream = f.in.newStream()
-        val r = try new HeldReader(f, options(conf), stream)
-          catch { case e: Throwable => stream.close(); throw e }
-        try readGroups(r, ranges, schema, wanted, shard, out)
-        finally r.close()
-      }
-    }
-    Read(out.toSeq, pagesRead, pagesSkipped, recordsRead, recordsSkipped)
-  }
+  def read(terms: Seq[String], positions: Boolean, shard: Option[Int] = None): Read =
+    store.read(files, terms, positions, shard, conf)
 }
 
 object PostingReader {
@@ -137,7 +84,7 @@ object PostingReader {
 
   /** Read options for one file reader: they carry its decompressors
     * ([[PageCodecs]]), which are neither thread-safe nor usable after the
-    * reader closes. Built from the held conf (the no-argument builder
+    * reader closes. Built from the read's conf (the no-argument builder
     * loads a fresh Configuration, ~10 ms per file), with Hadoop vectored
     * reads off: on the local file system they hand each page range to an
     * asynchronous channel and park the reader until it lands (median read
@@ -240,19 +187,23 @@ object PostingReader {
     def release(): Unit = ()
   }
 
-  /** One file's part of a read: per selected row group, the ascending
-    * ordinals of the `term` pages that may hold the read's terms, or None
-    * to read the group whole (it was written without a page index). What
-    * the driver ships to a distributed shard task. */
-  final case class FilePages(path: String, groups: Seq[(Int, Option[Array[Int]])])
+  /** A postings file's identity. A file rewritten at the same path has
+    * another length or modification time, so it is another file to the
+    * store: no entry held for its old contents is served for it. */
+  final case class FileRef(path: String, length: Long, modified: Long)
 
-  /** One read's rows and what it cost, over the files the read considered
-    * (every held file, or those that may hold the asked shard): data
-    * pages of the projected columns read versus skipped, and records
+  /** One read's rows and what it cost. `termsRead` counts the distinct
+    * terms some file read pages for; `termsResident` the other distinct
+    * terms the store answered from memory (a term that no file may hold
+    * counts in neither), so a repeated read counts every term resident.
+    * The page and record counters count page reads only, over each file
+    * the read looked up in its page index (a term not resident there):
+    * data pages of the projected columns read versus skipped, and records
     * assembled versus skipped. A file with no selected page is skipped
     * whole, unopened; pages of a row group without a page index are not
     * counted (its records are). */
-  final case class Read(rows: Seq[PostingRowPos], pagesRead: Long, pagesSkipped: Long,
+  final case class Read(rows: Seq[PostingRowPos], termsResident: Int, termsRead: Int,
+                        pagesRead: Long, pagesSkipped: Long,
                         recordsRead: Long, recordsSkipped: Long)
 
   /** One row group's sparse terms index: the `term` pages' min/max as
@@ -262,6 +213,11 @@ object PostingReader {
   private final class PageIndex(mins: Array[Array[Byte]], maxs: Array[Array[Byte]],
                                 nullPages: Array[Boolean], ascending: Boolean,
                                 offsets: Map[ColumnPath, OffsetIndex]) extends ColumnIndexStore {
+    /** What the index holds, as a held file's weight counts it: the
+      * min/max bytes and ~32 bytes per offset-index page. */
+    val bytes: Long = (mins.iterator ++ maxs.iterator).map(16L + _.length).sum +
+      32L * offsets.valuesIterator.map(_.getPageCount.toLong).sum
+
     def getColumnIndex(p: ColumnPath): ColumnIndex = null
     def getOffsetIndex(p: ColumnPath): OffsetIndex =
       offsets.getOrElse(p, throw new ColumnIndexStore.MissingOffsetIndexException(p))
@@ -296,17 +252,218 @@ object PostingReader {
     }
   }
 
+  /** The store every reader of the JVM reads through: its budget is a
+    * sixteenth of the max heap. */
+  private[graft] lazy val store = new Store(Runtime.getRuntime.maxMemory / 16)
+
+  /** What a kept row weighs beyond its `blocks`, `posBlocks` and `skips`
+    * bytes (its object, term and list headers); what a kept (file, term)
+    * entry weighs beyond its rows (its key); and the parts of a held file's
+    * weight beyond its page indexes, per file and per column chunk (its
+    * footer). Estimates, so that the budget bounds what the heap holds. */
+  private val RowOverhead = 256
+  private val EntryOverhead = 64
+  private val FileOverhead = 4096
+  private val ChunkOverhead = 1024
+
+  private def weightOf(bytes: Long): Int = bytes.min(Int.MaxValue).toInt
+
+  /** A store entry and the bytes it is held at. */
+  private sealed trait Entry { def weight: Int }
+
+  /** One (file, term)'s rows, as the file's first read of the term
+    * assembled them (none when the file does not hold the term). */
+  private final class Rows(val rows: Seq[PostingRowPos]) extends Entry {
+    val weight: Int = weightOf(EntryOverhead + rows.iterator.map { r =>
+      RowOverhead + r.blocks.iterator.map(_.length.toLong).sum + 24L * r.skips.size +
+        Option(r.posBlocks).fold(0L)(_.iterator.map(_.length.toLong).sum)
+    }.sum)
+  }
+
+  private final case class RowKey(file: FileRef, term: String, positions: Boolean)
+
+  /** The held files and the rows of each (file, term), in one LRU order
+    * within `budget` bytes, each entry at its weight. A file's entry is its
+    * footer and page indexes. A (file, term) entry is kept per projection:
+    * a positional entry also serves the scoring projection (its rows copied
+    * without `posBlocks`), a scoring one never serves a positional read. An
+    * entry heavier than the whole budget is used but not kept. Evictions
+    * log one DEBUG line. Thread-safe: two concurrent misses of one entry may
+    * both read it, and keep the same value. */
+  private[graft] final class Store(budget: Long) {
+    private val log = org.slf4j.LoggerFactory.getLogger(classOf[PostingReader])
+    private val holding = new AtomicLong
+    private val evicted = new AtomicLong
+    // one segment: one LRU order over every entry
+    private val cache: Cache[AnyRef, Entry] = CacheBuilder.newBuilder()
+      .concurrencyLevel(1).maximumWeight(budget)
+      .weigher[AnyRef, Entry]((_: AnyRef, e: Entry) => e.weight)
+      .removalListener[AnyRef, Entry] { (n: RemovalNotification[AnyRef, Entry]) =>
+        holding.addAndGet(-n.getValue.weight)
+        if (n.getCause == RemovalCause.SIZE) evicted.addAndGet(n.getValue.weight)
+      }.build[AnyRef, Entry]()
+
+    /** The bytes the store holds, at its entries' weights. */
+    private[graft] def bytesHeld: Long = holding.get
+
+    /** Forgets every entry, or every (file, term) entry unless `files`:
+      * the next reads are cold. */
+    private[graft] def clear(files: Boolean = true): Unit =
+      if (files) cache.invalidateAll()
+      else cache.asMap.keySet.removeIf(_.isInstanceOf[RowKey])
+
+    /** Keeps `e` under `key` unless it outweighs the budget. */
+    private def keep(key: AnyRef, e: Entry): Boolean = e.weight <= budget && {
+      holding.addAndGet(e.weight)
+      cache.put(key, e)
+      val freed = evicted.getAndSet(0)
+      if (freed > 0) log.debug(s"postings store evicted $freed bytes, holds " +
+        s"${holding.get} of its $budget-byte budget")
+      true
+    }
+
+    /** May `f` hold rows of `shard`? */
+    def holds(f: FileRef, shard: Int, conf: Configuration): Boolean = held(f, conf).holds(shard)
+
+    /** `f`'s footer and page indexes, held or read now. */
+    private def held(f: FileRef, conf: Configuration): Held = cache.getIfPresent(f) match {
+      case h: Held => h
+      case _ =>
+        val h = open(f, conf)
+        keep(f, h)
+        h
+    }
+
+    private def resident(f: FileRef, term: String,
+                         positions: Boolean): Option[Seq[PostingRowPos]] =
+      cache.getIfPresent(RowKey(f, term, positions)) match {
+        case r: Rows => Some(r.rows)
+        case _ if !positions => cache.getIfPresent(RowKey(f, term, true)) match {
+          case r: Rows => Some(r.rows.map(_.copy(posBlocks = Nil)))
+          case _ => None
+        }
+        case _ => None
+      }
+
+    /** The rows of `terms` in `files` (of `shard` only, when given): each
+      * file's resident terms from memory, the rest from its pages, read in
+      * one pass and kept. */
+    def read(files: Seq[FileRef], terms: Seq[String], positions: Boolean,
+             shard: Option[Int], conf: Configuration): Read = {
+      val want = terms.distinct
+      val out = ArrayBuffer.empty[PostingRowPos]
+      val served, fromPages = mutable.HashSet.empty[String]
+      val cost = new Cost
+      def add(rs: Seq[PostingRowPos]): Unit =
+        rs.foreach(r => if (shard.forall(_ == r.shard)) out += r)
+      if (want.nonEmpty) files.foreach { ref =>
+        val f = held(ref, conf)
+        if (shard.forall(f.holds)) {
+          val missing = want.filter { t =>
+            val rs = resident(ref, t, positions)
+            rs.foreach { r => add(r); served += t }
+            rs.isEmpty
+          }
+          if (missing.nonEmpty) readTerms(ref, f, missing, positions, conf, cost).foreach {
+            byTerm => missing.foreach { t =>
+              val rs = byTerm.getOrElse(t, Nil)
+              add(rs)
+              fromPages += t
+              // the positional entry now serves the scoring projection too
+              if (keep(RowKey(ref, t, positions), new Rows(rs)) && positions)
+                cache.invalidate(RowKey(ref, t, false))
+            }
+          }
+        }
+      }
+      Read(out.toSeq, (served --= fromPages).size, fromPages.size,
+        cost.pagesRead, cost.pagesSkipped, cost.recordsRead, cost.recordsSkipped)
+    }
+  }
+
+  private final class Cost {
+    var pagesRead, pagesSkipped, recordsRead, recordsSkipped = 0L
+  }
+
+  /** The rows of `terms` on their pages of `f`, by term (every shard's), or
+    * None when no page of the file may hold any of them. */
+  private def readTerms(ref: FileRef, f: Held, terms: Seq[String], positions: Boolean,
+                        conf: Configuration, cost: Cost): Option[Map[String, Seq[PostingRowPos]]] = {
+    val schema = projection(f.footer.getFileMetaData.getSchema, positions)
+    val cols = schema.getColumns.asScala.map(c => ColumnPath.get(c.getPath: _*))
+    val picked = f.pick(terms.map(_.getBytes(UTF_8))).toMap
+    val ranges = f.footer.getBlocks.asScala.indices.flatMap { g =>
+      val rowCount = f.footer.getBlocks.get(g).getRowCount
+      val rr = picked.get(g).map(rowRanges(rowCount, _, f.index(g).orNull))
+      val n = rr.fold(0L)(_.rowCount)
+      cost.recordsRead += n
+      cost.recordsSkipped += rowCount - n
+      f.index(g).foreach { ix =>
+        cols.foreach { c =>
+          val oi = ix.getOffsetIndex(c)
+          var i = 0
+          while (i < oi.getPageCount) {
+            if (rr.exists(_.isOverlapping(oi.getFirstRowIndex(i),
+                oi.getLastRowIndex(i, rowCount)))) cost.pagesRead += 1
+            else cost.pagesSkipped += 1
+            i += 1
+          }
+        }
+      }
+      rr.map(g -> _)
+    }
+    if (ranges.isEmpty) None
+    else {
+      val in = inputFile(ref, conf)
+      val stream = in.newStream()
+      val r = try new HeldReader(in, f, options(conf), stream)
+        catch { case e: Throwable => stream.close(); throw e }
+      val rows = ArrayBuffer.empty[PostingRowPos]
+      try readGroups(r, ranges, schema, terms.toSet, rows)
+      finally r.close()
+      Some(rows.toSeq.groupBy(_.term))
+    }
+  }
+
   /** One held file: its footer, each row group's page index (None when
     * the group has no column or offset index: it is read whole), and each
     * row group's `shard` min/max (every shard when the group has no
     * stats). Builder-, merge- and rebase-written files hold one shard
     * each; files merged by older engines span several, and a shard read
     * of them reads their other shards' pages too. */
-  private final class Held(val in: HadoopInputFile, val footer: ParquetMetadata,
-                           val index: IndexedSeq[Option[PageIndex]],
-                           val shardSpans: Seq[(Int, Int)])
+  private final class Held(val footer: ParquetMetadata, val index: IndexedSeq[Option[PageIndex]],
+                           shardSpans: Seq[(Int, Int)]) extends Entry {
+    val weight: Int = weightOf(FileOverhead +
+      ChunkOverhead.toLong * footer.getBlocks.asScala.map(_.getColumns.size).sum +
+      index.flatten.map(_.bytes).sum)
 
-  private def open(in: HadoopInputFile, options: ParquetReadOptions): Held = {
+    def holds(shard: Int): Boolean =
+      shardSpans.exists { case (lo, hi) => lo <= shard && shard <= hi }
+
+    /** The row groups and `term` pages that may hold `keys` (UTF-8 terms):
+      * a group without a page index is read whole (None). */
+    def pick(keys: Seq[Array[Byte]]): Seq[(Int, Option[Array[Int]])] =
+      index.indices.flatMap { g =>
+        index(g) match {
+          case None => Some(g -> None)
+          case Some(ix) => Some(ix.pagesOf(keys)).filter(_.nonEmpty).map(ps => g -> Some(ps))
+        }
+      }
+  }
+
+  /** `f` to read, after checking it is still the file `f` names. */
+  private def inputFile(f: FileRef, conf: Configuration): HadoopInputFile = {
+    val p = new Path(f.path)
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    if (st.getLen != f.length || st.getModificationTime != f.modified)
+      throw new IOException(s"postings file ${f.path} changed since it was listed: length " +
+        s"${f.length} -> ${st.getLen}, modified ${f.modified} -> ${st.getModificationTime}")
+    HadoopInputFile.fromStatus(st, conf)
+  }
+
+  private def open(ref: FileRef, conf: Configuration): Held = {
+    val in = inputFile(ref, conf)
+    val options = PostingReader.options(conf)
     val stream = in.newStream()
     try {
       val footer = ParquetFileReader.readFooter(in, options, stream)
@@ -332,15 +489,15 @@ object PostingReader {
         .filter(st => st != null && st.hasNonNullValue)
         .fold((0, Int.MaxValue))(st => (st.genericGetMin.asInstanceOf[Integer].intValue,
           st.genericGetMax.asInstanceOf[Integer].intValue)))
-      new Held(in, footer, index, spans)
+      new Held(footer, index, spans)
     } finally stream.close()
   }
 
   /** A file reader whose filtered page reads take the held offset
     * indexes. */
-  private final class HeldReader(f: Held, options: ParquetReadOptions,
+  private final class HeldReader(in: HadoopInputFile, f: Held, options: ParquetReadOptions,
                                  stream: SeekableInputStream)
-      extends ParquetFileReader(f.in, f.footer, options, stream) {
+      extends ParquetFileReader(in, f.footer, options, stream) {
     override def getColumnIndexStore(g: Int): ColumnIndexStore =
       f.index(g).getOrElse(super.getColumnIndexStore(g))
   }
@@ -360,48 +517,23 @@ object PostingReader {
     else new MessageType(fileSchema.getName,
       fileSchema.getFields.asScala.filter(_.getName != "posBlocks").asJava)
 
-  /** Assembles the rows of `terms` (of `shard` only, when given) on the
-    * selected rows of `groups` into `out`. */
+  /** Assembles the rows of `terms` on the selected rows of `groups` into
+    * `out`. */
   private def readGroups(r: ParquetFileReader, groups: Seq[(Int, RowRanges)],
-                         schema: MessageType, wanted: Set[String], shard: Option[Int],
+                         schema: MessageType, wanted: Set[String],
                          out: ArrayBuffer[PostingRowPos]): Unit = {
     r.setRequestedSchema(schema)
     val io = new ColumnIOFactory().getColumnIO(schema, r.getFooter.getFileMetaData.getSchema)
     groups.foreach { case (g, ranges) =>
       val pages: PageReadStore = r.readFilteredRowGroup(g, ranges)
-      val rr = io.getRecordReader(pages, new RowMaterializer(schema, wanted, shard),
-        FilterCompat.NOOP)
+      val rr = io.getRecordReader(pages, new RowMaterializer(schema, wanted), FilterCompat.NOOP)
       var i = 0L
       while (i < pages.getRowCount) {
-        val row = rr.read() // null: a term or shard outside the read
+        val row = rr.read() // null: a term outside the read
         if (row != null) out += row
         i += 1
       }
     }
-  }
-
-  /** A distributed task's read: the pages `selected` (as the driver's
-    * [[PostingReader.select]] gave them) of its own files, rows of
-    * `terms` in `shard` only. The task opens each file's footer; the
-    * filtered page reads load the offset indexes they need. */
-  def readPages(selected: Seq[FilePages], terms: Seq[String], positions: Boolean,
-                shard: Option[Int], conf: Configuration): Seq[PostingRowPos] = {
-    val wanted = terms.toSet
-    val out = ArrayBuffer.empty[PostingRowPos]
-    selected.foreach { sel =>
-      val in = HadoopInputFile.fromPath(new Path(sel.path), conf)
-      val stream = in.newStream()
-      val r = try new ParquetFileReader(in, options(conf), stream)
-        catch { case e: Throwable => stream.close(); throw e }
-      try {
-        val ranges = sel.groups.map { case (g, ps) =>
-          g -> rowRanges(r.getRowGroups.get(g).getRowCount, ps, r.getColumnIndexStore(g))
-        }
-        readGroups(r, ranges, projection(r.getFooter.getFileMetaData.getSchema, positions),
-          wanted, shard, out)
-      } finally r.close()
-    }
-    out.toSeq
   }
 
   /** The data files of one parquet directory as Spark's scan lists them:
@@ -457,11 +589,10 @@ object PostingReader {
 
   /** Assembles one stored posting row from its parquet record, by column
     * name; a null list stays null and an empty one empty, as the Spark
-    * encoder decodes them. A row whose term is not `wanted`, or whose
-    * shard is not `only`, is null, and its byte columns are never copied
-    * (`shard` and `term` precede them in the record). */
-  private final class RowMaterializer(schema: MessageType, wanted: Set[String],
-                                      only: Option[Int])
+    * encoder decodes them. A row whose term is not `wanted` is null, and
+    * its byte columns are never copied (`term` precedes them in the
+    * record). */
+  private final class RowMaterializer(schema: MessageType, wanted: Set[String])
       extends RecordMaterializer[PostingRowPos] {
     private var shard = 0
     private var term: String = _
@@ -490,7 +621,7 @@ object PostingReader {
         case "shard" => ints(shard = _)
         case "term" => binaries { v =>
           term = v.toStringUsingUTF8
-          keep = wanted(term) && only.forall(_ == shard)
+          keep = wanted(term)
         }
         case "df" => longs(df = _)
         case "bytes" => longs(bytes = _)

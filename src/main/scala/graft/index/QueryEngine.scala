@@ -19,11 +19,12 @@ import scala.reflect.ClassTag
  * Read shape (scale-first):
  *   dict lookup (driver-resident map, or a term-filtered parquet read)
  *   -> per document-shard block-max WAND top-k over that shard's posting
- *      rows of the query terms, read by PostingReader (each term
- *      binary-searched to its pages in the page index held since open;
- *      postings files are term-major, one shard each, in 4-row pages, so
- *      a read decodes only its terms' pages) — shards score in parallel,
- *      the ES "query phase": on the driver path as tasks of one
+ *      rows of the query terms, read by PostingReader (resident terms from
+ *      its JVM-wide store of held files and their term rows; the rest
+ *      binary-searched to their pages in the held page index, read once
+ *      and kept: postings files are term-major, one shard each, in 4-row
+ *      pages, so a read decodes only its terms' pages) — shards score in
+ *      parallel, the ES "query phase": on the driver path as tasks of one
  *      engine-wide pool of one thread per available processor, on the
  *      distributed path as one Spark task per shard
  *   -> global top-k merge of the per-shard top-k on the driver (the ES
@@ -33,9 +34,10 @@ import scala.reflect.ClassTag
  * Small posting volumes (below ~0.5M postings) take the driver path: the
  * held-open reader walks every shard with no Spark job (a gated query
  * runs only its one-job gate collect). Larger ones run one Spark job
- * with one task per shard; each task reads only the pages the driver
- * selected in its own shard's files and runs the same walk, with no
- * Catalyst plan and no postings shuffle. The
+ * with one task per shard; each task is shipped its shard's file refs,
+ * reads them through its JVM's store as the driver path does (in local
+ * mode the very same store), and runs the same walk, with no Catalyst
+ * plan and no postings shuffle. The
  * distributed path is the 10^12-doc route and already won at 1M docs in
  * its earlier scan-and-group form (measured p95 0.30s vs 5.7s
  * driver-side). Selection is automatic from the dictionary's df totals,
@@ -240,26 +242,26 @@ private[index] object ShardJobs {
 
   private def read(terms: Seq[String], positions: Boolean,
                    conf: Broadcast[SerializableConfiguration],
-                   shard: Int, pages: Seq[PostingReader.FilePages]): Seq[PostingRowPos] =
-    PostingReader.readPages(pages, terms, positions, Some(shard), conf.value.value)
+                   shard: Int, files: Seq[PostingReader.FileRef]): Seq[PostingRowPos] =
+    new PostingReader(conf.value.value, files).rows(terms, positions, Some(shard))
 
-  /** An ungated shard task: read the (shard, page selection) it was
-    * handed and walk it. */
+  /** An ungated shard task: read the (shard, file refs) it was handed and
+    * walk it. */
   def walkShard[R](terms: Seq[String], positions: Boolean,
                    conf: Broadcast[SerializableConfiguration], walk: Walk[R])
-      : ((Int, Seq[PostingReader.FilePages])) => Iterator[R] = { case (s, pages) =>
-    walkRows(read(terms, positions, conf, s, pages), Map.empty, walk)
+      : ((Int, Seq[PostingReader.FileRef])) => Iterator[R] = { case (s, files) =>
+    walkRows(read(terms, positions, conf, s, files), Map.empty, walk)
   }
 
-  /** A gated shard task: its (shard, page selection) zipped with the
-    * (shard, (gate index, docId)) ids shuffled to it. */
+  /** A gated shard task: its (shard, file refs) zipped with the (shard,
+    * (gate index, docId)) ids shuffled to it. */
   def gatedWalk[R](terms: Seq[String], positions: Boolean,
                    conf: Broadcast[SerializableConfiguration], walk: Walk[R])
-      : (Iterator[(Int, Seq[PostingReader.FilePages])], Iterator[(Int, (Int, Long))])
-        => Iterator[R] = { (selected, allowed) =>
+      : (Iterator[(Int, Seq[PostingReader.FileRef])], Iterator[(Int, (Int, Long))])
+        => Iterator[R] = { (shardFiles, allowed) =>
     val gates = QueryEngine.sortGates(allowed.map(_._2).toArray)
-    selected.flatMap { case (s, pages) =>
-      walkRows(read(terms, positions, conf, s, pages), gates, walk)
+    shardFiles.flatMap { case (s, files) =>
+      walkRows(read(terms, positions, conf, s, files), gates, walk)
     }
   }
 
@@ -400,8 +402,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
     PostingRow.LiteCols.map(col): _*)
   lazy val docmeta: DataFrame = spark.read.parquet(docmetaPaths: _*)
   @transient private lazy val hadoopConf = spark.sessionState.newHadoopConf()
-  /** The snapshot's postings files, footers held open: every posting
-    * read of the query path (opened by the first query). */
+  /** The snapshot's postings files (listed by the first query): every
+    * posting read of the query path, through the JVM's postings store. */
   @transient private lazy val postingReader = new PostingReader(postingPaths, hadoopConf)
   /** The Hadoop conf the distributed path's shard tasks open files with,
     * shipped once per engine. */
@@ -538,10 +540,11 @@ final class QueryEngine(spark: SparkSession, val root: String,
     * Spark job: each shard reads and walks as its own task on the shard
     * pool (one thread per processor), and the outputs concatenate in
     * shard order. Over it, the walk is one job (run by its caller) of one
-    * task per shard, shipped the pages the driver's reader selected in
-    * the shard's files (so a pinned engine keeps its snapshot); the tasks'
-    * functions are [[ShardJobs]]', so the job's closure cleaning parses
-    * only that small class. Gates are docmeta predicates, pushed down. A
+    * task per shard, shipped the refs of the snapshot's files that may hold
+    * the shard (so a pinned engine keeps its snapshot), which it reads
+    * through its JVM's postings store; the tasks' functions are
+    * [[ShardJobs]]', so the job's closure cleaning parses only that small
+    * class. Gates are docmeta predicates, pushed down. A
     * small gated walk collects at most limit+1 allowed ids in one job
     * (within the limit the array IS every allowed id); over it, the ids
     * are shuffled to their shard's task, never to the driver. */
@@ -555,13 +558,13 @@ final class QueryEngine(spark: SparkSession, val root: String,
         ShardJobs.walkRows(reader.rows(terms, positions, Some(s)), gatesOf(s), walk).toVector
       }).flatten)
     // one partition per walked shard, in shard order (partition id ==
-    // shard when every shard walks), holding the shard's page selection
-    def selections: RDD[(Int, Seq[PostingReader.FilePages])] =
-      spark.sparkContext.parallelize(ids.map(s => s -> reader.select(terms, Some(s))), ids.size)
+    // shard when every shard walks), holding the shard's file refs
+    def shardFiles: RDD[(Int, Seq[PostingReader.FileRef])] =
+      spark.sparkContext.parallelize(ids.map(s => s -> reader.filesOf(s)), ids.size)
     val small = volume <= driverPathMaxPostings
     if (gates.isEmpty) {
       if (small) onDriver(_ => Map.empty)
-      else Right(selections.flatMap(ShardJobs.walkShard(terms, positions, taskConf, walk)))
+      else Right(shardFiles.flatMap(ShardJobs.walkShard(terms, positions, taskConf, walk)))
     } else {
       val allowed = gates.zipWithIndex.map { case (g, i) =>
         docmeta.where(g)
@@ -578,7 +581,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
           // HashPartitioner is the identity on shard ids 0 until numShards
           val allowedByShard = allowed.rdd.map(ShardJobs.keyByShard)
             .partitionBy(new HashPartitioner(manifest.numShards))
-          Right(selections.zipPartitions(allowedByShard)(
+          Right(shardFiles.zipPartitions(allowedByShard)(
             ShardJobs.gatedWalk(terms, positions, taskConf, walk)))
       }
     }

@@ -354,6 +354,8 @@ object WandScorer {
     live ++= sortedLive
     val ordered: Array[PostingCursor] =
       queryOrder.flatMap(cursorsByTerm.get).toArray // frozen sum order
+    // the essential cursors in curDoc order, rebuilt in place per pivot
+    val sorted = new Array[PostingCursor](live.length)
 
     while (live.nonEmpty) {
       // minimum_should_match-aware exit: fewer live DISTINCT-term cursors
@@ -383,16 +385,26 @@ object WandScorer {
         // the technique exists for) — measured free at 2M when inactive.
         if (nonEssUb >= 0.1 * theta) { split = 0; nonEssUb = 0.0 }
       }
-      val nonEss = byMax.take(split)
-      val ess = byMax.drop(split)
-      if (ess.isEmpty) return top.result() // nothing can make the heap
+      // byMax(0 until split) are the non-essential cursors, the rest
+      // essential
+      val nEss = byMax.length - split
+      if (nEss == 0) return top.result() // nothing can make the heap
       // WAND pivot among ESSENTIAL cursors only; every doc's potential
-      // non-essential contribution is bounded by nonEssUb.
-      val sorted = ess.sortBy(_.curDoc)
+      // non-essential contribution is bounded by nonEssUb. A stable
+      // insertion sort by curDoc: the order sortBy gave, without its
+      // allocations (a query has few cursors)
+      var e = 0
+      while (e < nEss) {
+        val c = byMax(split + e)
+        var b = e - 1
+        while (b >= 0 && sorted(b).curDoc > c.curDoc) { sorted(b + 1) = sorted(b); b -= 1 }
+        sorted(b + 1) = c
+        e += 1
+      }
       var acc = nonEssUb
       var p = -1
       var i = 0
-      while (i < sorted.length && p < 0) {
+      while (i < nEss && p < 0) {
         acc += sorted(i).maxScore
         // mm-AWARE pivot bound: the candidate sorted(i).curDoc can be
         // matched by at most the i+1 essential cursors at-or-before it
@@ -401,7 +413,7 @@ object WandScorer {
         // leapfrogs like a conjunction (was evaluation-time only; the
         // bound is safe because it only ever OVERCOUNTS possible matches)
         if ((!top.isFull || acc >= theta) &&
-            i + 1 + nonEss.length >= minMatch) p = i
+            i + 1 + split >= minMatch) p = i
         i += 1
       }
       if (p < 0) return top.result() // no doc can make the heap
@@ -409,7 +421,7 @@ object WandScorer {
       // filter gate: a pivot outside the allowed set can never score —
       // hop the aligned prefix straight to the filter's next allowed doc
       var filteredOut = false
-      if (reqArr.nonEmpty && sorted.head.curDoc == pivotDoc) {
+      if (reqArr.nonEmpty && sorted(0).curDoc == pivotDoc) {
         var f = 0
         while (!filteredOut && f < reqArr.length) {
           val rc = reqArr(f)
@@ -426,7 +438,7 @@ object WandScorer {
       }
       if (filteredOut) {
         // fall through to the live-cursor prune at the loop bottom
-      } else if (sorted.head.curDoc == pivotDoc) {
+      } else if (sorted(0).curDoc == pivotDoc) {
         // block-max refinement: bound using current blocks of essential
         // cursors at or before the pivot (plus the non-essential global
         // bound); strictly below a full heap's theta => the pivot doc
@@ -435,7 +447,7 @@ object WandScorer {
         var j = 0
         while (j <= p) { blockUb += sorted(j).blockMaxScore; j += 1 }
         var j2 = p + 1
-        while (j2 < sorted.length && sorted(j2).curDoc == pivotDoc) {
+        while (j2 < nEss && sorted(j2).curDoc == pivotDoc) {
           blockUb += sorted(j2).blockMaxScore; j2 += 1
         }
         if (top.isFull && blockUb < theta) {
@@ -448,7 +460,7 @@ object WandScorer {
           // gate only removes candidates, so WAND bounds stay valid;
           // an mm-aware pivot bound would prune harder, noted not built)
           var ne = 0
-          while (ne < nonEss.length) { nonEss(ne).advanceTo(pivotDoc); ne += 1 }
+          while (ne < split) { byMax(ne).advanceTo(pivotDoc); ne += 1 }
           var s = 0.0
           var matched = 0
           var q = 0
@@ -464,13 +476,13 @@ object WandScorer {
           // cursor left sitting on it could become essential later and
           // re-emit the doc)
           var j3 = 0
-          while (j3 < sorted.length && sorted(j3).curDoc == pivotDoc) {
+          while (j3 < nEss && sorted(j3).curDoc == pivotDoc) {
             sorted(j3).nextDoc(); j3 += 1
           }
           ne = 0
-          while (ne < nonEss.length) {
-            if (!nonEss(ne).exhausted && nonEss(ne).curDoc == pivotDoc)
-              nonEss(ne).nextDoc()
+          while (ne < split) {
+            if (!byMax(ne).exhausted && byMax(ne).curDoc == pivotDoc)
+              byMax(ne).nextDoc()
             ne += 1
           }
         }

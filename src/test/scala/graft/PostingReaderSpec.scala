@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.IOException
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 /** The held-open postings reader against the Spark scan of the same
@@ -21,12 +22,17 @@ import scala.jdk.CollectionConverters._
   *  - for every reference query's term set, plus a term missing from the
   *    dictionary, the reader's rows equal the scan's, byte for byte, in
   *    both projections (a legacy file of one page per column chunk
-  *    included); and the per-shard reads a distributed task makes (the
-  *    pages the reader selected for its shard) add up to the unrestricted
-  *    read, also over a legacy postings dir whose files span shards (as
-  *    written before bounded pages, and in 4-row pages);
-  *  - the reader's counters: a one-term read assembles at most its rows
-  *    plus page slack, and fewer records and pages than an all-term read;
+  *    included); and the per-shard reads a distributed task makes (its
+  *    shard's file refs) add up to the unrestricted read, also over a
+  *    legacy postings dir whose files span shards (as written before
+  *    bounded pages, and in 4-row pages); each read cold (the JVM's
+  *    postings store cleared) and warm (answered from it);
+  *  - the store: a file rewritten at the same path reads its new rows; a
+  *    store within a tiny budget answers alike and keeps nothing; a budget
+  *    of a few terms evicts the least recently used first;
+  *  - the reader's counters: a cold one-term read assembles at most its
+  *    rows plus page slack, and fewer records and pages than an all-term
+  *    read; a repeated read counts every term resident and reads no page;
   *  - page decompression: postings are written SNAPPY whatever the
   *    session's parquet codec; SNAPPY pages decompress without a per-page
   *    codec buffer (allocated bytes per page of a warm read, after a Spark
@@ -85,45 +91,55 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     ReferenceQueries.entries.map { case (_, q, _, kind) =>
       termsOf(eng, q, kind) } :+ Seq("zzqqnotaterm", "def")
 
-  /** Per shard, the read a distributed task makes (the pages `reader`
-    * selects for the shard's terms, read from only the shard's files)
-    * equals `reader`'s own shard read and holds only that shard's rows;
-    * over every shard they add up to the unrestricted read, in both
-    * projections. */
+  /** `body` after clearing the JVM's postings store, unless `warm`. */
+  private def fresh[T](warm: Boolean)(body: => T): T = {
+    if (!warm) PostingReader.store.clear()
+    body
+  }
+
+  /** Per shard, the read a distributed task makes (a reader over the
+    * shard's file refs) equals `reader`'s own shard read and holds only
+    * that shard's rows; over every shard they add up to the unrestricted
+    * read, in both projections. Every read cold, then every read warm. */
   private def checkShardReads(reader: PostingReader, numShards: Int,
                               sets: Seq[Seq[String]]): Unit =
-    for (terms <- sets; positions <- Seq(true, false)) {
+    for (warm <- Seq(false, true); terms <- sets; positions <- Seq(true, false)) {
       val byShard = (0 until numShards).map { s =>
-        val selected = reader.select(terms, Some(s))
-        assert(selected.map(_.path).toSet.subsetOf(reader.filesOf(s).toSet))
-        val task = PostingReader.readPages(selected, terms, positions, Some(s), conf)
+        val task = fresh(warm)(
+          new PostingReader(conf, reader.filesOf(s)).rows(terms, positions, Some(s)))
         assert(task.forall(_.shard == s))
-        assert(sorted(task) == sorted(reader.rows(terms, positions, shard = Some(s))),
-          s"shard $s: task read differs for $terms")
+        assert(sorted(task) == sorted(fresh(warm)(reader.rows(terms, positions, Some(s)))),
+          s"shard $s: task read differs for $terms (warm=$warm)")
         task
       }
-      assert(sorted(byShard.flatten) == sorted(reader.rows(terms, positions)),
-        s"shard reads (positions=$positions) do not add up for $terms")
+      assert(sorted(byShard.flatten) == sorted(fresh(warm)(reader.rows(terms, positions))),
+        s"shard reads (positions=$positions, warm=$warm) do not add up for $terms")
     }
 
+  /** The Spark scan's rows of `terms` in `dirs`, in the projection a
+    * reader read with `positions` returns. */
+  private def scanRows(dirs: Seq[String], terms: Seq[String],
+                       positions: Boolean): Seq[PostingRowPos] = {
+    val scan = spark.read.parquet(dirs: _*).where(col("term").isin(terms: _*))
+    if (positions) scan.as[PostingRowPos].collect().toSeq
+    else scan.select(PostingRow.LiteCols.map(col): _*).as[PostingRow].collect().toSeq
+      .map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes, r.blocks, r.skips, Nil))
+  }
+
   /** `reader`'s rows of every term set equal the Spark scan's of `dirs`,
-    * byte for byte, in both projections. */
+    * byte for byte, in both projections: every read cold, then every read
+    * warm, each projection read first and second (so a warm scoring read
+    * is also answered from positional rows). */
   private def checkScan(reader: PostingReader, dirs: Seq[String],
                         sets: Seq[Seq[String]]): Unit = {
-    val scan = spark.read.parquet(dirs: _*)
-    sets.foreach { terms =>
-      val full = scan.where(col("term").isin(terms: _*))
-        .as[PostingRowPos].collect().toSeq
-      val lite = scan.select(PostingRow.LiteCols.map(col): _*)
-        .where(col("term").isin(terms: _*)).as[PostingRow]
-        .collect().toSeq.map(r => PostingRowPos(r.shard, r.term, r.df, r.bytes,
-          r.blocks, r.skips, Nil))
-      assert(full.nonEmpty)
-      assert(sorted(reader.rows(terms, positions = true)) == sorted(full),
-        s"positional rows differ for $terms")
-      assert(sorted(reader.rows(terms, positions = false)) == sorted(lite),
-        s"scoring-projection rows differ for $terms")
-    }
+    val expected = sets.map(terms => terms -> Seq(true, false).map(p =>
+      p -> scanRows(dirs, terms, p)).toMap)
+    expected.foreach { case (_, byPos) => assert(byPos(true).nonEmpty) }
+    for (warm <- Seq(false, true); posFirst <- Seq(true, false); (terms, byPos) <- expected)
+      Seq(posFirst, !posFirst).foreach { positions =>
+        assert(sorted(fresh(warm)(reader.rows(terms, positions))) == sorted(byPos(positions)),
+          s"rows (positions=$positions, warm=$warm) differ for $terms")
+      }
   }
 
   /** The codecs of every column chunk of the data files under `dir`. */
@@ -182,28 +198,46 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
       }
     }
 
-  /** The reader's counters against the rows it returns: a one-term read
-    * assembles at most the term's rows plus page slack, and strictly
-    * fewer records and pages than an all-term read; read + skipped add up
-    * to the same totals; a positional one-term read decompresses strictly
-    * fewer `posBlocks` pages than the files hold. */
+  /** The reader's counters against the rows it returns, on cold reads: a
+    * one-term read assembles at most the term's rows plus page slack, and
+    * strictly fewer records and pages than an all-term read; read +
+    * skipped add up to the same totals; a positional one-term read
+    * decompresses strictly fewer `posBlocks` pages than the files hold.
+    * A repeated read counts every term resident and reads nothing; a
+    * positional read after a scoring one reads its pages, and a scoring
+    * read after it is answered from its rows. */
   private def checkCounters(eng: QueryEngine): Unit = {
     val dirs = eng.manifest.segments.map(s => s"$root/${s.name}/postings")
     val reader = new PostingReader(dirs, conf)
     val nFiles = dirs.map(PostingReader.dataFiles(_, conf).size).sum
     val all = eng.dict.select("term").as[String].collect().toSeq
-    val allRead = reader.read(all, positions = false)
+    def cold(terms: Seq[String], positions: Boolean) =
+      fresh(warm = false)(reader.read(terms, positions))
+    val allRead = cold(all, positions = false)
     assert(allRead.recordsSkipped == 0)
+    assert(allRead.termsRead == all.size && allRead.termsResident == 0)
+    val again = reader.read(all, positions = false)
+    assert(again.termsResident == all.size && again.termsRead == 0)
+    assert(again.pagesRead == 0 && again.pagesSkipped == 0 && again.recordsRead == 0 &&
+      again.recordsSkipped == 0)
+    assert(sorted(again.rows) == sorted(allRead.rows))
     for (term <- Seq("def", "return", all.min, all.max)) {
-      val one = reader.read(Seq(term), positions = false)
+      val one = cold(Seq(term), positions = false)
+      assert(one.termsRead == 1 && one.termsResident == 0)
       assert(one.rows.nonEmpty)
       assert(one.recordsRead <= one.rows.size + 2L * IndexBuilder.PostingsPageRows * nFiles,
         s"'$term': ${one.recordsRead} records assembled for ${one.rows.size} rows")
       assert(one.recordsRead < allRead.recordsRead && one.pagesRead < allRead.pagesRead)
       assert(one.recordsRead + one.recordsSkipped == allRead.recordsRead)
       assert(one.pagesRead + one.pagesSkipped == allRead.pagesRead + allRead.pagesSkipped)
+      // a scoring entry never serves a positional read
+      val afterScoring = reader.read(Seq(term), positions = true)
+      assert(afterScoring.termsRead == 1 && afterScoring.pagesRead > one.pagesRead)
+      val scoring = reader.read(Seq(term), positions = false)
+      assert(scoring.termsResident == 1 && scoring.pagesRead == 0)
+      assert(sorted(scoring.rows) == sorted(one.rows))
       // posBlocks is the one column the positional projection adds
-      val pos = reader.read(Seq(term), positions = true)
+      val pos = cold(Seq(term), positions = true)
       assert(pos.rows.map(r => (r.shard, r.term)) == one.rows.map(r => (r.shard, r.term)))
       val posRead = pos.pagesRead - one.pagesRead
       val posHeld = posRead + pos.pagesSkipped - one.pagesSkipped
@@ -391,8 +425,11 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
       assert(read.rows.nonEmpty && read.pagesRead > 0)
       bytes / read.pagesRead
     }
-    (0 until 20).foreach(_ => bytesPerPage())
-    val perPage = (0 until 5).map(_ => bytesPerPage()).min
+    // cold reads: the store forgets the rows the last one kept (the files
+    // stay held, as the reader held them open before it kept rows)
+    def coldBytesPerPage() = { PostingReader.store.clear(files = false); bytesPerPage() }
+    (0 until 20).foreach(_ => coldBytesPerPage())
+    val perPage = (0 until 5).map(_ => coldBytesPerPage()).min
     // measured on this index: ~150 KB per page through parquet-mr's codec
     // (a 64 KB buffer per page and per dictionary page), ~28 KB without
     assert(perPage < 64 * 1024, s"a one-term read allocated $perPage bytes per page")
@@ -507,5 +544,83 @@ class PostingReaderSpec extends AnyFunSuite with SparkSessionFixture {
     val got = scala.concurrent.Await.result(nested, scala.concurrent.duration.Duration(120, "s"))
     assert(got.forall { case (thread, hits) =>
       thread.startsWith("graft-shard-") && hits == eng.topK(q, k) })
+  }
+
+  /** `rows` written as one sorted parquet file under `dir`: its path. */
+  private def oneFile(dir: String, rows: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
+    rows.coalesce(1).sortWithinPartitions("term", "shard").write.parquet(dir)
+    val Seq(st) = PostingReader.dataFiles(dir, conf)
+    Paths.get(st.getPath.toUri)
+  }
+
+  test("a postings file rewritten at the same path reads its new rows") {
+    val eng = new QueryEngine(spark, posRoot)
+    val terms = Seq("def", "return", "posting")
+    val (dir, otherDir) = (s"$work/rewritten", s"$work/rewritten-other")
+    val file = oneFile(dir, eng.postingsFull)
+    val other = oneFile(otherDir, eng.postingsFull.where(col("shard") =!= 0))
+    val before = new PostingReader(Seq(dir), conf)
+    Seq(true, false).foreach { p =>
+      assert(sorted(before.rows(terms, p)) == sorted(scanRows(Seq(dir), terms, p)))
+    }
+    assert(before.read(terms, positions = true).termsResident == terms.size)
+    // rewritten in place: other rows, their checksum, a later mtime
+    val mtime = Files.getLastModifiedTime(file).toMillis
+    def crc(f: java.nio.file.Path) = f.resolveSibling(s".${f.getFileName}.crc")
+    Files.copy(other, file, StandardCopyOption.REPLACE_EXISTING)
+    if (Files.exists(crc(other))) Files.copy(crc(other), crc(file), StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(file, FileTime.fromMillis(mtime + 2000))
+    val after = new PostingReader(Seq(dir), conf)
+    assert(after.files.map(_.path) == before.files.map(_.path) && after.files != before.files)
+    val got = after.read(terms, positions = true)
+    assert(got.termsRead == terms.size)
+    assert(got.rows.nonEmpty && got.rows.forall(_.shard != 0))
+    Seq(true, false).foreach { p =>
+      assert(sorted(after.rows(terms, p)) == sorted(scanRows(Seq(otherDir), terms, p)))
+    }
+    // the old listing never reads the new file through the old footer
+    val unread = eng.dict.select("term").as[String].collect().filterNot(terms.contains).max
+    val e = intercept[IOException](before.rows(Seq(unread), positions = true))
+    assert(e.getMessage.contains("changed since it was listed"), e.getMessage)
+  }
+
+  test("a store keeps nothing within a tiny budget and evicts the least recently used first") {
+    val eng = new QueryEngine(spark, posRoot)
+    val dirs = eng.manifest.segments.map(s => s"$posRoot/${s.name}/postings")
+    val reader = new PostingReader(dirs, conf)
+    val tiny = new PostingReader.Store(1)
+    for (terms <- termSets(eng); positions <- Seq(true, false)) {
+      val expected = scanRows(dirs, terms, positions)
+      assert(sorted(tiny.read(reader.files, terms, positions, None, conf).rows) == sorted(expected))
+      assert(sorted(tiny.read(reader.files, terms, positions, Some(1), conf).rows) ==
+        sorted(expected.filter(_.shard == 1)))
+    }
+    assert(tiny.bytesHeld == 0)
+    // one file; each entry's weight from a store that keeps everything
+    val one = s"$work/lru"
+    oneFile(one, eng.postingsFull)
+    val file = new PostingReader(Seq(one), conf).files
+    val big = new PostingReader.Store(1L << 40)
+    big.holds(file.head, 0, conf) // holds the file's footer and page index
+    val heldFile = big.bytesHeld
+    assert(heldFile > 0)
+    val terms = eng.dict.orderBy(col("df").desc, col("term")).select("term").as[String]
+      .take(4).toSeq
+    val weight = terms.map { t =>
+      val b = big.bytesHeld
+      assert(big.read(file, Seq(t), positions = false, None, conf).rows.nonEmpty, t)
+      t -> (big.bytesHeld - b)
+    }.toMap
+    val heaviest = terms.maxBy(weight)
+    val Seq(a, c, d) = terms.filterNot(_ == heaviest)
+    // room for the file and three terms, the heaviest among them
+    val lru = new PostingReader.Store(heldFile + weight(a) + weight(heaviest) + weight(c))
+    def readOne(t: String) = lru.read(file, Seq(t), positions = false, None, conf)
+    Seq(a, heaviest, c).foreach(t => assert(readOne(t).termsRead == 1, t))
+    assert(lru.bytesHeld == heldFile + weight(a) + weight(heaviest) + weight(c))
+    assert(readOne(a).termsResident == 1)
+    assert(readOne(d).termsRead == 1) // evicts `heaviest`, the least recently used
+    Seq(a, c, d).foreach(t => assert(readOne(t).termsResident == 1, s"$t was evicted"))
+    assert(readOne(heaviest).termsRead == 1, s"$heaviest was kept")
   }
 }
